@@ -5,29 +5,30 @@ import org.apache.spark.sql.functions._
 
 /** A [[VersionedKeyedTable]]'s commit log as a SUBSCRIBABLE CHANGE
   * FEED — the micro-batch discipline [[IncrementalView]] pioneered,
-  * extracted so ANY downstream consumer can ride it: walk the base's
-  * committed versions in lineage order, hand each span's CDF to the
-  * consumer, and let the consumer stamp the version it applied
-  * ATOMICALLY with its own effect (the stamp IS the watermark — a
-  * crashed consumer resumes exactly at its last durable span, applies
-  * the interrupted one again, and never double-applies a committed
-  * one). This is the event-log face of the store: the base table is
-  * the topic, committed versions are offsets, and `changesBetween`
-  * is the fetch.
+  * extracted so ANY downstream consumer can ride it: a catch-up hands
+  * the consumer the NET change of the whole span (watermark, latest]
+  * as one CDF, and the consumer stamps `latest` ATOMICALLY with its
+  * own effect (the stamp IS the watermark — a crashed consumer
+  * resumes exactly at its last durable stamp, applies the interrupted
+  * span again, and never double-applies a committed one). This is the
+  * event-log face of the store: the base table is the topic,
+  * committed versions are offsets, and `changesBetween` is the fetch.
   *
   * Built-in consumer: [[syncReplica]] — a filtered/projected replica
-  * table kept in sync by ONE three-clause merge per span (inserts and
-  * updates upsert, deletes delete, rows crossing the replica's filter
-  * enter and leave), with the stamp riding the merge's own commit
-  * metadata. The downstream-sync shape every derived store needs
-  * (a serving copy, a region mirror, a compliance-scoped subset).
+  * table kept in sync by ONE three-clause merge per catch-up (inserts
+  * and updates upsert, deletes delete, rows crossing the replica's
+  * filter enter and leave), with the stamp riding the merge's own
+  * commit metadata. The downstream-sync shape every derived store
+  * needs (a serving copy, a region mirror, a compliance-scoped
+  * subset).
   *
   * Scale: a consumer pays O(its span's changed rows) per catch-up —
-  * never a base re-scan — and the walk parses only the span's
-  * manifests via the base-pointer chain. (Reference analogue: the
-  * reference had no incremental surface at all — a changed input
-  * meant a full re-run of the MapReduce; the CDF walk is what
-  * replaces those re-runs at 100 TB.)
+  * never a base re-scan — and one CDF read plus one commit however
+  * many base versions it missed: `changesBetween` collapses the span
+  * per key, so a far-behind consumer's plan stays the same size.
+  * (Reference analogue: the reference had no incremental surface at
+  * all — a changed input meant a full re-run of the MapReduce; the
+  * CDF catch-up is what replaces those re-runs at 100 TB.)
   */
 object ChangeFeed {
 
@@ -35,39 +36,20 @@ object ChangeFeed {
     * sync commit applied. */
   val AppliedBaseKey = "cdc.appliedBase"
 
-  /** Walk every committed base version after `fromVersion` in
-    * lineage order, invoking `applySpan(prev, version)` per commit;
-    * returns the base's latest version. The lineage chain parses
-    * exactly the span's manifests and excludes out-of-lineage commits
-    * (a skipped weak-scheme claim completing late can never inject
-    * its delta); a legacy pre-base-pointer log falls back to every
-    * complete version in order. */
+  /** Catch a consumer up from `fromVersion`: resolve the base's
+    * latest version and, when it is ahead, invoke `applySpan(from,
+    * latest)` ONCE for the whole span; returns the latest version.
+    * The span's net change is what `changesBetween` yields — the
+    * first change's `_prev` and the last change's new value per key,
+    * over the lineage chain (an out-of-lineage commit never injects
+    * its delta) or, without a chain, a snapshot diff. A watermark
+    * whose manifest was vacuumed fails loudly in `changesBetween`
+    * ("no complete version"), never by skipping changes. */
   def walkSpans(spark: SparkSession, baseDir: String,
       fromVersion: Long)(applySpan: (Long, Long) => Unit): Long = {
     val latest = VersionedKeyedTable.snapshot(spark, baseDir).version
-    if (latest <= fromVersion) latest
-    else VersionedKeyedTable.lineageSpan(
-        spark, baseDir, fromVersion, latest) match {
-      case Some(snaps) =>
-        var prev = fromVersion
-        snaps.foreach { s =>
-          applySpan(prev, s.version)
-          prev = s.version
-        }
-        latest
-      case None =>
-        // legacy/pre-base-pointer log: walk every complete version
-        val versions = VersionedKeyedTable
-          .completeVersions(spark, baseDir).dropWhile(_ < fromVersion)
-        require(versions.headOption.contains(fromVersion),
-          s"consumer watermark $fromVersion is not a complete version " +
-            s"of $baseDir (vacuumed past the watermark?)")
-        versions.sliding(2).foreach {
-          case Seq(a, b) => applySpan(a, b)
-          case _ => ()
-        }
-        versions.last
-    }
+    if (latest > fromVersion) applySpan(fromVersion, latest)
+    latest
   }
 
   /** The base version a consumer table DURABLY reflects: the most
@@ -97,11 +79,12 @@ object ChangeFeed {
     * row's CURRENT values — an update crossing the predicate enters
     * or leaves the replica accordingly). First call materializes the
     * filtered snapshot and stamps its version; later calls consume
-    * only the new spans' CDFs, each applied as ONE merge commit whose
-    * metadata stamp makes the sync exactly-once across crashes — a
-    * re-invocation after a mid-walk crash resumes at the stamp, and a
-    * replayed span's merge re-applies puts idempotently. Returns the
-    * base version the replica now reflects. */
+    * the net CDF of everything committed since the stamp, applied as
+    * ONE merge commit whose metadata stamp makes the sync exactly-once
+    * across crashes — a re-invocation after a crashed catch-up resumes
+    * at the stamp, and a replayed span's merge re-applies puts
+    * idempotently. Returns the base version the replica now
+    * reflects. */
   def syncReplica(spark: SparkSession, baseDir: String,
       replicaDir: String, keyCol: String,
       rowFilter: Column = lit(true),

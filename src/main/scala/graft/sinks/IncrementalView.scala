@@ -62,7 +62,7 @@ object IncrementalView {
     * a refresh that died before its merge commit left no stamp (the
     * span re-applies, correctly), one that died after left the stamp
     * (the span is skipped). Empty-delta spans commit nothing and
-    * re-walk harmlessly (their CDF is empty by definition). */
+    * re-apply harmlessly (their CDF is empty by definition). */
   def committedWatermark(spark: SparkSession, viewDir: String): Long =
     committedWatermarkOpt(spark, viewDir).getOrElse(
       throw new IllegalStateException(
@@ -111,23 +111,26 @@ object IncrementalView {
     * NON-IDEMPOTENT delta onto the winner's already-refreshed state —
     * double counts. A second maintainer fails LOUDLY instead; a lock
     * older than `staleLockMs` (a crashed maintainer — refreshes are
-    * minutes, not hours) is stolen with a log line. Reentrant within
-    * a thread so refreshToLatest's span walk acquires once. */
+    * minutes, not hours) is stolen with a log line. The lock file is
+    * created through [[KeyedTable.tryCreateMarker]] (an atomic
+    * CREATE_NEW on `file://`, where Hadoop's `createNewFile` is
+    * exists-then-create and two maintainers could both win).
+    * Reentrant within a thread so refreshToLatest acquires once. */
   private val lockHeld = new ThreadLocal[java.lang.Boolean] {
     override def initialValue(): java.lang.Boolean = false
   }
   private val staleLockMs = 600000L
 
-  private def withMaintainerLock[T](spark: SparkSession,
+  private[sinks] def withMaintainerLock[T](spark: SparkSession,
       viewDir: String)(body: => T): T =
     if (lockHeld.get) body
     else {
       val fs = new org.apache.hadoop.fs.Path(viewDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val lock = new org.apache.hadoop.fs.Path(viewDir, "_maintainer.lock")
-      def acquire(): Boolean =
-        try fs.createNewFile(lock)
-        catch { case _: java.io.IOException => false }
+      def acquire(): Boolean = KeyedTable.tryCreateMarker(fs, lock,
+        s"pid=${ProcessHandle.current().pid()} " +
+          s"acquired=${System.currentTimeMillis()}")
       var got = acquire()
       if (!got && fs.exists(lock) && System.currentTimeMillis() -
           fs.getFileStatus(lock).getModificationTime > staleLockMs) {
@@ -205,10 +208,12 @@ object IncrementalView {
     refreshToLatest(spark, baseDir, viewDir, baseKey, groupCol,
       valueCol, committedWatermark(spark, viewDir))
 
-  /** Refresh through every version between the watermark and the
-    * base's latest, one span per committed version (the event-log
-    * discipline a streaming consumer follows); returns the new
-    * watermark. */
+  /** Refresh through everything the base committed between the
+    * watermark and its latest version as ONE span (watermark, latest]:
+    * one CDF read, one delta aggregate and one merge commit stamped
+    * with `latest`, however many base versions the span holds — the
+    * count/sum delta rule is linear and the CDF already nets each key
+    * over the span. Returns the new watermark. */
   def refreshToLatest(spark: SparkSession, baseDir: String,
       viewDir: String, baseKey: String, groupCol: String,
       valueCol: String, fromVersion: Long): Long
@@ -409,8 +414,9 @@ object IncrementalView {
     refreshToLatestFull(spark, baseDir, viewDir, baseKey, groupCol,
       valueCol, committedWatermark(spark, viewDir))
 
-  /** [[refreshToLatest]] for the full view: one [[refreshFull]] per
-    * committed base version along the lineage chain. */
+  /** [[refreshToLatest]] for the full view: ONE [[refreshFull]] over
+    * (watermark, latest] — broken envelopes re-derive at `latest`, so
+    * a span holding many base versions is exact in one commit. */
   def refreshToLatestFull(spark: SparkSession, baseDir: String,
       viewDir: String, baseKey: String, groupCol: String,
       valueCol: String, fromVersion: Long): Long
@@ -609,9 +615,8 @@ object IncrementalView {
     refreshToLatestFullMulti(spark, baseDir, viewDir, baseKey, groupCol,
       valueCols, committedWatermark(spark, viewDir))
 
-  /** [[refreshToLatestFull]] for N value columns: one
-    * [[refreshFullMulti]] per committed base version along the
-    * lineage chain. */
+  /** [[refreshToLatestFull]] for N value columns: ONE
+    * [[refreshFullMulti]] over (watermark, latest]. */
   def refreshToLatestFullMulti(spark: SparkSession, baseDir: String,
       viewDir: String, baseKey: String, groupCol: String,
       valueCols: Seq[String], fromVersion: Long): Long

@@ -67,8 +67,10 @@ object KeyedTable {
     * open(O_CREAT|O_EXCL) syscall that also writes the payload. Object
     * stores without atomic create keep the weaker HDFS-path guarantee
     * (documented: the lock is best-effort there; a table format is the
-    * real answer for multi-writer isolation). */
-  private def tryCreateMarker(fs: org.apache.hadoop.fs.FileSystem,
+    * real answer for multi-writer isolation). Shared by every lock
+    * marker in the package (this store's write lock, the
+    * [[IncrementalView]] maintainer lock). */
+  private[sinks] def tryCreateMarker(fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path, payload: String): Boolean =
     if (fs.getUri.getScheme == "file") {
       try {

@@ -2561,14 +2561,16 @@ object VersionedKeyedTable {
     // deltas, not state
     if (chain.isDefined && span.nonEmpty &&
         span.forall(_.changes.isDefined)) {
-      // fast path: union the span's captured change files, collapse
-      // per key to (first change's prev, last change's new). Every
-      // version's files are read under the forced TO-snapshot CDF
-      // schema via a PreListedFileIndex (guide §6: no
-      // InMemoryFileIndex build / listing per version — the manifest
-      // already names the files), and a pre-evolution change file
-      // reads its missing columns as typed nulls directly from the
-      // forced schema, replacing the old per-column backfill.
+      // fast path: scan the span's captured change files, collapse
+      // per key to (first change's prev, last change's new). ALL the
+      // span's files are read by ONE scan under the forced TO-snapshot
+      // CDF schema via a PreListedFileIndex (guide §6: no
+      // InMemoryFileIndex build / listing — the manifests already
+      // name the files), so a far-behind consumer's plan is the same
+      // size whatever its backlog; each row's version `_v` comes from
+      // its file's path through the span's file → version map. A
+      // pre-evolution change file reads its missing columns as typed
+      // nulls directly from the forced schema.
       val cdfSchema = org.apache.spark.sql.types.StructType(
         org.apache.spark.sql.types.StructField(keyCol,
           schema(keyCol).dataType) +:
@@ -2577,16 +2579,24 @@ object VersionedKeyedTable {
         (dataCols.map(c => schema(c).copy(name = c, nullable = true)) ++
           dataCols.map(c => schema(c).copy(name = c + "_prev",
             nullable = true))))
-      val parts = span.flatMap { s =>
-        val fls = s.changes.get
-        if (fls.isEmpty) None
-        else Some(scanFiles(spark, dir, cdfSchema, fls)
-          .withColumn("_v", lit(s.version)))
-      }
-      if (parts.isEmpty)
+      val fileVersions = span.flatMap(s => s.changes.get.map(_ -> s.version))
+      if (fileVersions.isEmpty)
         return spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cdfSchema)
-      val all = parts.reduce(_ unionByName _)
+      // keyed by the file's last two path components
+      // (`ch-<uuid>/<part>`, unique per commit and free of characters
+      // a URI would escape), so the key is the same however the scan
+      // qualifies the path; an unmapped file fails the read loudly
+      // rather than dropping its rows from the min_by/max_by collapse
+      def tail2(p: String) = p.split('/').takeRight(2).mkString("/")
+      val versionOf = typedLit(
+        fileVersions.map { case (f, v) => tail2(f) -> v }.toMap)
+      val path = col("_metadata.file_path")
+      val fileV = element_at(versionOf, substring_index(path, "/", -2))
+      val all = scanFiles(spark, dir, cdfSchema, fileVersions.map(_._1))
+        .withColumn("_v", when(fileV.isNull, raise_error(concat(
+          lit("changesBetween: change file outside the span: "), path)))
+          .otherwise(fileV))
       val firstS = min_by(struct(col("change_type") +:
         dataCols.map(c => col(s"${c}_prev")): _*), col("_v"))
       val lastS = max_by(struct(col("change_type") +:

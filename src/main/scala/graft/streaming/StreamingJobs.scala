@@ -1009,11 +1009,12 @@ object StreamingJobs {
     * change-data-feed (IncrementalView.refreshToLatest). The view
     * therefore tracks the base with O(micro-batch) work per trigger,
     * and the final view is BATCH-SPLIT-INVARIANT: however the ingest
-    * is carved into micro-batches, every committed version's delta is
-    * applied exactly once in order, so the oracle is the plain
-    * aggregate over the full relation. Retry safety comes from the
-    * store itself: a replayed micro-batch re-upserts identical puts,
-    * producing a version whose CDF is EMPTY — the refresh no-ops
+    * is carved into micro-batches, each refresh applies the net delta
+    * of everything committed since the view's watermark exactly once,
+    * so the oracle is the plain aggregate over the full relation.
+    * Retry safety comes from the store itself: a replayed micro-batch
+    * re-upserts identical puts, producing a version whose CDF is
+    * EMPTY — the refresh no-ops
     * (cheaper and stronger than a batch-id output guard: idempotence
     * holds at the STATE layer, not just at the sink). */
   /** `failAt`: fault-injection seam — the named micro-batch throws

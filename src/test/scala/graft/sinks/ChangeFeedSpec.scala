@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import graft.TestSpark
 
-/** The subscribable change feed: span walking in lineage order, the
-  * durable stamp discipline, and the replica consumer under every
+/** The subscribable change feed: one-span catch-ups, the durable
+  * stamp discipline, and the replica consumer under every
   * membership transition a filtered copy can see. */
 class ChangeFeedSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -62,7 +62,7 @@ class ChangeFeedSpec extends AnyFunSuite {
     VersionedKeyedTable.delete(spark, base, Seq(2L).toDF("k"), "k")
     VersionedKeyedTable.upsert(spark, base,
       Seq((3L, 333L)).toDF("k", "v"), "k")
-    // restart: catch-up from the stamp, one span per commit
+    // restart: catch-up from the stamp, one span for all three commits
     ChangeFeed.syncReplica(spark, base, repl, "k", numBuckets = 2)
     assert(rowsOf(repl) === rowsOf(base))
     assert(ChangeFeed.stampedWatermark(spark, repl) ===
@@ -94,5 +94,64 @@ class ChangeFeedSpec extends AnyFunSuite {
         carryCols = Set("v"))
     }
     assert(e.getMessage.contains("collides"))
+  }
+
+  test("syncReplica: a catch-up over three base commits adds exactly " +
+      "one replica commit, stamped with the base's latest version") {
+    val base = fresh("obase"); val repl = fresh("orepl")
+    VersionedKeyedTable.create(
+      (1L to 10L).map(i => (i, i)).toDF("k", "v"), base, "k",
+      numBuckets = 2)
+    ChangeFeed.syncReplica(spark, base, repl, "k", numBuckets = 2)
+    VersionedKeyedTable.upsert(spark, base,
+      Seq((1L, 100L), (11L, 11L)).toDF("k", "v"), "k")
+    VersionedKeyedTable.delete(spark, base, Seq(2L, 11L).toDF("k"), "k")
+    VersionedKeyedTable.upsert(spark, base,
+      Seq((3L, 300L)).toDF("k", "v"), "k")
+    val n0 = VersionedKeyedTable.completeVersions(spark, repl).size
+    val latest = VersionedKeyedTable.snapshot(spark, base).version
+    assert(ChangeFeed.syncReplica(spark, base, repl, "k",
+      numBuckets = 2) === latest)
+    assert(VersionedKeyedTable.completeVersions(spark, repl).size
+      === n0 + 1)
+    assert(VersionedKeyedTable.snapshot(spark, repl)
+      .meta.get(ChangeFeed.AppliedBaseKey) === Some(latest.toString))
+    assert(rowsOf(repl) === rowsOf(base))
+  }
+
+  test("changesBetween plans ONE change-file scan however many " +
+      "versions the span holds") {
+    val dir = fresh("plan")
+    VersionedKeyedTable.create(
+      (1L to 4L).map(i => (i, i)).toDF("k", "v"), dir, "k",
+      numBuckets = 2)
+    // 12 commits: commit c inserts key c + 4 and rewrites key 1;
+    // commit 6 instead deletes key 2 and key 5 (inserted by commit 1,
+    // so it nets away inside the span)
+    (1L to 12L).foreach { c =>
+      if (c == 6L)
+        VersionedKeyedTable.delete(spark, dir, Seq(2L, 5L).toDF("k"), "k")
+      else VersionedKeyedTable.upsert(spark, dir,
+        Seq((1L, 1000L + c), (c + 4L, c)).toDF("k", "v"), "k")
+    }
+    def scans(from: Long, to: Long): Int = {
+      val leaves = VersionedKeyedTable.changesBetween(spark, dir, "k",
+        from, to).queryExecution.optimizedPlan.collectLeaves()
+      assert(leaves.forall(_.isInstanceOf[
+        org.apache.spark.sql.execution.datasources.LogicalRelation]))
+      leaves.size
+    }
+    assert(scans(1L, 13L) === 1, "a 12-version span plans one scan")
+    assert(scans(12L, 13L) === 1)
+    val cdf = VersionedKeyedTable.changesBetween(spark, dir, "k", 1L, 13L)
+      .select("k", "change_type", "v", "v_prev")
+      .as[(Long, String, Option[Long], Option[Long])].collect()
+      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    assert(cdf(1L) === (("update", Some(1012L), Some(1L))),
+      "first change's prev, last change's new")
+    assert(cdf(2L) === (("delete", None, Some(2L))))
+    assert(!cdf.contains(5L), "inserted then deleted: no net change")
+    assert(cdf(16L) === (("insert", Some(12L), None)))
+    assert(cdf.size === 1 + 1 + 10)
   }
 }

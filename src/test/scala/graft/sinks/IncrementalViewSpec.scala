@@ -355,4 +355,145 @@ class IncrementalViewSpec extends AnyFunSuite {
     assert(VersionedKeyedTable.completeVersions(spark, viewDir).size
       === nv)
   }
+
+  /** The view's commit count and its latest commit's stamp. */
+  private def viewCommits(viewDir: String): (Int, Option[String]) = (
+    VersionedKeyedTable.completeVersions(spark, viewDir).size,
+    VersionedKeyedTable.snapshot(spark, viewDir).meta
+      .get(IncrementalView.AppliedBaseKey))
+
+  private def baseLatest(baseDir: String): Long =
+    VersionedKeyedTable.snapshot(spark, baseDir).version
+
+  test("a catch-up over a CoW upsert, a merge, an upsertMor, a " +
+      "deleteMor and a compaction adds exactly ONE view commit, " +
+      "stamped with the base's latest version") {
+    val (baseDir, viewDir) = fresh()
+    VersionedKeyedTable.create(
+      (1L to 12L).map(i => (i, s"g${i % 3}", i * 10)).toDF("k", "g", "v"),
+      baseDir, "k", numBuckets = 2)
+    val wm = IncrementalView.createFrom(
+      spark, baseDir, viewDir, "g", "v", numBuckets = 2)
+    VersionedKeyedTable.upsert(spark, baseDir,
+      Seq((1L, "g1", 11L), (13L, "g0", 130L)).toDF("k", "g", "v"), "k")
+    VersionedKeyedTable.merge(spark, baseDir,
+      Seq((2L, "g0", 21L), (14L, "g2", 140L)).toDF("k", "g", "v"), "k",
+      whenMatchedUpdate = Map("g" -> col("s.g"), "v" -> col("s.v")))
+    VersionedKeyedTable.upsertMor(spark, baseDir,
+      Seq((3L, "g1", 31L), (15L, "g1", 150L)).toDF("k", "g", "v"), "k")
+    VersionedKeyedTable.deleteMor(spark, baseDir,
+      Seq(4L, 13L).toDF("k"), "k")
+    VersionedKeyedTable.compact(spark, baseDir, "k")
+    val latest = baseLatest(baseDir)
+    assert(latest - wm === 5L)
+    val (n0, _) = viewCommits(viewDir)
+    assert(IncrementalView.refreshToLatest(
+      spark, baseDir, viewDir, "k", "g", "v", wm) === latest)
+    assert(viewCommits(viewDir) === ((n0 + 1, Some(latest.toString))),
+      "one merge commit for the whole span, stamped with latest")
+    assert(viewOf(viewDir) === recompute(baseDir))
+  }
+
+  test("full view: a catch-up span holding an insert, an update and " +
+      "a delete of ONE key plus a lost extremum is one exact commit") {
+    val (baseDir, viewDir) = fresh()
+    VersionedKeyedTable.create(
+      Seq((1L, "a", 10L), (2L, "a", 50L), (3L, "a", 30L),
+        (4L, "b", 7L), (5L, "b", 70L)).toDF("k", "g", "v"),
+      baseDir, "k", numBuckets = 2)
+    val wm = IncrementalView.createFromFull(
+      spark, baseDir, viewDir, "g", "v", numBuckets = 2)
+    // key 9 is inserted below a's min, moved to b above b's max, and
+    // deleted: the span nets it away entirely
+    VersionedKeyedTable.upsert(spark, baseDir,
+      Seq((9L, "a", 1L)).toDF("k", "g", "v"), "k")
+    VersionedKeyedTable.upsert(spark, baseDir,
+      Seq((9L, "b", 900L)).toDF("k", "g", "v"), "k")
+    // a loses its max (k2=50); b gains a new max through an update
+    VersionedKeyedTable.delete(spark, baseDir, Seq(9L, 2L).toDF("k"), "k")
+    VersionedKeyedTable.upsert(spark, baseDir,
+      Seq((5L, "b", 75L)).toDF("k", "g", "v"), "k")
+    val latest = baseLatest(baseDir)
+    val (n0, _) = viewCommits(viewDir)
+    assert(IncrementalView.refreshToLatestFull(
+      spark, baseDir, viewDir, "k", "g", "v", wm) === latest)
+    assert(viewCommits(viewDir) === ((n0 + 1, Some(latest.toString))))
+    val got = fullViewOf(viewDir)
+    assert(got === recomputeFull(baseDir))
+    assert(got("a") === ((2L, 40L, 10L, 30L)), "a's max fell to 30")
+    assert(got("b") === ((2L, 82L, 7L, 75L)))
+  }
+
+  test("multi-aggregate view: a many-version catch-up is one exact " +
+      "commit stamped with the base's latest version") {
+    val (baseDir, viewDir) = fresh()
+    VersionedKeyedTable.create(
+      Seq((1L, "a", 10L, 90L), (2L, "a", 50L, 5L), (3L, "a", 30L, 70L),
+        (4L, "b", 7L, 93L), (5L, "b", 70L, 30L))
+        .toDF("k", "g", "v", "w"), baseDir, "k", numBuckets = 2)
+    val wm = IncrementalView.createFromFullMulti(
+      spark, baseDir, viewDir, "g", Seq("v", "w"), numBuckets = 2)
+    VersionedKeyedTable.upsert(spark, baseDir,
+      Seq((9L, "a", 100L, 1L)).toDF("k", "g", "v", "w"), "k")
+    VersionedKeyedTable.upsert(spark, baseDir,
+      Seq((9L, "b", 1L, 100L)).toDF("k", "g", "v", "w"), "k")
+    VersionedKeyedTable.delete(spark, baseDir, Seq(9L, 2L).toDF("k"), "k")
+    VersionedKeyedTable.upsert(spark, baseDir,
+      Seq((4L, "c", 8L, 94L)).toDF("k", "g", "v", "w"), "k")
+    val latest = baseLatest(baseDir)
+    val (n0, _) = viewCommits(viewDir)
+    assert(IncrementalView.refreshToLatestFullMulti(
+      spark, baseDir, viewDir, "k", "g", Seq("v", "w"), wm) === latest)
+    assert(viewCommits(viewDir) === ((n0 + 1, Some(latest.toString))))
+    assert(multiViewOf(viewDir) === recomputeMulti(baseDir))
+  }
+
+  test("a catch-up from a watermark whose base manifest was vacuumed " +
+      "fails loudly and commits nothing") {
+    val (baseDir, viewDir) = fresh()
+    VersionedKeyedTable.create(
+      Seq((1L, "a", 10L)).toDF("k", "g", "v"), baseDir, "k",
+      numBuckets = 2)
+    IncrementalView.createFrom(
+      spark, baseDir, viewDir, "g", "v", numBuckets = 2)
+    (2L to 4L).foreach(i => VersionedKeyedTable.upsert(spark, baseDir,
+      Seq((i, "a", i)).toDF("k", "g", "v"), "k"))
+    VersionedKeyedTable.vacuum(spark, baseDir, keepVersions = 2,
+      graceMs = 0L)
+    val before = viewCommits(viewDir)
+    val e = intercept[IllegalStateException] {
+      IncrementalView.refreshFromCommitted(
+        spark, baseDir, viewDir, "k", "g", "v")
+    }
+    assert(e.getMessage.contains("no complete version v1"),
+      e.getMessage)
+    assert(viewCommits(viewDir) === before, "no change may be skipped")
+  }
+
+  test("maintainer lock: maintainers racing from a barrier never both " +
+      "hold the lock") {
+    val (_, viewDir) = fresh()
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(viewDir))
+    val holding = new java.util.concurrent.atomic.AtomicInteger(0)
+    val most = new java.util.concurrent.atomic.AtomicInteger(0)
+    for (_ <- 0 until 25) {
+      val racers = 4
+      val barrier = new java.util.concurrent.CyclicBarrier(racers)
+      val wins = new java.util.concurrent.atomic.AtomicInteger(0)
+      val threads = (0 until racers).map { i =>
+        new Thread(() => {
+          barrier.await()
+          try IncrementalView.withMaintainerLock(spark, viewDir) {
+            most.accumulateAndGet(holding.incrementAndGet(), math.max)
+            wins.incrementAndGet()
+            Thread.sleep(20)
+            holding.decrementAndGet(): Unit
+          } catch { case _: IllegalStateException => () }
+        }, s"graft-ivm-racer-$i")
+      }
+      threads.foreach(_.start()); threads.foreach(_.join(60000))
+      assert(wins.get >= 1, "some racer must win")
+    }
+    assert(most.get === 1, "two maintainers held the lock at once")
+  }
 }
