@@ -311,7 +311,15 @@ object KeyedTable {
             .drop("__bucket")
         case None => spark.read.parquet(dir).drop("__bucket") // loud
       }
-    else spark.read.parquet(dir).drop("__bucket")
+    else scan(spark, dir).drop("__bucket")
+
+  /** The table's files (with `__bucket`) under the sidecar's stored
+    * schema: inferring it instead launches a one-task Spark job that
+    * reads a parquet footer on every call. Tables without a sidecar
+    * fall back to inference. */
+  private def scan(spark: SparkSession, dir: String): DataFrame =
+    readMeta(spark, dir).fold(spark.read.parquet(dir))(m =>
+      spark.read.schema(m._2).parquet(dir))
 
   /** Delete a batch of keys — the right-to-be-forgotten operation a
     * training-data store must support (the reference's Datastore gave
@@ -352,7 +360,7 @@ object KeyedTable {
         VersionedKeyedTable.touchedBucketsAndCount(del)
       val touched = touchedSet.toArray.sorted // bounded by numBuckets
       if (touched.nonEmpty) {
-        val existing = spark.read.parquet(dir)
+        val existing = scan(spark, dir)
           .filter(col("__bucket")
             .isin(touched.map(Integer.valueOf).toIndexedSeq: _*))
         // size-gated broadcast: the delete batch is caller-supplied
@@ -516,7 +524,7 @@ object KeyedTable {
       if (isEmptyTable(spark, dir))
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], up.schema)
-      else spark.read.parquet(dir)
+      else scan(spark, dir)
         .filter(col("__bucket")
           .isin(touched.map(Integer.valueOf).toIndexedSeq: _*))
     // size-gated broadcast: the update batch is caller-supplied and

@@ -599,8 +599,8 @@ object VersionedKeyedTable {
     * property a backend declares is `atomicWithContent`: whether a
     * claim NAME can ever be observed without its complete content.
     * Atomic backends have NO torn window — a lost CAS always implies
-    * a complete commit, so losers never poll ([[awaitBlockingClaim]])
-    * and torn-claim adjudication is unreachable. */
+    * a complete commit, so [[commitLoop]] never polls on them and its
+    * torn-claim skip is unreachable. */
   private[sinks] sealed trait ClaimBackend {
     def atomicWithContent: Boolean
     def tryClaim(fs: FileSystem, versions: Path, target: Path,
@@ -698,8 +698,9 @@ object VersionedKeyedTable {
     * TOCTOU on schemes whose rename OVERWRITES, silently replacing a
     * committed manifest), then the content is written. The
     * create-to-write gap is the torn window the `#end` marker makes
-    * detectable and [[awaitBlockingClaim]] bounds on the loser side —
-    * a live racer mid-write is waited for, never adjudicated dead. */
+    * detectable and [[commitLoop]]'s bounded poll manages on the loser
+    * side — a live racer mid-write is waited for, never adjudicated
+    * dead. */
   private[sinks] object ExclusiveCreateClaim extends ClaimBackend {
     val atomicWithContent = false
     def tryClaim(fs: FileSystem, versions: Path, target: Path,
@@ -789,12 +790,12 @@ object VersionedKeyedTable {
   private[sinks] var tornClaimPolls = 10
   private[sinks] var tornClaimPollMs = 200L
 
-  /** After a lost CAS with NO new complete version: the blocking claim
-    * is either a dead writer's torn file or (on the exclusive-create
-    * fallback) a live racer mid-claim. Poll briefly for a complete
-    * commit to appear; `true` means one did (the caller re-reads the
-    * log), `false` after the bound means the claim is adjudicated
-    * torn and skipped. On atomic-with-content backends (file:// hard
+  /** [[commitLoop]]'s wait after a lost CAS with NO new complete
+    * version: the blocking claim is either a dead writer's torn file or
+    * (on the exclusive-create fallback) a live racer mid-claim. Poll
+    * briefly for a complete commit to appear; `true` means one did (the
+    * loop re-reads the log), `false` after the bound means the claim is
+    * adjudicated torn and skipped. On atomic-with-content backends (file:// hard
     * links, HDFS-family renames) this returns immediately — a claim
     * name cannot exist without complete content there. */
   private def awaitBlockingClaim(fs: FileSystem, spark: SparkSession,
@@ -808,6 +809,127 @@ object VersionedKeyedTable {
     }
     false
   }
+
+  /** THE optimistic commit loop — every mutation entry point except
+    * the base-less first commits of [[create]] and [[cloneAt]] commits
+    * through it (Delta's `OptimisticTransaction` shape over the
+    * manifest log). `prepare` reads one snapshot, writes whatever
+    * data, delete and change files the commit needs, and returns a
+    * RENDERER building the manifest from `(base, target)` — or None
+    * when there is nothing to commit. The loop then claims `target`
+    * (initially `snapshot.version + 1`) and, on a lost claim:
+    *
+    *  - re-reads the log; with NO new complete version it waits out a
+    *    live weak-scheme racer ([[awaitBlockingClaim]]; immediate on
+    *    atomic-with-content backends, where a lost claim always means
+    *    a complete commit);
+    *  - still no new complete version: the blocking claim is TORN (a
+    *    dead weak-scheme writer) — skip past every claimed name
+    *    ([[nextClaimable]]), same base, same files;
+    *  - a new complete version, and `rebaseFor` holds my touched
+    *    buckets that no intervening commit touched: REBASE — re-render
+    *    the same files onto the new base (no data rewrite);
+    *  - otherwise (overlap, or a strict caller — `rebaseFor = None` —
+    *    whose content was derived from the whole snapshot): RECOMPUTE —
+    *    `prepare` runs again on the new snapshot; the files just
+    *    written become unreferenced (vacuum removes them).
+    *
+    * `maxAttempts` bounds the lost claims, torn skips included (one
+    * skip clears any run of torn claims), then the commit fails
+    * loudly. */
+  private def commitLoop(spark: SparkSession, dir: String, op: String,
+      maxAttempts: Int, rebaseFor: Option[Set[Int]])(
+      prepare: Snapshot => Option[(Snapshot, Long) => String]): Unit = {
+    val fs = hfs(spark, dir)
+    var snap = snapshot(spark, dir)
+    var lost = 0
+    while (true) {
+      val render = prepare(snap) match {
+        case Some(r) => r
+        case None => return // nothing to commit
+      }
+      var base = snap
+      var target = base.version + 1
+      var resolved = false
+      while (!resolved) {
+        if (tryCommit(fs, dir, versionPath(dir, target),
+            render(base, target))) return
+        lost += 1
+        if (lost >= maxAttempts) throw new IllegalStateException(
+          s"VersionedKeyedTable at $dir: $op contention exceeded " +
+            s"$maxAttempts attempts — backlogged writers on this table")
+        val cur0 = snapshot(spark, dir)
+        val cur =
+          if (cur0.version > base.version) cur0
+          else if (awaitBlockingClaim(fs, spark, dir, base.version))
+            snapshot(spark, dir)
+          else cur0
+        if (cur.version <= base.version)
+          target = nextClaimable(fs, dir, target + 1)
+        else if (rebaseFor.exists(mine =>
+            (base.version + 1 to cur.version).forall { v =>
+              val p = versionPath(dir, v)
+              !fs.exists(p) || parseManifest(v, readVersionFile(fs, p))
+                .forall(s => (s.touched & mine).isEmpty)
+            })) {
+          base = cur
+          target = math.max(base.version + 1, target)
+        } else {
+          snap = cur
+          resolved = true
+        }
+      }
+    }
+  }
+
+  /** The recorded key IS the layout contract: a wrong-column write
+    * would hash rows into wrong buckets AND read pending MoR delete
+    * files as all-null (resurrecting deleted rows) — refuse loudly.
+    * Tables whose sidecar predates the recorded key pass, except for
+    * merge-on-read writes (`recorded`): readers resolve the delete
+    * files' anti-join key from the sidecar, so it must be there. */
+  private def requireKey(spark: SparkSession, dir: String,
+      keyCol: String, op: String, recorded: Boolean = false): Unit = {
+    val rec = KeyedTable.readMetaKey(spark, dir)
+    if (recorded) require(rec.contains(keyCol),
+      s"$op key '$keyCol' must match the table's recorded key " +
+        s"column (${rec.getOrElse("none")})")
+    else require(rec.forall(_ == keyCol),
+      s"$op at $dir: key '$keyCol' does not match the table's " +
+        s"recorded key column (${rec.getOrElse("none")})")
+  }
+
+  /** ADDITIVE-ONLY schema evolution, the contract every write path
+    * shares: `current` widened by the incoming batch's new columns
+    * (`__bucket` excluded). A shared column must keep its type — a
+    * batch that changes one would write files later reads cannot
+    * convert — and a new name must not be a dropped column's. Old
+    * files read the added columns as null, the parquet missing-column
+    * contract the source_evolving_schema row pins. */
+  private def evolveSchema(spark: SparkSession, dir: String,
+      current: org.apache.spark.sql.types.StructType,
+      incoming: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    val fields = incoming.fields.filterNot(_.name == "__bucket")
+    fields.foreach { f =>
+      current.fields.find(_.name == f.name).foreach { cf =>
+        require(cf.dataType == f.dataType,
+          s"schema evolution is additive only: column '${f.name}' " +
+            s"cannot change ${cf.dataType} -> ${f.dataType}")
+      }
+    }
+    val added = fields.filterNot(f => current.fieldNames.contains(f.name))
+    requireNotDropped(spark, dir, added.map(_.name).toSeq)
+    org.apache.spark.sql.types.StructType(current.fields ++ added)
+  }
+
+  /** A rebased commit's schema: mine, plus any columns a DISJOINT racer
+    * added on `base` (rebase keeps both evolutions additive). */
+  private def carrySchema(mine: org.apache.spark.sql.types.StructType,
+      base: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(mine.fields ++
+      base.fields.filterNot(f => mine.fieldNames.contains(f.name)))
 
   // ---- data files --------------------------------------------------
 
@@ -1300,10 +1422,9 @@ object VersionedKeyedTable {
     * on. CDF: the commit captures ordinary delete change rows (with
     * `_prev` values) from the same semi-join, so views, replicas and
     * streams cannot tell deferred from copy-on-write deletes.
-    * Concurrency is [[mutateWith]]'s optimistic protocol: disjoint
-    * racers rebase (my delete files stay valid — their buckets'
-    * data and delete entries are untouched), overlap re-runs the
-    * existence check, torn claims are skipped. */
+    * Concurrency is [[commitLoop]]'s: disjoint racers rebase (my
+    * delete files stay valid — their buckets' data and delete entries
+    * are untouched), overlap re-runs the existence check. */
   def deleteMor(spark: SparkSession, dir: String, keys: DataFrame,
       keyCol: String, captureChanges: Boolean = true,
       commitMeta: Map[String, String] = Map.empty): Unit = {
@@ -1311,128 +1432,101 @@ object VersionedKeyedTable {
     // read paths resolve the anti-join key from the meta sidecar —
     // a MOR delete under a different (or unrecorded) key would write
     // files no reader could ever apply
-    require(KeyedTable.readMetaKey(spark, dir).contains(keyCol),
-      s"deleteMor key '$keyCol' must match the table's recorded key " +
-        s"column (${KeyedTable.readMetaKey(spark, dir).getOrElse("none")})")
-    val fs = hfs(spark, dir)
+    requireKey(spark, dir, keyCol, "deleteMor", recorded = true)
     val batch = keys.select(col(keyCol))
       .where(col(keyCol).isNotNull).distinct()
       .withColumn("__bucket", bucketOf(keyCol, nb))
       .localCheckpoint(true)
     val myTouched = touchedBuckets(batch) // bounded by numBuckets
     if (myTouched.isEmpty) return
-    // DRIVER-BOUNDED batches prune the existence read through the
-    // point-lookup path (zone maps + blooms): a surgical delete on a
-    // clustered 100 TB table reads the few COVERING files, never
-    // whole buckets — the pruning is conservative, and the semi-join
-    // below is the exact residual either way. Unbounded batches read
-    // the touched buckets (still O(touched region), no rewrite).
-    // One take(cap+1) both decides boundedness and fetches the keys —
-    // the previous count()+collect() pair cost two jobs per delete.
-    val keyList: Option[Either[Seq[Long], Seq[String]]] =
-      metaSchema(keyCol).dataType match {
-        case org.apache.spark.sql.types.StringType =>
-          val rows = batch.select(col(keyCol))
-            .take(MaxPointLookupKeys + 1)
-          if (rows.length > MaxPointLookupKeys) None
-          else Some(Right(rows.map(_.getString(0)).toSeq))
-        case t if isIntegralKey(t) =>
-          val rows = batch.select(col(keyCol).cast("long"))
-            .take(MaxPointLookupKeys + 1)
-          if (rows.length > MaxPointLookupKeys) None
-          else Some(Left(rows.map(_.getLong(0)).toSeq))
-        case _ => None // date/timestamp keys: bucket-scoped read
-      }
-    var snap = snapshot(spark, dir)
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 20) throw new IllegalStateException(
-        s"VersionedKeyedTable at $dir: deleteMor contention exceeded " +
-          "20 attempts — backlogged writers on the same buckets")
+    val keyList = pointLookupKeys(batch, keyCol, metaSchema(keyCol).dataType)
+    commitLoop(spark, dir, "deleteMor", 20, Some(myTouched)) { snap =>
       val schema = snap.schema.getOrElse(metaSchema)
-      val existingRels: Seq[String] = keyList match {
-        case Some(Left(ks)) =>
-          keyFilesOf(spark, dir, keyCol, ks, snap, nb, schema)._1
-        case Some(Right(ss)) =>
-          keyFilesStrOf(spark, dir, keyCol, ss, snap, nb, schema)._1
-        case None => myTouched.toSeq.sorted
-          .flatMap(b => snap.files.getOrElse(b, Seq.empty))
-      }
-      val existing = morScan(spark, dir, snap, schema, keyCol,
-        existingRels, Some(myTouched))
-      // broadcast gate: a bounded keyList proves the batch holds at
-      // most MaxPointLookupKeys keys; an unbounded batch must not be
-      // broadcast-hinted (guide §3.1) — the planner joins it shuffled
-      val batchKeys =
-        if (keyList.isDefined) broadcast(batch.select(col(keyCol)))
-        else batch.select(col(keyCol))
-      val doomedRows = existing.join(batchKeys, Seq(keyCol), "left_semi")
-        .localCheckpoint(true) // pin before any racer commits/vacuums
-      if (doomedRows.isEmpty) return // nothing exists to delete
-      val (delFiles, delCounts) = writeDeleteFiles(spark, dir,
-        doomedRows.select(col(keyCol))
-          .withColumn("__bucket", bucketOf(keyCol, nb)))
-      val changeFiles =
-        if (!captureChanges) None
-        else Some(writeChangeFiles(spark, dir,
-          classifyDiff(doomedRows,
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              schema),
-            keyCol, schema)))
-      // rebase loop — mutateWith's shape: disjoint racers keep my
-      // delete files valid; overlap re-runs the existence check
-      var base = snap
-      var target = base.version + 1
-      var resolved = false
-      while (!resolved) {
-        attempts += 1
-        if (attempts > 20) throw new IllegalStateException(
-          s"VersionedKeyedTable at $dir: deleteMor contention " +
-            "exceeded 20 attempts — backlogged writers on this table")
-        val newDeletes = (base.deletes ++ myTouched.toSeq.map(b =>
-          b -> (base.deletes.getOrElse(b, Seq.empty) ++
-            delFiles.getOrElse(b, Seq.empty)))).filter(_._2.nonEmpty)
-        // the delete files are SEQUENCE-STAMPED with the committing
-        // version: they kill below it, so rows a LATER upsertMor
-        // appends (higher sequence) stay alive
-        val newSeqs = base.seqs ++
-          delFiles.valuesIterator.flatten.map(_ -> target)
-        if (tryCommit(fs, dir, versionPath(dir, target),
-            renderManifest(myTouched, base.files,
-              base.schema.getOrElse(metaSchema), base.stats, changeFiles,
-              commitMeta + (BaseKey -> base.version.toString),
-              base.counts ++ delCounts, base.extraStats, newDeletes,
-              newSeqs)))
-          return
-        val cur0 = snapshot(spark, dir)
-        val cur =
-          if (cur0.version > base.version) cur0
-          else if (awaitBlockingClaim(fs, spark, dir, base.version))
-            snapshot(spark, dir)
-          else cur0
-        if (cur.version <= base.version) {
-          target = nextClaimable(fs, dir, target + 1) // torn claim
-        } else {
-          val interveningTouched =
-            (base.version + 1 to cur.version).flatMap { v =>
-              val p = versionPath(dir, v)
-              if (!fs.exists(p)) Seq.empty
-              else parseManifest(v, readVersionFile(fs, p))
-                .map(_.touched.toSeq).getOrElse(Seq.empty)
-            }.toSet
-          if ((interveningTouched & myTouched).nonEmpty) {
-            snap = cur // overlap: existence check is stale — recompute
-            resolved = true
-          } else {
-            base = cur // disjoint: same delete files, retry the CAS
-            target = math.max(base.version + 1, target)
-          }
-        }
+      val doomedRows = visibleRows(spark, dir, snap, schema, nb, batch,
+        keyCol, keyList, myTouched)
+      if (doomedRows.isEmpty) None // nothing exists to delete
+      else {
+        val (delFiles, delCounts) = writeDeleteFiles(spark, dir,
+          doomedRows.select(col(keyCol))
+            .withColumn("__bucket", bucketOf(keyCol, nb)))
+        val changeFiles =
+          if (!captureChanges) None
+          else Some(writeChangeFiles(spark, dir,
+            classifyDiff(doomedRows,
+              spark.createDataFrame(
+                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                schema),
+              keyCol, schema)))
+        // disjoint racers keep my delete files valid; the files are
+        // SEQUENCE-STAMPED with the committing version: they kill below
+        // it, so rows a LATER upsertMor appends (higher sequence) live
+        Some((base, target) => renderManifest(myTouched, base.files,
+          base.schema.getOrElse(metaSchema), base.stats, changeFiles,
+          commitMeta + (BaseKey -> base.version.toString),
+          base.counts ++ delCounts, base.extraStats,
+          appendPerBucket(base.deletes, myTouched, delFiles)
+            .filter(_._2.nonEmpty),
+          base.seqs ++ delFiles.valuesIterator.flatten.map(_ -> target)))
       }
     }
   }
+
+  /** A merge-on-read batch's keys for the point-lookup existence read.
+    * DRIVER-BOUNDED batches prune that read through the zone maps and
+    * blooms: a surgical delete on a clustered 100 TB table reads the
+    * few COVERING files, never whole buckets — the pruning is
+    * conservative, and the semi-join is the exact residual either way.
+    * None (unbounded batch, or a date/timestamp key) reads the touched
+    * buckets: still O(touched region), no rewrite. One take(cap+1) both
+    * decides boundedness and fetches the keys — a count()+collect()
+    * pair would cost two jobs per commit. */
+  private def pointLookupKeys(keys: DataFrame, keyCol: String,
+      keyType: org.apache.spark.sql.types.DataType)
+      : Option[Either[Seq[Long], Seq[String]]] = keyType match {
+    case org.apache.spark.sql.types.StringType =>
+      val rows = keys.select(col(keyCol)).take(MaxPointLookupKeys + 1)
+      if (rows.length > MaxPointLookupKeys) None
+      else Some(Right(rows.map(_.getString(0)).toSeq))
+    case t if isIntegralKey(t) =>
+      val rows = keys.select(col(keyCol).cast("long"))
+        .take(MaxPointLookupKeys + 1)
+      if (rows.length > MaxPointLookupKeys) None
+      else Some(Left(rows.map(_.getLong(0)).toSeq))
+    case _ => None
+  }
+
+  /** The rows of `snap` VISIBLE under the merge-on-read state whose
+    * keys `keys` carries — what a MoR commit deletes or replaces —
+    * pinned before any racer commits or vacuums. A bounded `keyList`
+    * proves the key set is at most [[MaxPointLookupKeys]] rows, so
+    * only then is it broadcast (guide §3.1); unbounded batches join
+    * shuffled. */
+  private def visibleRows(spark: SparkSession, dir: String,
+      snap: Snapshot, schema: org.apache.spark.sql.types.StructType,
+      nb: Int, keys: DataFrame, keyCol: String,
+      keyList: Option[Either[Seq[Long], Seq[String]]],
+      touched: Set[Int]): DataFrame = {
+    val rels: Seq[String] = keyList match {
+      case Some(Left(ks)) =>
+        keyFilesOf(spark, dir, keyCol, ks, snap, nb, schema)._1
+      case Some(Right(ss)) =>
+        keyFilesStrOf(spark, dir, keyCol, ss, snap, nb, schema)._1
+      case None => touched.toSeq.sorted
+        .flatMap(b => snap.files.getOrElse(b, Seq.empty))
+    }
+    val keyRel =
+      if (keyList.isDefined) broadcast(keys.select(col(keyCol)))
+      else keys.select(col(keyCol))
+    morScan(spark, dir, snap, schema, keyCol, rels, Some(touched))
+      .join(keyRel, Seq(keyCol), "left_semi")
+      .localCheckpoint(true)
+  }
+
+  /** `cur` with `add`'s files appended to each of `buckets`' lists. */
+  private def appendPerBucket(cur: Map[Int, Seq[String]],
+      buckets: Set[Int], add: Map[Int, Seq[String]]): Map[Int, Seq[String]] =
+    cur ++ buckets.toSeq.map(b =>
+      b -> (cur.getOrElse(b, Seq.empty) ++ add.getOrElse(b, Seq.empty)))
 
   /** MERGE-ON-READ UPSERT: put semantics in one commit that APPENDS
     * new data files and records an equality-delete file for the
@@ -1467,9 +1561,8 @@ object VersionedKeyedTable {
     * Refuses to append over UNSTAMPED pending delete files (legacy
     * entries whose sequence is unknown apply to everything — a new
     * row would be killed by an older delete): run [[compact]] first.
-    * Concurrency is the shared optimistic protocol: disjoint racers
-    * rebase (my files stay valid), overlap re-runs the existence
-    * check, torn claims are skipped. */
+    * Concurrency is [[commitLoop]]'s: disjoint racers rebase (my
+    * files stay valid), overlap re-runs the existence check. */
   def upsertMor(spark: SparkSession, dir: String, rows: DataFrame,
       keyCol: String, captureChanges: Boolean = true,
       commitMeta: Map[String, String] = Map.empty): Unit =
@@ -1499,10 +1592,7 @@ object VersionedKeyedTable {
       commitMeta: Map[String, String] = Map.empty,
       expectedVersion: Option[Long] = None): Unit = {
     val (nb, metaSchema) = readMeta(spark, dir)
-    require(KeyedTable.readMetaKey(spark, dir).contains(keyCol),
-      s"upsertMor key '$keyCol' must match the table's recorded key " +
-        s"column (${KeyedTable.readMetaKey(spark, dir).getOrElse("none")})")
-    val fs = hfs(spark, dir)
+    requireKey(spark, dir, keyCol, "upsertMor", recorded = true)
     val batch = rows.where(col(keyCol).isNotNull)
       .dropDuplicates(keyCol)
       .withColumn("__bucket", bucketOf(keyCol, nb))
@@ -1526,50 +1616,21 @@ object VersionedKeyedTable {
     val myTouched = touchedBuckets(
       allKeys.select(col("__bucket"))) // bounded by numBuckets
     if (myTouched.isEmpty) return
-    // bounded batches prune the existence/prev read through the
-    // point-lookup path (zone maps + blooms) — see deleteMor; one
-    // take(cap+1) replaces the count()+collect() pair
-    val keyList: Option[Either[Seq[Long], Seq[String]]] =
-      metaSchema(keyCol).dataType match {
-        case org.apache.spark.sql.types.StringType =>
-          val rows = allKeys.select(col(keyCol))
-            .take(MaxPointLookupKeys + 1)
-          if (rows.length > MaxPointLookupKeys) None
-          else Some(Right(rows.map(_.getString(0)).toSeq))
-        case t if isIntegralKey(t) =>
-          val rows = allKeys.select(col(keyCol).cast("long"))
-            .take(MaxPointLookupKeys + 1)
-          if (rows.length > MaxPointLookupKeys) None
-          else Some(Left(rows.map(_.getLong(0)).toSeq))
-        case _ => None
-      }
-    var snap = snapshot(spark, dir)
-    expectedVersion.foreach(ev => require(snap.version == ev,
-      s"mutateMor at $dir: the table advanced past the snapshot the " +
-        s"mutation was derived from (v${snap.version} != v$ev) — " +
-        "serializable conflict; re-run the statement"))
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 20) throw new IllegalStateException(
-        s"VersionedKeyedTable at $dir: upsertMor contention exceeded " +
-          "20 attempts — backlogged writers on the same buckets")
-      val current = snap.schema.getOrElse(metaSchema)
-      // additive-only schema evolution, the shared mutate contract
-      val updSchema = org.apache.spark.sql.types.StructType(
-        batch.schema.fields.filterNot(_.name == "__bucket"))
-      updSchema.fields.foreach { f =>
-        current.fields.find(_.name == f.name).foreach { cf =>
-          require(cf.dataType == f.dataType,
-            s"schema evolution is additive only: column '${f.name}' " +
-              s"cannot change ${cf.dataType} -> ${f.dataType}")
-        }
-      }
-      val evolved = org.apache.spark.sql.types.StructType(
-        current.fields ++ updSchema.fields.filterNot(f =>
-          current.fieldNames.contains(f.name)))
-      requireNotDropped(spark, dir, updSchema.fields.map(_.name)
-        .filterNot(current.fieldNames.contains))
+    val keyList = pointLookupKeys(allKeys, keyCol,
+      metaSchema(keyCol).dataType)
+    // the serializable gate (expectedVersion set): the puts/deletes
+    // were DERIVED from that snapshot's rows — any intervening commit
+    // (even a bucket-disjoint one: the statement's WHERE may have read
+    // it) fails the statement instead of re-applying, so such calls
+    // commit strictly (no rebase) and the gate rejects every retry
+    commitLoop(spark, dir, "upsertMor", 20,
+        if (expectedVersion.isEmpty) Some(myTouched) else None) { snap =>
+      expectedVersion.foreach(ev => require(snap.version == ev,
+        s"mutateMor at $dir: the table advanced past the snapshot the " +
+          s"mutation was derived from (v${snap.version} != v$ev) — " +
+          "serializable conflict; re-run the statement"))
+      val evolved = evolveSchema(spark, dir,
+        snap.schema.getOrElse(metaSchema), batch.schema)
       // refuse unstamped pending deletes in my buckets: their
       // sequence is unknown (= +inf), so they would kill the rows
       // this commit appends
@@ -1581,108 +1642,45 @@ object VersionedKeyedTable {
               "rows — run compact() first")
         }
       }
-      val existingRels: Seq[String] = keyList match {
-        case Some(Left(ks)) =>
-          keyFilesOf(spark, dir, keyCol, ks, snap, nb, evolved)._1
-        case Some(Right(ss)) =>
-          keyFilesStrOf(spark, dir, keyCol, ss, snap, nb, evolved)._1
-        case None => myTouched.toSeq.sorted
-          .flatMap(b => snap.files.getOrElse(b, Seq.empty))
-      }
-      // the rows this commit REPLACES OR DELETES — visible state only.
-      // Broadcast gate: a bounded keyList proves the key set is at
-      // most MaxPointLookupKeys rows; unbounded batches join shuffled
-      val allKeysRel =
-        if (keyList.isDefined) broadcast(allKeys.select(col(keyCol)))
-        else allKeys.select(col(keyCol))
-      val prevRows = morScan(spark, dir, snap, evolved, keyCol,
-          existingRels, Some(myTouched))
-        .join(allKeysRel, Seq(keyCol), "left_semi")
-        .localCheckpoint(true)
+      // the rows this commit REPLACES OR DELETES — visible state only
+      val prevRows = visibleRows(spark, dir, snap, evolved, nb, allKeys,
+        keyCol, keyList, myTouched)
       // a pure delete of ABSENT keys is a no-op, like deleteMor's
-      if (batch.isEmpty && prevRows.isEmpty) return
-      val (newFiles, newStats, newCounts, newExtra) =
-        if (batch.isEmpty)
-          (Map.empty[Int, Seq[String]],
-            Map.empty[String, (String, String)],
-            Map.empty[String, Long],
-            Map.empty[String, Map[String, (String, String)]])
-        else writeDataFiles(spark, dir, batch, keyCol,
-          statsCols = inheritedStatsCols(snap))
-      val (delFiles, delCounts) =
-        if (prevRows.isEmpty) (Map.empty[Int, Seq[String]],
-          Map.empty[String, Long])
-        else writeDeleteFiles(spark, dir,
-          prevRows.select(col(keyCol))
-            .withColumn("__bucket", bucketOf(keyCol, nb)))
-      val changeFiles =
-        if (!captureChanges) None
-        else Some(writeChangeFiles(spark, dir,
-          classifyDiff(prevRows, batch.drop("__bucket"), keyCol,
-            evolved)))
-      var base = snap
-      var target = base.version + 1
-      var resolved = false
-      while (!resolved) {
-        attempts += 1
-        if (attempts > 20) throw new IllegalStateException(
-          s"VersionedKeyedTable at $dir: upsertMor contention " +
-            "exceeded 20 attempts — backlogged writers on this table")
-        val manifest = base.files ++ myTouched.toSeq.map(b =>
-          b -> (base.files.getOrElse(b, Seq.empty) ++
-            newFiles.getOrElse(b, Seq.empty)))
-        val newDeletes = (base.deletes ++ myTouched.toSeq.map(b =>
-          b -> (base.deletes.getOrElse(b, Seq.empty) ++
-            delFiles.getOrElse(b, Seq.empty)))).filter(_._2.nonEmpty)
-        // new data AND delete files stamp the committing version:
-        // the deletes kill strictly below it, the appended rows sit
-        // AT it and survive
-        val newSeqs = base.seqs ++
-          (newFiles.valuesIterator.flatten ++
-            delFiles.valuesIterator.flatten).map(_ -> target)
-        val commitSchema = org.apache.spark.sql.types.StructType(
-          evolved.fields ++
-            base.schema.getOrElse(metaSchema).fields.filterNot(f =>
-              evolved.fieldNames.contains(f.name)))
-        if (tryCommit(fs, dir, versionPath(dir, target),
-            renderManifest(myTouched, manifest, commitSchema,
-              base.stats ++ newStats, changeFiles,
-              commitMeta + (BaseKey -> base.version.toString),
-              base.counts ++ newCounts ++ delCounts,
-              base.extraStats ++ newExtra, newDeletes, newSeqs)))
-          return
-        val cur0 = snapshot(spark, dir)
-        val cur =
-          if (cur0.version > base.version) cur0
-          else if (awaitBlockingClaim(fs, spark, dir, base.version))
-            snapshot(spark, dir)
-          else cur0
-        if (cur.version <= base.version) {
-          target = nextClaimable(fs, dir, target + 1) // torn claim
-        } else {
-          // the serializable gate: the puts/deletes were DERIVED from
-          // the expected snapshot's rows — any intervening commit
-          // (even a bucket-disjoint one: the statement's WHERE may
-          // have read it) fails the statement instead of re-applying
-          expectedVersion.foreach(ev => throw new IllegalStateException(
-            s"mutateMor at $dir: concurrent commit v${cur.version} " +
-              s"landed after the statement's snapshot v$ev — " +
-              "serializable conflict; re-run the statement"))
-          val interveningTouched =
-            (base.version + 1 to cur.version).flatMap { v =>
-              val p = versionPath(dir, v)
-              if (!fs.exists(p)) Seq.empty
-              else parseManifest(v, readVersionFile(fs, p))
-                .map(_.touched.toSeq).getOrElse(Seq.empty)
-            }.toSet
-          if ((interveningTouched & myTouched).nonEmpty) {
-            snap = cur // overlap: prev/existence is stale — recompute
-            resolved = true
-          } else {
-            base = cur // disjoint: same files, retry the CAS
-            target = math.max(base.version + 1, target)
-          }
-        }
+      if (batch.isEmpty && prevRows.isEmpty) None
+      else {
+        val (newFiles, newStats, newCounts, newExtra) =
+          if (batch.isEmpty)
+            (Map.empty[Int, Seq[String]],
+              Map.empty[String, (String, String)],
+              Map.empty[String, Long],
+              Map.empty[String, Map[String, (String, String)]])
+          else writeDataFiles(spark, dir, batch, keyCol,
+            statsCols = inheritedStatsCols(snap))
+        val (delFiles, delCounts) =
+          if (prevRows.isEmpty) (Map.empty[Int, Seq[String]],
+            Map.empty[String, Long])
+          else writeDeleteFiles(spark, dir,
+            prevRows.select(col(keyCol))
+              .withColumn("__bucket", bucketOf(keyCol, nb)))
+        val changeFiles =
+          if (!captureChanges) None
+          else Some(writeChangeFiles(spark, dir,
+            classifyDiff(prevRows, batch.drop("__bucket"), keyCol,
+              evolved)))
+        // new data AND delete files stamp the committing version: the
+        // deletes kill strictly below it, the appended rows sit AT it
+        // and survive
+        Some((base, target) => renderManifest(myTouched,
+          appendPerBucket(base.files, myTouched, newFiles),
+          carrySchema(evolved, base.schema.getOrElse(metaSchema)),
+          base.stats ++ newStats, changeFiles,
+          commitMeta + (BaseKey -> base.version.toString),
+          base.counts ++ newCounts ++ delCounts,
+          base.extraStats ++ newExtra,
+          appendPerBucket(base.deletes, myTouched, delFiles)
+            .filter(_._2.nonEmpty),
+          base.seqs ++ (newFiles.valuesIterator.flatten ++
+            delFiles.valuesIterator.flatten).map(_ -> target)))
       }
     }
   }
@@ -1738,44 +1736,18 @@ object VersionedKeyedTable {
       commitMeta: Map[String, String] = Map.empty,
       expectedVersion: Option[Long] = None): Unit = {
     val (nb, metaSchema) = readMeta(spark, dir)
-    require(KeyedTable.readMetaKey(spark, dir).forall(_ == keyCol),
-      s"replaceAll at $dir: key '$keyCol' does not match the " +
-        s"table's recorded key column " +
-        s"(${KeyedTable.readMetaKey(spark, dir).getOrElse("none")})")
-    val fs = hfs(spark, dir)
+    requireKey(spark, dir, keyCol, "replaceAll")
     val pinned = rows.where(col(keyCol).isNotNull)
       .withColumn("__bucket", bucketOf(keyCol, nb))
       .localCheckpoint(true)
     var written: Option[(Map[Int, Seq[String]],
       Map[String, (String, String)], Map[String, Long],
       Map[String, Map[String, (String, String)]])] = None
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 10) throw new IllegalStateException(
-        s"VersionedKeyedTable at $dir: replaceAll contention " +
-          "exceeded 10 attempts")
-      val snap = snapshot(spark, dir)
-      expectedVersion.filter(_ != snap.version).foreach { v =>
-        throw new java.util.ConcurrentModificationException(
-          s"replaceAll at $dir expected version $v but found " +
-            s"${snap.version} — the replacement content was derived " +
-            "from a stale snapshot; re-run the statement")
-      }
-      val schema = snap.schema.getOrElse(metaSchema)
-      val dataFields = pinned.schema.fields.filterNot(_.name == "__bucket")
-      dataFields.foreach { f =>
-        schema.fields.find(_.name == f.name).foreach { cf =>
-          require(cf.dataType == f.dataType,
-            s"schema evolution is additive only: column '${f.name}' " +
-              s"cannot change ${cf.dataType} -> ${f.dataType}")
-        }
-      }
-      val evolved = org.apache.spark.sql.types.StructType(
-        schema.fields ++ dataFields.filterNot(f =>
-          schema.fieldNames.contains(f.name)))
-      requireNotDropped(spark, dir, dataFields.map(_.name)
-        .filterNot(schema.fieldNames.contains).toSeq)
+    // strict: a racer's commit re-diffs (or fails, if pinned)
+    commitLoop(spark, dir, "replaceAll", 10, rebaseFor = None) { snap =>
+      requireExpected("replaceAll", dir, expectedVersion, snap)
+      val evolved = evolveSchema(spark, dir,
+        snap.schema.getOrElse(metaSchema), pinned.schema)
       val (newFiles, newStats, newCounts, newExtra) = written.getOrElse {
         val w = writeDataFiles(spark, dir, pinned, keyCol,
           statsCols = inheritedStatsCols(snap))
@@ -1794,26 +1766,22 @@ object VersionedKeyedTable {
         }
       val all = (0 until nb)
         .map(b => b -> newFiles.getOrElse(b, Seq.empty)).toMap
-      val content = renderManifest(all.keySet, all, evolved, newStats,
+      Some((_, _) => renderManifest(all.keySet, all, evolved, newStats,
         changes, commitMeta + (BaseKey -> snap.version.toString),
-        newCounts, newExtra)
-      var target = snap.version + 1
-      var committed = false
-      var stale = false
-      while (!committed && !stale) {
-        if (tryCommit(fs, dir, versionPath(dir, target), content))
-          committed = true
-        else if (snapshot(spark, dir).version > snap.version)
-          stale = true // a racer landed: re-diff (or fail, if pinned)
-        else if (awaitBlockingClaim(fs, spark, dir, snap.version))
-          stale = true
-        else target = nextClaimable(fs, dir, target + 1) // torn claim
-      }
-      if (committed) return
-      // stale: the next loop iteration re-reads the snapshot — the
-      // expectedVersion guard throws there; the unpinned path re-diffs
+        newCounts, newExtra))
     }
   }
+
+  /** The row-level SQL writes' serializable gate: content derived from
+    * `expected` must not land on any other version. */
+  private def requireExpected(op: String, dir: String,
+      expected: Option[Long], snap: Snapshot): Unit =
+    expected.filter(_ != snap.version).foreach { v =>
+      throw new java.util.ConcurrentModificationException(
+        s"$op at $dir expected version $v but found " +
+          s"${snap.version} — the replacement content was derived " +
+          "from a stale snapshot; re-run the statement")
+    }
 
   /** REPLACE a SPECIFIC SET of data files in one commit: drop
     * `removeRels` from the manifest, add files written from `rows` —
@@ -1850,11 +1818,7 @@ object VersionedKeyedTable {
       captureChanges: Boolean = true,
       commitMeta: Map[String, String] = Map.empty): Unit = {
     val (nb, metaSchema) = readMeta(spark, dir)
-    require(KeyedTable.readMetaKey(spark, dir).forall(_ == keyCol),
-      s"replaceFiles at $dir: key '$keyCol' does not match the " +
-        s"table's recorded key column " +
-        s"(${KeyedTable.readMetaKey(spark, dir).getOrElse("none")})")
-    val fs = hfs(spark, dir)
+    requireKey(spark, dir, keyCol, "replaceFiles")
     val removed = removeRels.toSet
     val pinned = rows.where(col(keyCol).isNotNull)
       .withColumn("__bucket", bucketOf(keyCol, nb))
@@ -1862,19 +1826,9 @@ object VersionedKeyedTable {
     var written: Option[(Map[Int, Seq[String]],
       Map[String, (String, String)], Map[String, Long],
       Map[String, Map[String, (String, String)]])] = None
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 10) throw new IllegalStateException(
-        s"VersionedKeyedTable at $dir: replaceFiles contention " +
-          "exceeded 10 attempts")
-      val snap = snapshot(spark, dir)
-      expectedVersion.filter(_ != snap.version).foreach { v =>
-        throw new java.util.ConcurrentModificationException(
-          s"replaceFiles at $dir expected version $v but found " +
-            s"${snap.version} — the replacement content was derived " +
-            "from a stale snapshot; re-run the statement")
-      }
+    // strict: a racer's commit re-derives (or fails, if pinned)
+    commitLoop(spark, dir, "replaceFiles", 10, rebaseFor = None) { snap =>
+      requireExpected("replaceFiles", dir, expectedVersion, snap)
       val live = snap.files.values.flatten.toSet
       require(removed.subsetOf(live),
         s"replaceFiles: ${removed.diff(live).take(3).mkString(", ")} " +
@@ -1883,20 +1837,8 @@ object VersionedKeyedTable {
         "replaceFiles under pending merge-on-read deletes must " +
           "replace ALL data files (partial replacement would leave " +
           "dangling delete keys); compact() first, or scan unpruned")
-      val schema = snap.schema.getOrElse(metaSchema)
-      val dataFields = pinned.schema.fields.filterNot(_.name == "__bucket")
-      dataFields.foreach { f =>
-        schema.fields.find(_.name == f.name).foreach { cf =>
-          require(cf.dataType == f.dataType,
-            s"schema evolution is additive only: column '${f.name}' " +
-              s"cannot change ${cf.dataType} -> ${f.dataType}")
-        }
-      }
-      val evolved = org.apache.spark.sql.types.StructType(
-        schema.fields ++ dataFields.filterNot(f =>
-          schema.fieldNames.contains(f.name)))
-      requireNotDropped(spark, dir, dataFields.map(_.name)
-        .filterNot(schema.fieldNames.contains).toSeq)
+      val evolved = evolveSchema(spark, dir,
+        snap.schema.getOrElse(metaSchema), pinned.schema)
       val (newFiles, newStats, newCounts, newExtra) = written.getOrElse {
         val w = writeDataFiles(spark, dir, pinned, keyCol,
           statsCols = inheritedStatsCols(snap))
@@ -1919,29 +1861,15 @@ object VersionedKeyedTable {
       }.toMap
       val touched = manifest.keySet.filter(b =>
         manifest(b) != snap.files.getOrElse(b, Seq.empty)).toSet
-      if (touched.isEmpty) return // nothing changed: no commit
-      val content = renderManifest(touched, manifest, evolved,
+      if (touched.isEmpty) None // nothing changed: no commit
+      else Some((_, _) => renderManifest(touched, manifest, evolved,
         (snap.stats -- removed) ++ newStats, changes,
         commitMeta + (BaseKey -> snap.version.toString),
         (snap.counts -- removed) ++ newCounts,
         (snap.extraStats -- removed) ++ newExtra,
         Map.empty /* empty by the require above, or cleared by the
           full replacement */,
-        snap.seqs /* render keeps only surviving files' entries */)
-      var target = snap.version + 1
-      var committed = false
-      var stale = false
-      while (!committed && !stale) {
-        if (tryCommit(fs, dir, versionPath(dir, target), content))
-          committed = true
-        else if (snapshot(spark, dir).version > snap.version)
-          stale = true // a racer landed: the expectedVersion guard
-                       // throws on the next pass, or we re-derive
-        else if (awaitBlockingClaim(fs, spark, dir, snap.version))
-          stale = true
-        else target = nextClaimable(fs, dir, target + 1) // torn claim
-      }
-      if (committed) return
+        snap.seqs /* render keeps only surviving files' entries */))
     }
   }
 
@@ -2009,92 +1937,54 @@ object VersionedKeyedTable {
   def transact(spark: SparkSession, dir: String, keyCol: String)(
       derive: DataFrame => DataFrame): Unit = {
     val (nb, metaSchema) = readMeta(spark, dir)
-    require(KeyedTable.readMetaKey(spark, dir).forall(_ == keyCol),
-      s"transact at $dir: key '$keyCol' does not match the table's " +
-        s"recorded key column " +
-        s"(${KeyedTable.readMetaKey(spark, dir).getOrElse("none")})")
-    val fs = hfs(spark, dir)
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 10) throw new IllegalStateException(
-        s"VersionedKeyedTable at $dir: transact contention exceeded " +
-          "10 attempts")
-      val snap = snapshot(spark, dir)
+    requireKey(spark, dir, keyCol, "transact")
+    // strict: NO rebase — any intervening commit means the derivation
+    // read stale state and must re-run (orphaned files -> vacuum)
+    commitLoop(spark, dir, "transact", 10, rebaseFor = None) { snap =>
       val snapDF = read(spark, dir, Some(snap.version))
       val batch = derive(snapDF)
         .withColumn("__bucket", bucketOf(keyCol, nb))
         .localCheckpoint(true) // pin the derivation before any racer commits
       val (myTouched, batchRows) = touchedBucketsAndCount(batch)
-      if (myTouched.isEmpty) return
-      val schema = snap.schema.getOrElse(metaSchema)
-      // same additive-only rule as mutate: a derivation that changes
-      // an existing column's type would write files later reads
-      // cannot convert — refuse loudly before anything lands
-      org.apache.spark.sql.types.StructType(
-          batch.schema.fields.filterNot(_.name == "__bucket"))
-        .fields.foreach { f =>
-          schema.fields.find(_.name == f.name).foreach { cf =>
-            require(cf.dataType == f.dataType,
-              s"schema evolution is additive only: column '${f.name}' " +
-                s"cannot change ${cf.dataType} -> ${f.dataType}")
-          }
+      if (myTouched.isEmpty) None
+      else {
+        val schema = snap.schema.getOrElse(metaSchema)
+        // added columns commit nullable: the merge below unions them
+        // onto existing rows that lack them
+        val evolvedTx = evolveSchema(spark, dir, schema,
+          org.apache.spark.sql.types.StructType(
+            batch.schema.fields.map(_.copy(nullable = true))))
+        val existing = morScan(spark, dir, snap, schema, keyCol,
+          myTouched.toSeq.sorted
+            .flatMap(b => snap.files.getOrElse(b, Seq.empty)),
+          Some(myTouched))
+        val merged = existing.join(
+            keysMaybeBroadcast(batch, keyCol, batchRows),
+            Seq(keyCol), "left_anti")
+          .unionByName(batch.drop("__bucket"), allowMissingColumns = true)
+          .withColumn("__bucket", bucketOf(keyCol, nb))
+          .localCheckpoint(true)
+        val (newFiles, newStats, newCounts, newExtra) =
+          writeDataFiles(spark, dir, merged, keyCol,
+            statsCols = inheritedStatsCols(snap))
+        // key-bounded diff, as in mutateWith: the transact merge keeps
+        // every non-batch key verbatim, so only batch keys can change
+        val changeFiles = {
+          val bk = keysMaybeBroadcast(batch, keyCol, batchRows)
+          writeChangeFiles(spark, dir,
+            classifyDiff(
+              existing.join(bk, Seq(keyCol), "left_semi"),
+              merged.drop("__bucket").join(bk, Seq(keyCol), "left_semi"),
+              keyCol, evolvedTx))
         }
-      val existing = morScan(spark, dir, snap, schema, keyCol,
-        myTouched.toSeq.sorted
-          .flatMap(b => snap.files.getOrElse(b, Seq.empty)),
-        Some(myTouched))
-      val merged = existing.join(
-          keysMaybeBroadcast(batch, keyCol, batchRows),
-          Seq(keyCol), "left_anti")
-        .unionByName(batch.drop("__bucket"), allowMissingColumns = true)
-        .withColumn("__bucket", bucketOf(keyCol, nb))
-        .localCheckpoint(true)
-      val (newFiles, newStats, newCounts, newExtra) =
-        writeDataFiles(spark, dir, merged, keyCol,
-          statsCols = inheritedStatsCols(snap))
-      val evolvedTx = org.apache.spark.sql.types.StructType(
-        schema.fields ++ merged.schema.fields.filterNot(f =>
-          f.name == "__bucket" || schema.fieldNames.contains(f.name)))
-      requireNotDropped(spark, dir, merged.schema.fieldNames.toSeq
-        .filterNot(n => n == "__bucket" ||
-          schema.fieldNames.contains(n)))
-      // key-bounded diff, as in mutateWith: the transact merge keeps
-      // every non-batch key verbatim, so only batch keys can change
-      val changeFiles = {
-        val bk = keysMaybeBroadcast(batch, keyCol, batchRows)
-        writeChangeFiles(spark, dir,
-          classifyDiff(
-            existing.join(bk, Seq(keyCol), "left_semi"),
-            merged.drop("__bucket").join(bk, Seq(keyCol), "left_semi"),
-            keyCol, evolvedTx))
+        val manifest = snap.files ++
+          myTouched.toSeq.map(b => b -> newFiles.getOrElse(b, Seq.empty))
+        Some((_, _) => renderManifest(myTouched, manifest, evolvedTx,
+          snap.stats ++ newStats, Some(changeFiles),
+          Map(BaseKey -> snap.version.toString), snap.counts ++ newCounts,
+          snap.extraStats ++ newExtra, snap.deletes -- myTouched,
+          snap.seqs))
       }
-      val manifest = snap.files ++
-        myTouched.toSeq.map(b => b -> newFiles.getOrElse(b, Seq.empty))
-      // strict CAS at snapshot+1: NO rebase — any intervening commit
-      // means the derivation read stale state and must re-run
-      // strict CAS: any NEW COMPLETE version re-runs the derivation;
-      // a lost CAS with no new complete version means a TORN claim
-      // (dead weak-scheme writer) — skip past it, derivation intact
-      val content = renderManifest(myTouched, manifest, evolvedTx,
-        snap.stats ++ newStats, Some(changeFiles),
-        Map(BaseKey -> snap.version.toString), snap.counts ++ newCounts,
-        snap.extraStats ++ newExtra, snap.deletes -- myTouched,
-        snap.seqs)
-      var target = snap.version + 1
-      var committed = false
-      var stale = false
-      while (!committed && !stale) {
-        if (tryCommit(fs, dir, versionPath(dir, target), content))
-          committed = true
-        else if (snapshot(spark, dir).version > snap.version)
-          stale = true // someone really committed: re-derive
-        else if (awaitBlockingClaim(fs, spark, dir, snap.version))
-          stale = true // the blocking claim completed: re-derive
-        else target = nextClaimable(fs, dir, target + 1) // torn claim
-      }
-      if (committed) return
-      // stale: loop re-reads, re-derives, re-writes (orphans -> vacuum)
     }
   }
 
@@ -2115,15 +2005,15 @@ object VersionedKeyedTable {
           allowMissingColumns = true)
     }
 
-  /** The optimistic-commit core every keyed mutation rides: `remerge`
+  /** The copy-on-write core every keyed mutation rides: `remerge`
     * computes the touched buckets' NEW contents from their current
     * rows (`existing`, read under the additively-evolved schema) and
     * the checkpointed mutation batch (`batch`, data columns +
     * `__bucket`). It must be a pure function of its inputs — an
     * overlap conflict re-runs it against the winner's snapshot.
     * Upsert, delete, and [[merge]] are thin remerge lambdas over this
-    * one protocol, so rebase/recompute/torn-claim handling exists
-    * exactly once. */
+    * one write path; rebase, recompute and torn-claim handling are
+    * [[commitLoop]]'s. */
   private[sinks] def mutateWith(spark: SparkSession, dir: String,
       rows: DataFrame, keyCol: String,
       onBeforeCommit: () => Unit,
@@ -2137,14 +2027,7 @@ object VersionedKeyedTable {
         * instead of hinting `batch.select(keyCol)` themselves. */
       remerge: (DataFrame, DataFrame, DataFrame) => DataFrame): Unit = {
     val (nb, metaSchema) = readMeta(spark, dir)
-    // the recorded key IS the layout contract: a wrong-column mutation
-    // would hash rows into wrong buckets AND read pending MOR delete
-    // files as all-null (resurrecting deleted rows) — refuse loudly
-    require(KeyedTable.readMetaKey(spark, dir).forall(_ == keyCol),
-      s"mutation at $dir: key '$keyCol' does not match the table's " +
-        s"recorded key column " +
-        s"(${KeyedTable.readMetaKey(spark, dir).getOrElse("none")})")
-    val fs = hfs(spark, dir)
+    requireKey(spark, dir, keyCol, "mutation")
     val batch = jobPhase(spark, "checkpoint-batch") {
       rows.withColumn("__bucket", bucketOf(keyCol, nb))
         .localCheckpoint(true)
@@ -2154,39 +2037,17 @@ object VersionedKeyedTable {
     }
     if (myTouched.isEmpty) return
     val batchKeys = keysMaybeBroadcast(batch, keyCol, batchRows)
-    var snap = snapshot(spark, dir)
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 20) throw new IllegalStateException(
-        s"VersionedKeyedTable at $dir: commit contention exceeded 20 " +
-          "attempts — backlogged writers on the same buckets")
-      // merge against THIS snapshot's touched-bucket files, under
-      // the snapshot's schema EVOLVED by any columns the update batch
-      // adds (additive only; shared columns must keep their type) —
-      // old files read the added columns as null, the parquet
-      // missing-column contract the source_evolving_schema row pins.
+    commitLoop(spark, dir, "commit", 20, Some(myTouched)) { snap =>
+      // merge against THIS snapshot's touched-bucket files, under the
+      // snapshot's schema evolved by the batch's new columns.
       // `carryCols` are batch-side HELPER columns (a merge's
       // assignment inputs that are not table state — e.g. an
       // incremental view's re-derive flags): excluded from evolution,
       // visible to `remerge`, and absent from its output's schema
-      val current = snap.schema.getOrElse(metaSchema)
-      val updSchema = org.apache.spark.sql.types.StructType(
-        batch.schema.fields.filterNot(f =>
-          f.name == "__bucket" || carryCols(f.name)))
-      updSchema.fields.foreach { f =>
-        current.fields.find(_.name == f.name).foreach { cf =>
-          require(cf.dataType == f.dataType,
-            s"schema evolution is additive only: column '${f.name}' " +
-              s"cannot change ${cf.dataType} -> ${f.dataType}")
-        }
-      }
-      val evolved = org.apache.spark.sql.types.StructType(
-        current.fields ++
-          updSchema.fields.filterNot(f =>
-            current.fieldNames.contains(f.name)))
-      requireNotDropped(spark, dir, updSchema.fields.map(_.name)
-        .filterNot(current.fieldNames.contains).toSeq)
+      val evolved = evolveSchema(spark, dir,
+        snap.schema.getOrElse(metaSchema),
+        org.apache.spark.sql.types.StructType(
+          batch.schema.fields.filterNot(f => carryCols(f.name))))
       // merge against the LIVE state: pending MOR delete files of the
       // touched buckets applied under the sequence rule — the rewrite
       // below then materializes the post-delete state, CONSUMING
@@ -2218,82 +2079,24 @@ object VersionedKeyedTable {
       // O(batch) rows instead of O(touched buckets) (guide §2.3).
       val changeFiles =
         if (!captureChanges) None
-        else {
-          val bk = batchKeys
-          Some(writeChangeFiles(spark, dir,
-            classifyDiff(
-              existing.join(bk, Seq(keyCol), "left_semi"),
-              merged.drop("__bucket").join(bk, Seq(keyCol), "left_semi"),
-              keyCol, evolved)))
-        }
+        else Some(writeChangeFiles(spark, dir,
+          classifyDiff(
+            existing.join(batchKeys, Seq(keyCol), "left_semi"),
+            merged.drop("__bucket").join(batchKeys, Seq(keyCol), "left_semi"),
+            keyCol, evolved)))
       onBeforeCommit()
-      // rebase loop: re-target the SAME written files onto newer
-      // snapshots while the intervening commits stay bucket-disjoint
-      var base = snap
-      var target = base.version + 1
-      var resolved = false
-      while (!resolved) {
-        // bounded like the outer loop: a rebase retry is cheap but a
-        // pathological claim stream must still surface, not spin
-        attempts += 1
-        if (attempts > 20) throw new IllegalStateException(
-          s"VersionedKeyedTable at $dir: commit contention exceeded " +
-            "20 attempts — backlogged writers on this table")
-        val manifest = base.files ++
-          myTouched.toSeq.map(b => b -> newFiles.getOrElse(b, Seq.empty))
-        // the committed schema carries forward any columns a DISJOINT
-        // racer added (rebase keeps both evolutions additive)
-        val commitSchema = org.apache.spark.sql.types.StructType(
-          evolved.fields ++
-            base.schema.getOrElse(metaSchema).fields.filterNot(f =>
-              evolved.fieldNames.contains(f.name)))
-        if (tryCommit(fs, dir, versionPath(dir, target),
-            renderManifest(myTouched, manifest, commitSchema,
-              base.stats ++ newStats, changeFiles,
-              commitMeta + (BaseKey -> base.version.toString),
-              base.counts ++ newCounts,
-              base.extraStats ++ newExtra,
-              // touched buckets' pending deletes are CONSUMED by the
-              // rewrite; disjoint racers' entries carry forward
-              base.deletes -- myTouched,
-              base.seqs))) return
-        val cur0 = snapshot(spark, dir)
-        val cur =
-          if (cur0.version > base.version) cur0
-          else if (awaitBlockingClaim(fs, spark, dir, base.version))
-            snapshot(spark, dir) // the blocking claim completed
-          else cur0
-        if (cur.version <= base.version) {
-          // CAS lost, NO new complete version, and the bounded poll
-          // saw none appear: the claim blocking us is adjudicated
-          // TORN (a dead weak-scheme writer) — skip past every
-          // claimed name, same base, no data rewrite. Unreachable on
-          // file:// (the hard-link CAS is atomic with content, so a
-          // lost CAS always means a complete commit); on
-          // rename-claiming weak schemes a manifest is complete
-          // before its name exists, so only rename-EMULATION crashes
-          // reach here, after the poll bound.
-          target = nextClaimable(fs, dir, target + 1)
-        } else {
-          val interveningTouched =
-            (base.version + 1 to cur.version).flatMap { v =>
-              val p = versionPath(dir, v)
-              if (!fs.exists(p)) Seq.empty
-              else parseManifest(v, readVersionFile(fs, p))
-                .map(_.touched.toSeq).getOrElse(Seq.empty)
-            }.toSet
-          if ((interveningTouched & myTouched).nonEmpty) {
-            // overlap: merge inputs are stale — recompute from the
-            // winner's snapshot (puts re-apply serializably); the files
-            // just written become unreferenced (vacuum removes them)
-            snap = cur
-            resolved = true
-          } else {
-            base = cur // disjoint: rebase the same files, retry the CAS
-            target = math.max(base.version + 1, target)
-          }
-        }
-      }
+      Some((base, _) => renderManifest(myTouched,
+        base.files ++
+          myTouched.toSeq.map(b => b -> newFiles.getOrElse(b, Seq.empty)),
+        carrySchema(evolved, base.schema.getOrElse(metaSchema)),
+        base.stats ++ newStats, changeFiles,
+        commitMeta + (BaseKey -> base.version.toString),
+        base.counts ++ newCounts,
+        base.extraStats ++ newExtra,
+        // touched buckets' pending deletes are CONSUMED by the
+        // rewrite; disjoint racers' entries carry forward
+        base.deletes -- myTouched,
+        base.seqs))
     }
   }
 
@@ -2319,7 +2122,7 @@ object VersionedKeyedTable {
     * Scale: the merge join runs only over the buckets the source's
     * keys hash into — O(source + touched buckets), never O(table) —
     * and concurrent disjoint-bucket merges both commit (the
-    * rebase/recompute protocol is [[mutateWith]]'s). Schema evolution
+    * rebase/recompute protocol is [[commitLoop]]'s). Schema evolution
     * stays additive: source-only columns extend the schema, shared
     * columns must keep their type. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
@@ -2641,15 +2444,8 @@ object VersionedKeyedTable {
     * intervening commit re-diffs against the new latest. */
   def restore(spark: SparkSession, dir: String, toVersion: Long): Unit = {
     val (_, metaSchema) = readMeta(spark, dir)
-    val fs = hfs(spark, dir)
     val target = snapshot(spark, dir, Some(toVersion))
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 10) throw new IllegalStateException(
-        s"VersionedKeyedTable at $dir: restore contention exceeded " +
-          "10 attempts")
-      val cur = snapshot(spark, dir)
+    commitLoop(spark, dir, "restore", 10, rebaseFor = None) { cur =>
       // a bucket differs when its data files OR its pending MOR delete
       // files differ — restoring across a deferred delete must revive
       // (or re-impose) the delete entries with the files
@@ -2659,27 +2455,15 @@ object VersionedKeyedTable {
           cur.files.getOrElse(b, Seq.empty) ||
         target.deletes.getOrElse(b, Seq.empty) !=
           cur.deletes.getOrElse(b, Seq.empty))
-      if (touched.isEmpty) return // already at the target state
-      // metadata-only by design: no change file is computed (that
-      // would re-read the diffed buckets) — CDF spans crossing a
-      // restore take the snapshot-diff fallback
-      val content = renderManifest(touched, target.files,
+      // already at the target state: no commit. Metadata-only by
+      // design: no change file is computed (that would re-read the
+      // diffed buckets) — CDF spans crossing a restore take the
+      // snapshot-diff fallback
+      if (touched.isEmpty) None
+      else Some((_, _) => renderManifest(touched, target.files,
         target.schema.getOrElse(metaSchema), target.stats, None,
         Map(BaseKey -> cur.version.toString), target.counts,
-        target.extraStats, target.deletes, target.seqs)
-      var v = cur.version + 1
-      var committed = false
-      var stale = false
-      while (!committed && !stale) {
-        if (tryCommit(fs, dir, versionPath(dir, v), content))
-          committed = true
-        else if (snapshot(spark, dir).version > cur.version)
-          stale = true // someone committed: re-diff and retry
-        else if (awaitBlockingClaim(fs, spark, dir, cur.version))
-          stale = true
-        else v = nextClaimable(fs, dir, v + 1) // torn claim
-      }
-      if (committed) return
+        target.extraStats, target.deletes, target.seqs))
     }
   }
 
@@ -2837,10 +2621,9 @@ object VersionedKeyedTable {
   /** The shared maintenance-rewrite core behind [[compact]] and
     * [[cluster]]: pick buckets off the current snapshot, rewrite their
     * rows through `shape`, commit the relisted buckets as a
-    * CDF-invisible version (empty captured change set) under the same
-    * optimistic CAS as every mutation — an intervening writer re-runs
-    * the scan (maintenance never wins over a writer's data), bounded
-    * retries, torn claims skipped. */
+    * CDF-invisible version (empty captured change set) through a
+    * strict [[commitLoop]] — an intervening writer re-runs the scan
+    * (maintenance never wins over a writer's data). */
   private def rewriteBuckets(spark: SparkSession, dir: String,
       keyCol: String, label: String,
       pick: Snapshot => Set[Int],
@@ -2852,62 +2635,41 @@ object VersionedKeyedTable {
     // read them as all-null, drop nothing in the anti-join, and
     // permanently RESURRECT deleted rows while clearing the entries;
     // refuse before touching anything
-    require(KeyedTable.readMetaKey(spark, dir).forall(_ == keyCol),
-      s"$label at $dir: key '$keyCol' does not match the table's " +
-        s"recorded key column " +
-        s"(${KeyedTable.readMetaKey(spark, dir).getOrElse("none")})")
+    requireKey(spark, dir, keyCol, label)
     val (nb, metaSchema) = readMeta(spark, dir)
-    val fs = hfs(spark, dir)
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 5) throw new IllegalStateException(
-        s"VersionedKeyedTable at $dir: $label lost to concurrent " +
-          "writers 5 times — run it when the table is quieter")
-      val snap = snapshot(spark, dir)
+    commitLoop(spark, dir, label, 5, rebaseFor = None) { snap =>
       val picked = pick(snap)
-      if (picked.isEmpty) return
-      val schema = snap.schema.getOrElse(metaSchema)
-      // a maintenance rewrite materializes the LIVE state: pending MOR
-      // delete files of the picked buckets are applied here (sequence
-      // rule) and their entries cleared below — compact() IS the
-      // delete-purge operation
-      val rows = morScan(spark, dir, snap, schema, keyCol,
-          picked.toSeq.sorted
-            .flatMap(b => snap.files.getOrElse(b, Seq.empty)),
-          Some(picked))
-        .withColumn("__bucket", bucketOf(keyCol, nb))
-      val (newFiles, newStats, newCounts, newExtra) =
-        writeDataFiles(spark, dir,
-          shape(rows, picked.size).localCheckpoint(true), keyCol,
-          maxRecordsPerFile,
-          statsCols = (inheritedStatsCols(snap) ++ ensureStatsCols)
-            .distinct,
-          // maintenance re-writes ALREADY-COMMITTED rows: re-running
-          // the constraint guard would permanently wedge compact/
-          // cluster (and the streaming sink's auto-compaction) on a
-          // bucket poisoned through the documented addConstraint race
-          enforceConstraints = false)
-      val manifest = snap.files ++
-        picked.toSeq.map(b => b -> newFiles.getOrElse(b, Seq.empty))
-      val content = renderManifest(picked, manifest, schema,
-        snap.stats ++ newStats, Some(Seq.empty),
-        Map(BaseKey -> snap.version.toString), snap.counts ++ newCounts,
-        snap.extraStats ++ newExtra, snap.deletes -- picked,
-        snap.seqs)
-      var target = snap.version + 1
-      var committed = false
-      var stale = false
-      while (!committed && !stale) {
-        if (tryCommit(fs, dir, versionPath(dir, target), content))
-          committed = true
-        else if (snapshot(spark, dir).version > snap.version)
-          stale = true // a writer got in: re-scan and retry
-        else if (awaitBlockingClaim(fs, spark, dir, snap.version))
-          stale = true
-        else target = nextClaimable(fs, dir, target + 1) // torn claim
+      if (picked.isEmpty) None
+      else {
+        val schema = snap.schema.getOrElse(metaSchema)
+        // a maintenance rewrite materializes the LIVE state: pending
+        // MOR delete files of the picked buckets are applied here
+        // (sequence rule) and their entries cleared below — compact()
+        // IS the delete-purge operation
+        val rows = morScan(spark, dir, snap, schema, keyCol,
+            picked.toSeq.sorted
+              .flatMap(b => snap.files.getOrElse(b, Seq.empty)),
+            Some(picked))
+          .withColumn("__bucket", bucketOf(keyCol, nb))
+        val (newFiles, newStats, newCounts, newExtra) =
+          writeDataFiles(spark, dir,
+            shape(rows, picked.size).localCheckpoint(true), keyCol,
+            maxRecordsPerFile,
+            statsCols = (inheritedStatsCols(snap) ++ ensureStatsCols)
+              .distinct,
+            // maintenance re-writes ALREADY-COMMITTED rows: re-running
+            // the constraint guard would permanently wedge compact/
+            // cluster (and the streaming sink's auto-compaction) on a
+            // bucket poisoned through the documented addConstraint race
+            enforceConstraints = false)
+        val manifest = snap.files ++
+          picked.toSeq.map(b => b -> newFiles.getOrElse(b, Seq.empty))
+        Some((_, _) => renderManifest(picked, manifest, schema,
+          snap.stats ++ newStats, Some(Seq.empty),
+          Map(BaseKey -> snap.version.toString), snap.counts ++ newCounts,
+          snap.extraStats ++ newExtra, snap.deletes -- picked,
+          snap.seqs))
       }
-      if (committed) return
     }
   }
 
@@ -3393,6 +3155,41 @@ object VersionedKeyedTable {
       "meta_keys")
   }
 
+  // ---- sidecar registries (tags, constraints, properties, ingest) --
+
+  /** The four sidecar registries (`_tags`, `_constraints`, `_props`,
+    * `_ingest`) share one file format: a directory of named files, each
+    * holding one URL-encoded payload line and the `#end` marker — a
+    * file without the marker is a torn weak-scheme write and reads as
+    * ABSENT. Claim semantics stay per registry: tags and constraints
+    * are create-once ([[claimSidecar]]), properties last-writer-wins,
+    * ingest markers create-once under digest names. */
+  private def sidecarPayload(payload: String): String =
+    enc(payload) + "\n#end\n"
+
+  /** Create-once claim of a sidecar name on the claim backend (atomic
+    * with content where the scheme allows); false when it exists. */
+  private def claimSidecar(fs: FileSystem, regDir: Path, p: Path,
+      payload: String): Boolean = {
+    fs.mkdirs(regDir)
+    claimBackendFor(fs).tryClaim(fs, regDir, p, sidecarPayload(payload))
+  }
+
+  /** One sidecar's decoded payload, or None (missing or torn). */
+  private def readSidecar(fs: FileSystem, p: Path): Option[String] =
+    try {
+      val lines = readVersionFile(fs, p).split('\n')
+      if (!lines.lastOption.contains("#end")) None
+      else lines.headOption.map(dec)
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** Every complete sidecar in a registry: (decoded name, payload). */
+  private def listSidecars(fs: FileSystem,
+      regDir: Path): Seq[(String, String)] =
+    if (!fs.exists(regDir)) Seq.empty
+    else fs.listStatus(regDir).toSeq.flatMap(st =>
+      readSidecar(fs, st.getPath).map(dec(st.getPath.getName) -> _))
+
   // ---- tags ---------------------------------------------------------
 
   private def tagsDir(dir: String) = new Path(dir, "_tags")
@@ -3418,12 +3215,10 @@ object VersionedKeyedTable {
     require(name.nonEmpty && name.toLongOption.isEmpty,
       s"tag name '$name' must be non-empty and non-numeric " +
         "(numeric strings are version literals under VERSION AS OF)")
-    val fs = hfs(spark, dir)
     // the tagged version must exist and be complete — loud otherwise
     val v = snapshot(spark, dir, version).version
-    fs.mkdirs(tagsDir(dir))
-    if (claimBackendFor(fs).tryClaim(fs, tagsDir(dir),
-        tagPath(dir, name), s"$v\n#end\n")) v
+    if (claimSidecar(hfs(spark, dir), tagsDir(dir), tagPath(dir, name),
+        v.toString)) v
     else tagVersion(spark, dir, name) match {
       case Some(existing) if existing == v => v // idempotent re-tag
       case Some(existing) => throw new IllegalStateException(
@@ -3437,27 +3232,14 @@ object VersionedKeyedTable {
 
   /** The version a tag resolves to, or None (missing or torn). */
   def tagVersion(spark: SparkSession, dir: String,
-      name: String): Option[Long] = {
-    val fs = hfs(spark, dir)
-    val p = tagPath(dir, name)
-    if (!fs.exists(p)) None
-    else {
-      val txt = readVersionFile(fs, p)
-      // torn weak-scheme writes lack the end marker: not a tag
-      if (!txt.split('\n').lastOption.contains("#end")) None
-      else txt.split('\n').headOption.flatMap(_.toLongOption)
-    }
-  }
+      name: String): Option[Long] =
+    readSidecar(hfs(spark, dir), tagPath(dir, name))
+      .flatMap(_.toLongOption)
 
   /** Every live tag: name → version (torn remnants skipped). */
-  def tags(spark: SparkSession, dir: String): Map[String, Long] = {
-    val fs = hfs(spark, dir)
-    val td = tagsDir(dir)
-    if (!fs.exists(td)) Map.empty
-    else fs.listStatus(td).toSeq.map(_.getPath.getName)
-      .flatMap(n => tagVersion(spark, dir, dec(n)).map(dec(n) -> _))
-      .toMap
-  }
+  def tags(spark: SparkSession, dir: String): Map[String, Long] =
+    listSidecars(hfs(spark, dir), tagsDir(dir))
+      .flatMap { case (n, v) => v.toLongOption.map(n -> _) }.toMap
 
   /** Remove a tag (releases its vacuum retention). Returns whether
     * anything was removed. */
@@ -3540,10 +3322,9 @@ object VersionedKeyedTable {
   private def registerConstraint(spark: SparkSession, dir: String,
       name: String, check: String): Unit = {
     val fs = hfs(spark, dir)
-    fs.mkdirs(constraintsDir(dir))
-    if (!claimBackendFor(fs).tryClaim(fs, constraintsDir(dir),
-        constraintPath(dir, name), enc(check) + "\n#end\n")) {
-      constraints(spark, dir).get(name) match {
+    val p = constraintPath(dir, name)
+    if (!claimSidecar(fs, constraintsDir(dir), p, check)) {
+      readSidecar(fs, p) match {
         case Some(existing) if existing == check => () // idempotent
         case Some(existing) => throw new IllegalStateException(
           s"constraint '$name' at $dir already holds CHECK " +
@@ -3564,17 +3345,8 @@ object VersionedKeyedTable {
 
   /** Every live constraint: name → CHECK predicate (torn remnants
     * skipped, like torn tags). */
-  def constraints(spark: SparkSession, dir: String): Map[String, String] = {
-    val fs = hfs(spark, dir)
-    val cd = constraintsDir(dir)
-    if (!fs.exists(cd)) Map.empty
-    else fs.listStatus(cd).toSeq.map(_.getPath.getName).flatMap { n =>
-      val txt = readVersionFile(fs, new Path(cd, n))
-      val lines = txt.split('\n')
-      if (!lines.lastOption.contains("#end")) None // torn weak-scheme write
-      else lines.headOption.map(h => dec(n) -> dec(h))
-    }.toMap
-  }
+  def constraints(spark: SparkSession, dir: String): Map[String, String] =
+    listSidecars(hfs(spark, dir), constraintsDir(dir)).toMap
 
   /** The enforcement hook: fold each live constraint into the write
     * plan as a per-row guard — `assert_true` throws (failing the write
@@ -3631,7 +3403,7 @@ object VersionedKeyedTable {
     val fs = hfs(spark, dir)
     fs.mkdirs(propsDir(dir))
     val out = fs.create(propPath(dir, name), true)
-    try out.write((enc(value) + "\n#end\n").getBytes("UTF-8"))
+    try out.write(sidecarPayload(value).getBytes("UTF-8"))
     finally out.close()
   }
 
@@ -3641,29 +3413,13 @@ object VersionedKeyedTable {
     hfs(spark, dir).delete(propPath(dir, name), false)
 
   /** Every live table property (torn sidecars read as absent). */
-  def properties(spark: SparkSession, dir: String): Map[String, String] = {
-    val fs = hfs(spark, dir)
-    val pd = propsDir(dir)
-    if (!fs.exists(pd)) Map.empty
-    else fs.listStatus(pd).toSeq.map(_.getPath.getName).flatMap { n =>
-      val lines = readVersionFile(fs, new Path(pd, n)).split('\n')
-      if (!lines.lastOption.contains("#end")) None
-      else lines.headOption.map(h => dec(n) -> dec(h))
-    }.toMap
-  }
+  def properties(spark: SparkSession, dir: String): Map[String, String] =
+    listSidecars(hfs(spark, dir), propsDir(dir)).toMap
 
   /** One table property, or None. */
   def property(spark: SparkSession, dir: String,
-      name: String): Option[String] = {
-    val fs = hfs(spark, dir)
-    val p = propPath(dir, name)
-    if (!fs.exists(p)) None
-    else {
-      val lines = readVersionFile(fs, p).split('\n')
-      if (!lines.lastOption.contains("#end")) None
-      else lines.headOption.map(dec)
-    }
-  }
+      name: String): Option[String] =
+    readSidecar(hfs(spark, dir), propPath(dir, name))
 
   // ---- ADDITIVE SCHEMA EVOLUTION (the ALTER TABLE ADD COLUMNS face) --
 
@@ -3689,15 +3445,9 @@ object VersionedKeyedTable {
       s"addColumns: new column '${f.name}' must be nullable — " +
         "existing rows have no value for it"))
     val (_, metaSchema) = readMeta(spark, dir)
-    val fs = hfs(spark, dir)
     val resolver = spark.sessionState.analyzer.resolver
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 10) throw new IllegalStateException(
-        s"VersionedKeyedTable at $dir: addColumns contention exceeded " +
-          "10 attempts")
-      val cur = snapshot(spark, dir)
+    // strict: a racer's commit re-checks collisions against its schema
+    commitLoop(spark, dir, "addColumns", 10, rebaseFor = None) { cur =>
       val schema = cur.schema.getOrElse(metaSchema)
       newCols.foreach { f =>
         require(!schema.fieldNames.exists(resolver(_, f.name)),
@@ -3713,24 +3463,11 @@ object VersionedKeyedTable {
         schema.fields ++ newCols)
       // metadata-only, CDF-captured as EMPTY (no row changed): spans
       // crossing it stay on the O(changed rows) change-file path
-      val content = renderManifest(Set.empty, cur.files, evolved,
+      Some((_, _) => renderManifest(Set.empty, cur.files, evolved,
         cur.stats, Some(Seq.empty),
         Map(BaseKey -> cur.version.toString,
           "graft.alter.addColumns" -> newCols.map(_.name).mkString(",")),
-        cur.counts, cur.extraStats, cur.deletes, cur.seqs)
-      var v = cur.version + 1
-      var committed = false
-      var stale = false
-      while (!committed && !stale) {
-        if (tryCommit(fs, dir, versionPath(dir, v), content))
-          committed = true
-        else if (snapshot(spark, dir).version > cur.version)
-          stale = true // someone committed: re-check collisions, retry
-        else if (awaitBlockingClaim(fs, spark, dir, cur.version))
-          stale = true
-        else v = nextClaimable(fs, dir, v + 1) // torn claim
-      }
-      if (committed) return
+        cur.counts, cur.extraStats, cur.deletes, cur.seqs))
     }
   }
 
@@ -3786,7 +3523,6 @@ object VersionedKeyedTable {
     * size. */
   def dropColumn(spark: SparkSession, dir: String, name: String): Unit = {
     val (_, metaSchema) = readMeta(spark, dir)
-    val fs = hfs(spark, dir)
     val resolver = spark.sessionState.analyzer.resolver
     KeyedTable.readMetaKey(spark, dir).foreach { k =>
       require(!resolver(k, name),
@@ -3803,13 +3539,8 @@ object VersionedKeyedTable {
         s"cannot drop '$name': constraint '$cn' CHECK ($check) " +
           "references it — drop the constraint first")
     }
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 10) throw new IllegalStateException(
-        s"VersionedKeyedTable at $dir: dropColumn contention exceeded " +
-          "10 attempts")
-      val cur = snapshot(spark, dir)
+    // strict: a racer's commit re-resolves the column on its schema
+    commitLoop(spark, dir, "dropColumn", 10, rebaseFor = None) { cur =>
       val schema = cur.schema.getOrElse(metaSchema)
       val field = schema.fields.find(f => resolver(f.name, name))
         .getOrElse(throw new IllegalArgumentException(
@@ -3824,25 +3555,12 @@ object VersionedKeyedTable {
       val prunedExtra = cur.extraStats
         .map { case (f, m) => f -> (m - field.name) }
         .filter(_._2.nonEmpty)
-      val content = renderManifest(Set.empty, cur.files,
+      Some((_, _) => renderManifest(Set.empty, cur.files,
         org.apache.spark.sql.types.StructType(remaining),
         cur.stats, Some(Seq.empty),
         Map(BaseKey -> cur.version.toString,
           "graft.alter.dropColumn" -> field.name),
-        cur.counts, prunedExtra, cur.deletes, cur.seqs)
-      var v = cur.version + 1
-      var committed = false
-      var stale = false
-      while (!committed && !stale) {
-        if (tryCommit(fs, dir, versionPath(dir, v), content))
-          committed = true
-        else if (snapshot(spark, dir).version > cur.version)
-          stale = true // someone committed: re-resolve, retry
-        else if (awaitBlockingClaim(fs, spark, dir, cur.version))
-          stale = true
-        else v = nextClaimable(fs, dir, v + 1) // torn claim
-      }
-      if (committed) return
+        cur.counts, prunedExtra, cur.deletes, cur.seqs))
     }
   }
 
@@ -3878,21 +3596,11 @@ object VersionedKeyedTable {
     * encoded the identity in the filename — content "1" — still
     * resolve). Torn markers (no `#end`) are skipped: the worst case is
     * one redundant, idempotent re-ingest. */
-  def ingestedFiles(spark: SparkSession, dir: String): Set[String] = {
-    val fs = hfs(spark, dir)
-    val id = ingestDir(dir)
-    if (!fs.exists(id)) Set.empty
-    else fs.listStatus(id).toSeq.flatMap { s =>
-      val txt = readVersionFile(fs, s.getPath)
-      val lines = txt.split('\n')
-      if (!lines.lastOption.contains("#end")) None // torn marker
-      else lines.headOption match {
-        case Some("1") => Some(dec(s.getPath.getName)) // legacy marker
-        case Some(h) => Some(dec(h))
-        case None => None
-      }
+  def ingestedFiles(spark: SparkSession, dir: String): Set[String] =
+    listSidecars(hfs(spark, dir), ingestDir(dir)).map {
+      case (legacyName, "1") => legacyName // legacy marker
+      case (_, id) => id
     }.toSet
-  }
 
   /** Idempotent bulk file ingest — the `COPY INTO` shape: load every
     * DATA FILE under `sourceDir` the table has not already ingested,
@@ -3963,12 +3671,9 @@ object VersionedKeyedTable {
     // repeatedly cannot land means that file re-ingests every run —
     // convergent but not a no-op) and never fail the call: the data
     // commit already succeeded.
-    fs.mkdirs(ingestDir(dir))
-    val backend = claimBackendFor(fs)
     ids.foreach { id =>
       val p = new Path(ingestDir(dir), ingestMarkerName(id))
-      if (!backend.tryClaim(fs, ingestDir(dir), p,
-          enc(id) + "\n#end\n") && !fs.exists(p))
+      if (!claimSidecar(fs, ingestDir(dir), p, id) && !fs.exists(p))
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           s"ingestFiles at $dir: could not record ingest marker for " +
             s"'$id' — this source file will re-ingest (idempotently) " +

@@ -260,6 +260,81 @@ class VersionedKeyedTableSpec extends AnyFunSuite {
       "the latest complete version survives retention")
   }
 
+  test("every commit entry point skips a torn claim at latest+1: it " +
+      "commits at latest+2 and reads back the expected rows") {
+    val base = (1L to 30L).map(i => i -> s"v$i").toMap
+    def rows(kvs: (Long, String)*) = kvs.toDF("k", "v")
+    val vkt = VersionedKeyedTable
+    val x = Seq(org.apache.spark.sql.types.StructField("x",
+      org.apache.spark.sql.types.LongType))
+    val none: String => Unit = _ => ()
+    val kv = Seq("k", "v")
+    // (entry point, set-up after create, the call, rows and columns
+    // it leaves)
+    val cases: Seq[(String, String => Unit, String => Unit,
+        Map[Long, String], Seq[String])] = Seq(
+      ("upsertMor", none,
+        d => vkt.upsertMor(spark, d, rows(1L -> "M1", 31L -> "M31"), "k"),
+        base ++ Map(1L -> "M1", 31L -> "M31"), kv),
+      ("deleteMor", none,
+        d => vkt.deleteMor(spark, d, Seq(2L).toDF("k"), "k"),
+        base - 2L, kv),
+      ("mutateMor", none,
+        d => vkt.mutateMor(spark, d, rows(3L -> "P3"),
+          Some(Seq(4L).toDF("k")), "k"),
+        base + (3L -> "P3") - 4L, kv),
+      ("replaceAll", none,
+        d => vkt.replaceAll(spark, d, rows(1L -> "R1", 2L -> "R2"), "k"),
+        Map(1L -> "R1", 2L -> "R2"), kv),
+      ("replaceFiles", none,
+        d => {
+          val snap = vkt.snapshot(spark, d)
+          vkt.replaceFiles(spark, d, snap.files.values.flatten.toSeq,
+            rows(5L -> "F5"), "k", Some(snap.version))
+        },
+        Map(5L -> "F5"), kv),
+      ("merge", none,
+        d => vkt.merge(spark, d, rows(6L -> "G6", 32L -> "G32"), "k",
+          whenMatchedUpdate = Map("v" -> col("s.v"))),
+        base ++ Map(6L -> "G6", 32L -> "G32"), kv),
+      ("transact", none,
+        d => vkt.transact(spark, d, "k")(snap => snap
+          .where(col("k") === 7L).select(col("k"), lit("T7").as("v"))),
+        base + (7L -> "T7"), kv),
+      ("restore", d => vkt.upsert(spark, d, rows(8L -> "U8"), "k"),
+        d => vkt.restore(spark, d, 1L),
+        base, kv),
+      ("compact", d => vkt.upsertMor(spark, d, rows(9L -> "C9"), "k"),
+        d => vkt.compact(spark, d, "k"),
+        base + (9L -> "C9"), kv),
+      ("cluster", none,
+        d => vkt.cluster(spark, d, "k", targetRowsPerFile = 4L),
+        base, kv),
+      ("addColumns", none,
+        d => vkt.addColumns(spark, d, x),
+        base, kv :+ "x"),
+      ("dropColumn", d => vkt.addColumns(spark, d, x),
+        d => vkt.dropColumn(spark, d, "x"),
+        base, kv))
+    cases.foreach { case (name, setUp, call, expected, columns) =>
+      val dir = freshDir()
+      vkt.create(base.toSeq.toDF("k", "v"), dir, "k", numBuckets = 4)
+      setUp(dir)
+      val latest = vkt.snapshot(spark, dir).version
+      // a crashed weak-scheme writer's claim: no '#end' marker
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(f"$dir/_versions/v${latest + 1}%012d"),
+        "touched\t0\n0\tdata/ghost.parquet\n".getBytes("UTF-8"))
+      call(dir)
+      assert(vkt.snapshot(spark, dir).version === latest + 2,
+        s"$name commits past the torn claim")
+      val got = vkt.read(spark, dir)
+      assert(got.columns.toSeq === columns, s"$name columns")
+      assert(got.select("k", "v").as[(Long, String)].collect().toMap ===
+        expected, s"$name rows")
+    }
+  }
+
   test("merge: three-clause MERGE INTO — matched-delete, matched-update " +
       "with t/s expressions, not-matched-insert, untouched non-matches") {
     val dir = freshDir()
