@@ -1205,19 +1205,38 @@ object VersionedKeyedTable {
       snap.schema.getOrElse(metaSchema))
   }
 
+  /** The buckets a DRIVER-HELD key list routes to, with no Spark
+    * job: the keys become a LocalRelation, cast to the table's key
+    * type (xxhash64 is physical-type-sensitive: hash of 5: Int != 5:
+    * Long) and bucketed by the one `bucketOf` expression. The
+    * optimizer folds that projection into the local rows
+    * (ConvertToLocalRelation) and the collect reads them on the
+    * driver — the in-process routing of the reference's
+    * HashingSharder, under Spark's exact cast and hash semantics (an
+    * ANSI cast overflow raises as it would in a scan). The set
+    * dedupes: a `distinct()` would plan an exchange and two jobs. */
+  private[sinks] def keyBuckets(spark: SparkSession, keyCol: String,
+      keys: Either[Seq[Long], Seq[String]],
+      keyType: org.apache.spark.sql.types.DataType, nb: Int): Set[Int] = {
+    import spark.implicits._
+    keys.fold(_.toDF(keyCol), _.toDF(keyCol))
+      .select(col(keyCol).cast(keyType).as(keyCol))
+      .select(bucketOf(keyCol, nb))
+      .collect().iterator.map(_.getInt(0)).toSet
+  }
+
   /** [[keyFiles]] against an ALREADY-RESOLVED snapshot — so a read can
     * prune and scan under ONE snapshot (resolving twice would both
     * double the log I/O and open a window where the kept files and the
-    * schema come from different versions). */
+    * schema come from different versions). The keys route to their
+    * buckets on the driver ([[keyBuckets]]), so pruning launches no
+    * Spark job. */
   private def keyFilesOf(spark: SparkSession, dir: String,
       keyCol: String, keys: Seq[Long], snap: Snapshot, nb: Int,
       schema: org.apache.spark.sql.types.StructType)
       : (Seq[String], Int) = {
-    import spark.implicits._
-    val wanted = keys.toDF(keyCol)
-      .select(col(keyCol).cast(schema(keyCol).dataType).as(keyCol))
-      .select(bucketOf(keyCol, nb)).distinct()
-      .collect().map(_.getInt(0)).toSet // bounded by numBuckets
+    val wanted = keyBuckets(spark, keyCol, Left(keys),
+      schema(keyCol).dataType, nb)
     val candidate = snap.files.filter(e => wanted(e._1))
       .values.flatten.toSeq
     // numeric zone checks only for INTEGRAL keys: string-ordered
@@ -1365,15 +1384,19 @@ object VersionedKeyedTable {
   /** Persist a MOR delete batch's keys as immutable per-bucket files
     * under `data/dl-<uuid>`; returns bucket → relative paths and each
     * file's ROW COUNT (always recorded — what keeps COUNT(*)
-    * metadata-only under deferred deletes). */
+    * metadata-only under deferred deletes). An empty batch writes no
+    * file and returns empty maps: the write IS the emptiness check,
+    * so callers need no separate probe job. */
   private def writeDeleteFiles(spark: SparkSession, dir: String,
       doomedKeys: DataFrame /* keyCol + __bucket */)
       : (Map[Int, Seq[String]], Map[String, Long]) = {
     val rel = s"data/dl-${java.util.UUID.randomUUID()}"
-    doomedKeys.write.partitionBy("__bucket").parquet(s"$dir/$rel")
+    jobPhase(spark, "write-data") {
+      doomedKeys.write.partitionBy("__bucket").parquet(s"$dir/$rel")
+    }
     val fs = hfs(spark, dir)
     val base = new Path(s"$dir/$rel")
-    val fileSts = fs.listStatus(base).toSeq
+    val fileSts = (if (fs.exists(base)) fs.listStatus(base).toSeq else Nil)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("__bucket="))
       .map { d =>
         val b = d.getPath.getName.stripPrefix("__bucket=").toInt
@@ -1383,7 +1406,10 @@ object VersionedKeyedTable {
     val files = fileSts.map { case (b, sts) =>
       b -> sts.map(f => s"$rel/__bucket=${b}/${f.getPath.getName}")
     }
-    if (files.isEmpty) return (Map.empty, Map.empty)
+    if (files.isEmpty) { // no doomed key: leave no empty commit dir
+      fs.delete(base, true)
+      return (Map.empty, Map.empty)
+    }
     // per-file row counts straight from the freshly written parquet
     // footers: zero Spark jobs for the delete-file count pass
     val per = jobPhase(spark, "file-stats") {
@@ -1420,8 +1446,18 @@ object VersionedKeyedTable {
     * double-count — and each live delete file's keys appear in no
     * other live delete file, the invariant exact metadata counts rest
     * on. CDF: the commit captures ordinary delete change rows (with
-    * `_prev` values) from the same semi-join, so views, replicas and
-    * streams cannot tell deferred from copy-on-write deletes.
+    * `_prev` values) by projecting the same semi-join's rows, so
+    * views, replicas and streams cannot tell deferred from
+    * copy-on-write deletes.
+    *
+    * Jobs: a batch of at most [[MaxPointLookupKeys]] keys (integral
+    * or string key) is fetched once ([[pointLookupKeys]]) and routed
+    * to its buckets on the driver, so routing, the existence filter
+    * and the emptiness check (the delete-file write's own result)
+    * launch no job of their own — the checkpointed batch, the key
+    * take, the existence read, the delete-file write and the CDF
+    * write are the commit's jobs. Larger batches find their buckets
+    * with one map-only pass and semi-join shuffled.
     * Concurrency is [[commitLoop]]'s: disjoint racers rebase (my
     * delete files stay valid — their buckets' data and delete entries
     * are untouched), overlap re-runs the existence check. */
@@ -1433,30 +1469,35 @@ object VersionedKeyedTable {
     // a MOR delete under a different (or unrecorded) key would write
     // files no reader could ever apply
     requireKey(spark, dir, keyCol, "deleteMor", recorded = true)
-    val batch = keys.select(col(keyCol))
-      .where(col(keyCol).isNotNull).distinct()
-      .withColumn("__bucket", bucketOf(keyCol, nb))
-      .localCheckpoint(true)
-    val myTouched = touchedBuckets(batch) // bounded by numBuckets
+    val batch = jobPhase(spark, "checkpoint-batch") {
+      keys.select(col(keyCol))
+        .where(col(keyCol).isNotNull).distinct()
+        .withColumn("__bucket", bucketOf(keyCol, nb))
+        .localCheckpoint(true)
+    }
+    val (keyList, myTouched) = boundedKeysAndBuckets(spark, batch,
+      keyCol, metaSchema(keyCol).dataType, nb)
     if (myTouched.isEmpty) return
-    val keyList = pointLookupKeys(batch, keyCol, metaSchema(keyCol).dataType)
     commitLoop(spark, dir, "deleteMor", 20, Some(myTouched)) { snap =>
       val schema = snap.schema.getOrElse(metaSchema)
       val doomedRows = visibleRows(spark, dir, snap, schema, nb, batch,
         keyCol, keyList, myTouched)
-      if (doomedRows.isEmpty) None // nothing exists to delete
+      val (delFiles, delCounts) = writeDeleteFiles(spark, dir,
+        doomedRows.select(col(keyCol))
+          .withColumn("__bucket", bucketOf(keyCol, nb)))
+      if (delFiles.isEmpty) None // nothing exists to delete
       else {
-        val (delFiles, delCounts) = writeDeleteFiles(spark, dir,
-          doomedRows.select(col(keyCol))
-            .withColumn("__bucket", bucketOf(keyCol, nb)))
+        // every doomed row is a delete: the key, no new values, the
+        // old values as `_prev` — classifyDiff's columns and order
+        val dataCols = schema.fieldNames.filterNot(_ == keyCol).toSeq
         val changeFiles =
           if (!captureChanges) None
           else Some(writeChangeFiles(spark, dir,
-            classifyDiff(doomedRows,
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                schema),
-              keyCol, schema)))
+            doomedRows.select((col(keyCol) +:
+              lit("delete").as("change_type") +:
+              (dataCols.map(c =>
+                lit(null).cast(schema(c).dataType).as(c)) ++
+                dataCols.map(c => col(c).as(s"${c}_prev")))): _*)))
         // disjoint racers keep my delete files valid; the files are
         // SEQUENCE-STAMPED with the committing version: they kill below
         // it, so rows a LATER upsertMor appends (higher sequence) live
@@ -1475,11 +1516,14 @@ object VersionedKeyedTable {
     * DRIVER-BOUNDED batches prune that read through the zone maps and
     * blooms: a surgical delete on a clustered 100 TB table reads the
     * few COVERING files, never whole buckets — the pruning is
-    * conservative, and the semi-join is the exact residual either way.
-    * None (unbounded batch, or a date/timestamp key) reads the touched
-    * buckets: still O(touched region), no rewrite. One take(cap+1) both
-    * decides boundedness and fetches the keys — a count()+collect()
-    * pair would cost two jobs per commit. */
+    * conservative, and the key filter is the exact residual either
+    * way. None (unbounded batch, or a date/timestamp key) reads the
+    * touched buckets: still O(touched region), no rewrite. One
+    * take(cap+1) both decides boundedness and fetches the keys — a
+    * count()+collect() pair would cost two jobs per commit — and the
+    * fetched list is all the commit needs of the batch's keys from
+    * then on: [[boundedKeysAndBuckets]] routes it, [[visibleRows]]
+    * filters by it. */
   private def pointLookupKeys(keys: DataFrame, keyCol: String,
       keyType: org.apache.spark.sql.types.DataType)
       : Option[Either[Seq[Long], Seq[String]]] = keyType match {
@@ -1495,31 +1539,51 @@ object VersionedKeyedTable {
     case _ => None
   }
 
+  /** The batch's bounded key list ([[pointLookupKeys]], one job) and
+    * the buckets it touches. A bounded list routes on the driver
+    * ([[keyBuckets]], no job), under the table's key type; an
+    * unbounded batch finds its buckets with [[touchedBuckets]]'
+    * map-only pass over its `__bucket` column. */
+  private def boundedKeysAndBuckets(spark: SparkSession,
+      batch: DataFrame, keyCol: String,
+      keyType: org.apache.spark.sql.types.DataType, nb: Int)
+      : (Option[Either[Seq[Long], Seq[String]]], Set[Int]) =
+    jobPhase(spark, "touched-buckets") {
+      val keyList = pointLookupKeys(batch, keyCol, keyType)
+      (keyList, keyList match {
+        case Some(ks) => keyBuckets(spark, keyCol, ks, keyType, nb)
+        case None => touchedBuckets(batch) // bounded by numBuckets
+      })
+    }
+
   /** The rows of `snap` VISIBLE under the merge-on-read state whose
     * keys `keys` carries — what a MoR commit deletes or replaces —
     * pinned before any racer commits or vacuums. A bounded `keyList`
-    * proves the key set is at most [[MaxPointLookupKeys]] rows, so
-    * only then is it broadcast (guide §3.1); unbounded batches join
+    * (at most [[MaxPointLookupKeys]] keys, already on the driver)
+    * prunes the files through [[keyFilesOf]] and filters the rows
+    * with an IN list, as [[readKeys]] does — no key relation to
+    * build, so no broadcast job; unbounded batches semi-join
     * shuffled. */
   private def visibleRows(spark: SparkSession, dir: String,
       snap: Snapshot, schema: org.apache.spark.sql.types.StructType,
       nb: Int, keys: DataFrame, keyCol: String,
       keyList: Option[Either[Seq[Long], Seq[String]]],
       touched: Set[Int]): DataFrame = {
-    val rels: Seq[String] = keyList match {
+    def scan(rels: Seq[String]) =
+      morScan(spark, dir, snap, schema, keyCol, rels, Some(touched))
+    val rows = keyList match {
       case Some(Left(ks)) =>
-        keyFilesOf(spark, dir, keyCol, ks, snap, nb, schema)._1
+        scan(keyFilesOf(spark, dir, keyCol, ks, snap, nb, schema)._1)
+          .where(col(keyCol).isin(ks: _*))
       case Some(Right(ss)) =>
-        keyFilesStrOf(spark, dir, keyCol, ss, snap, nb, schema)._1
-      case None => touched.toSeq.sorted
-        .flatMap(b => snap.files.getOrElse(b, Seq.empty))
+        scan(keyFilesStrOf(spark, dir, keyCol, ss, snap, nb, schema)._1)
+          .where(col(keyCol).isin(ss: _*))
+      case None =>
+        scan(touched.toSeq.sorted
+            .flatMap(b => snap.files.getOrElse(b, Seq.empty)))
+          .join(keys.select(col(keyCol)), Seq(keyCol), "left_semi")
     }
-    val keyRel =
-      if (keyList.isDefined) broadcast(keys.select(col(keyCol)))
-      else keys.select(col(keyCol))
-    morScan(spark, dir, snap, schema, keyCol, rels, Some(touched))
-      .join(keyRel, Seq(keyCol), "left_semi")
-      .localCheckpoint(true)
+    jobPhase(spark, "checkpoint-merged")(rows.localCheckpoint(true))
   }
 
   /** `cur` with `add`'s files appended to each of `buckets`' lists. */
@@ -1593,18 +1657,22 @@ object VersionedKeyedTable {
       expectedVersion: Option[Long] = None): Unit = {
     val (nb, metaSchema) = readMeta(spark, dir)
     requireKey(spark, dir, keyCol, "upsertMor", recorded = true)
-    val batch = rows.where(col(keyCol).isNotNull)
-      .dropDuplicates(keyCol)
-      .withColumn("__bucket", bucketOf(keyCol, nb))
-      .localCheckpoint(true)
+    val batch = jobPhase(spark, "checkpoint-batch") {
+      rows.where(col(keyCol).isNotNull)
+        .dropDuplicates(keyCol)
+        .withColumn("__bucket", bucketOf(keyCol, nb))
+        .localCheckpoint(true)
+    }
     // delete-only keys: doomed keys NOT re-put by this same commit (a
     // key in both is an update — its delete entry comes from the
     // existence semi-join below, like any replaced key)
-    val doomed = deleteKeys.map(_.select(col(keyCol))
-        .where(col(keyCol).isNotNull).distinct()
-        .join(batch.select(col(keyCol)), Seq(keyCol), "left_anti")
-        .withColumn("__bucket", bucketOf(keyCol, nb))
-        .localCheckpoint(true))
+    val doomed = deleteKeys.map(dk => jobPhase(spark, "checkpoint-batch") {
+        dk.select(col(keyCol))
+          .where(col(keyCol).isNotNull).distinct()
+          .join(batch.select(col(keyCol)), Seq(keyCol), "left_anti")
+          .withColumn("__bucket", bucketOf(keyCol, nb))
+          .localCheckpoint(true)
+      })
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq(
@@ -1613,11 +1681,13 @@ object VersionedKeyedTable {
             org.apache.spark.sql.types.IntegerType)))))
     val allKeys = batch.select(col(keyCol), col("__bucket"))
       .unionByName(doomed.select(col(keyCol), col("__bucket")))
-    val myTouched = touchedBuckets(
-      allKeys.select(col("__bucket"))) // bounded by numBuckets
+    val (keyList, myTouched) = boundedKeysAndBuckets(spark, allKeys,
+      keyCol, metaSchema(keyCol).dataType, nb)
     if (myTouched.isEmpty) return
-    val keyList = pointLookupKeys(allKeys, keyCol,
-      metaSchema(keyCol).dataType)
+    // with no delete keys every touched key is a put, so the batch is
+    // non-empty; otherwise one probe, shared by every attempt
+    val putsEmpty = deleteKeys.isDefined &&
+      jobPhase(spark, "checkpoint-batch")(batch.isEmpty)
     // the serializable gate (expectedVersion set): the puts/deletes
     // were DERIVED from that snapshot's rows — any intervening commit
     // (even a bucket-disjoint one: the statement's WHERE may have read
@@ -1645,23 +1715,21 @@ object VersionedKeyedTable {
       // the rows this commit REPLACES OR DELETES — visible state only
       val prevRows = visibleRows(spark, dir, snap, evolved, nb, allKeys,
         keyCol, keyList, myTouched)
+      val (newFiles, newStats, newCounts, newExtra) =
+        if (putsEmpty)
+          (Map.empty[Int, Seq[String]],
+            Map.empty[String, (String, String)],
+            Map.empty[String, Long],
+            Map.empty[String, Map[String, (String, String)]])
+        else writeDataFiles(spark, dir, batch, keyCol,
+          statsCols = inheritedStatsCols(snap))
+      // the delete-file write reports whether any replaced row exists
+      val (delFiles, delCounts) = writeDeleteFiles(spark, dir,
+        prevRows.select(col(keyCol))
+          .withColumn("__bucket", bucketOf(keyCol, nb)))
       // a pure delete of ABSENT keys is a no-op, like deleteMor's
-      if (batch.isEmpty && prevRows.isEmpty) None
+      if (putsEmpty && delFiles.isEmpty) None
       else {
-        val (newFiles, newStats, newCounts, newExtra) =
-          if (batch.isEmpty)
-            (Map.empty[Int, Seq[String]],
-              Map.empty[String, (String, String)],
-              Map.empty[String, Long],
-              Map.empty[String, Map[String, (String, String)]])
-          else writeDataFiles(spark, dir, batch, keyCol,
-            statsCols = inheritedStatsCols(snap))
-        val (delFiles, delCounts) =
-          if (prevRows.isEmpty) (Map.empty[Int, Seq[String]],
-            Map.empty[String, Long])
-          else writeDeleteFiles(spark, dir,
-            prevRows.select(col(keyCol))
-              .withColumn("__bucket", bucketOf(keyCol, nb)))
         val changeFiles =
           if (!captureChanges) None
           else Some(writeChangeFiles(spark, dir,
@@ -2887,14 +2955,12 @@ object VersionedKeyedTable {
       keyCol: String, keys: Seq[String], snap: Snapshot, nb: Int,
       schema: org.apache.spark.sql.types.StructType)
       : (Seq[String], Int) = {
-    import spark.implicits._
     require(schema(keyCol).dataType ==
         org.apache.spark.sql.types.StringType,
       s"keyFilesStr probes STRING keys; '$keyCol' is " +
         s"${schema(keyCol).dataType} — use keyFiles/readKeys")
-    val wanted = keys.toDF(keyCol)
-      .select(bucketOf(keyCol, nb)).distinct()
-      .collect().map(_.getInt(0)).toSet // bounded by numBuckets
+    val wanted = keyBuckets(spark, keyCol, Right(keys),
+      org.apache.spark.sql.types.StringType, nb)
     val candidate = snap.files.filter(e => wanted(e._1))
       .values.flatten.toSeq
     // string-order zone check against the native string envelopes —

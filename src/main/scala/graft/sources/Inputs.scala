@@ -15,6 +15,43 @@ import scala.collection.mutable
   */
 object Inputs {
 
+  /** `spark.read.parquet(path)` — the same relation and columns —
+    * with the schema taken from ONE footer read on the driver instead
+    * of inferred. Inference without schema merging reads one footer
+    * too, but in a one-task Spark job; this reads the first data file
+    * in name order — the same schema whenever the path's files share
+    * one, as a read without `mergeSchema` assumes — and converts it
+    * with Spark's own footer conversion (the schema Spark
+    * wrote into the footer's metadata, else the parquet types under
+    * the session's parquet conf). Partition columns are not in the
+    * footer: a read under this schema still discovers them from the
+    * directory names, as inference does. */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.hadoop.fs.FileStatus
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(conf)
+    // Spark's hidden-path rule; depth-first, stops at the first file
+    def hidden(n: String) = (n.startsWith("_") && !n.contains("=")) ||
+      n.startsWith(".") || n.endsWith("._COPYING_")
+    def files(st: FileStatus): Iterator[FileStatus] =
+      if (!st.isDirectory) Iterator.single(st)
+      else fs.listStatus(st.getPath).sortBy(_.getPath.getName).iterator
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(files)
+    val first = files(fs.getFileStatus(root)).nextOption()
+      .getOrElse(throw new IllegalArgumentException(
+        s"no parquet file under $path to read a schema from"))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(first, conf))
+    val footer = try reader.getFooter finally reader.close()
+    spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(first.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+      .parquet(path)
+  }
+
   /** Entity-kind scan with conjunctive filter pushdown — the
     * DatastoreInputReader analogue
     * (reference: python/src/mapreduce/input_readers.py:607-785;
@@ -33,7 +70,7 @@ object Inputs {
       path: String,
       filters: Seq[(String, String, Any)] = Nil,
       projection: Seq[String] = Nil): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = parquet(spark, path)
     val schema = df.schema.fieldNames.toSet
     filters.foreach { case (prop, op, _) =>
       require(schema.contains(prop), s"unknown filter property: $prop")
@@ -58,7 +95,7 @@ object Inputs {
     * input_readers.py:788-791) — projection to the key column; Catalyst
     * column pruning means parquet only reads that column. */
   def keyScan(spark: SparkSession, path: String, keyCol: String): DataFrame =
-    spark.read.parquet(path).select(col(keyCol))
+    parquet(spark, path).select(col(keyCol))
 
   /** All longs in [start, limit), contiguous splits — reference
     * ConsecutiveLongInput.java:1-100. `spark.range` already plans

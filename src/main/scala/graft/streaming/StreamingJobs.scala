@@ -849,7 +849,10 @@ object StreamingJobs {
       failAt: Option[Long] = None,
       indexDirOpt: Option[String] = None): DataFrame = {
     import graft.functions.{SubstringDedup, TextCuration, TextDedup}
-    val all = spark.read.parquet(s"$sfDir/documents.parquet")
+    // read under the footer's schema: inference would cost a job per
+    // resume, and a loaded index needs only `all.schema`
+    val all = graft.sources.Inputs.parquet(spark,
+      s"$sfDir/documents.parquet")
     // the index may live OUTSIDE the per-run stateDir (indexDirOpt):
     // it is frozen corpus-side state, shared by every ingest of the
     // same corpus — only the ingest fold + checkpoint are per-run
@@ -910,7 +913,7 @@ object StreamingJobs {
     q.exception.foreach { e =>
       if (!(failAt.isDefined && causedByInjection(e))) throw e
     }
-    spark.read.parquet(outDir).drop("batch_id")
+    graft.sources.Inputs.parquet(spark, outDir).drop("batch_id")
   }
 
   /** Streaming benchmark decontamination: documents arrive as a

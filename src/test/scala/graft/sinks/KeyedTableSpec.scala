@@ -568,34 +568,9 @@ class KeyedTableSpec extends AnyFunSuite {
     KeyedTable.create(
       (1L to 40L).map(i => (i, s"v$i", i.toInt)).toDF("k", "v", "n"),
       dir, "k", numBuckets = 4)
-    val sc = spark.sparkContext
-    val group = s"kt-schema-${java.util.UUID.randomUUID()}"
-    val sentinel = s"$group-sentinel"
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    val schema =
-      try {
-        sc.setJobGroup(group, "KeyedTable.read schema")
-        val s0 = try KeyedTable.read(spark, dir).schema
-          finally sc.clearJobGroup()
-        // the listener bus is async but ordered: once a later job's
-        // start is seen, every job the read launched was seen first
-        sc.setJobGroup(sentinel, "listener-bus flush")
-        try spark.range(1).count() finally sc.clearJobGroup()
-        val deadline = System.nanoTime() + 30e9.toLong
-        while (!started.contains(sentinel) && System.nanoTime() < deadline)
-          Thread.sleep(20)
-        assert(started.contains(sentinel), "listener bus never flushed")
-        s0
-      } finally sc.removeSparkListener(listener)
-    assert(started.toArray.count(_ == group) === 0,
+    val (schema, jobs) =
+      graft.SparkJobs.count(spark)(KeyedTable.read(spark, dir).schema)
+    assert(jobs === 0,
       "reading a KeyedTable's schema must launch no Spark job")
     val inferred = spark.read.parquet(dir).schema
     assert(schema === org.apache.spark.sql.types.StructType(

@@ -1589,4 +1589,173 @@ class VersionedKeyedTableSpec extends AnyFunSuite {
       spark.conf.set(autoKey, prevAuto)
     }
   }
+
+  test("bounded key lists route on the driver: keyFiles, keyFilesStr, " +
+      "readKeys and readKeysStr launch no Spark job") {
+    val dir = freshDir()
+    VersionedKeyedTable.create(
+      (1L to 100L).map(i => (i, s"v$i")).toDF("k", "v"), dir, "k",
+      numBuckets = 4)
+    val keys = Seq(3L, 17L, 42L, 99L, 1000L)
+    val ((kept, candidates), jobs) = graft.SparkJobs.count(spark)(
+      VersionedKeyedTable.keyFiles(spark, dir, "k", keys))
+    assert(jobs === 0, "keyFiles must route its keys without a job")
+    assert(kept.nonEmpty && kept.size <= candidates)
+    val (read, readJobs) = graft.SparkJobs.count(spark)(
+      VersionedKeyedTable.readKeys(spark, dir, "k", keys))
+    assert(readJobs === 0, "readKeys must plan its lookup without a job")
+    assert(read.as[(Long, String)].collect().toMap ===
+      Seq(3L, 17L, 42L, 99L).map(k => k -> s"v$k").toMap)
+
+    val sdir = freshDir()
+    VersionedKeyedTable.create(
+      (1 to 100).map(i => (s"doc-$i", i.toLong)).toDF("k", "v"), sdir,
+      "k", numBuckets = 4)
+    val probes = Seq("doc-3", "doc-77", "absent")
+    val ((sKept, _), sJobs) = graft.SparkJobs.count(spark)(
+      VersionedKeyedTable.keyFilesStr(spark, sdir, "k", probes))
+    assert(sJobs === 0, "keyFilesStr must route its keys without a job")
+    assert(sKept.nonEmpty)
+    val (sRead, sReadJobs) = graft.SparkJobs.count(spark)(
+      VersionedKeyedTable.readKeysStr(spark, sdir, "k", probes))
+    assert(sReadJobs === 0,
+      "readKeysStr must plan its lookup without a job")
+    assert(sRead.as[(String, Long)].collect().toMap ===
+      Map("doc-3" -> 3L, "doc-77" -> 77L))
+  }
+
+  test("merge-on-read commits of a bounded batch keep their job " +
+      "budgets (upsertMor <= 12, deleteMor <= 9) and their results") {
+    val dir = freshDir()
+    VersionedKeyedTable.create(
+      (1L to 200L).map(i => (i, s"v$i")).toDF("k", "v"), dir, "k",
+      numBuckets = 4)
+    // a pending delete backlog, so the existence reads apply deletes
+    VersionedKeyedTable.deleteMor(spark, dir, Seq(5L, 6L).toDF("k"), "k")
+    val puts = (1L to 20L).map(i => (i, s"u$i")) :+ ((500L, "new"))
+    val (_, upJobs) = graft.SparkJobs.count(spark)(
+      VersionedKeyedTable.upsertMor(spark, dir, puts.toDF("k", "v"), "k"))
+    assert(upJobs <= 12, s"upsertMor ran $upJobs jobs")
+    val v = VersionedKeyedTable.snapshot(spark, dir).version
+    val (_, delJobs) = graft.SparkJobs.count(spark)(
+      VersionedKeyedTable.deleteMor(spark, dir,
+        Seq(7L, 8L, 9L, 999L).toDF("k"), "k"))
+    assert(delJobs <= 9, s"deleteMor ran $delJobs jobs")
+    val want = ((1L to 200L).map(i => i -> s"v$i").toMap ++ puts) --
+      Seq(7L, 8L, 9L)
+    assert(contents(dir) === want)
+    val changes = VersionedKeyedTable.changesBetween(spark, dir, "k", v,
+        v + 1)
+    assert(changes.columns.toSeq === Seq("k", "change_type", "v", "v_prev"))
+    assert(changes.as[(Long, String, Option[String], Option[String])]
+        .collect().toSet ===
+      Seq(7L, 8L, 9L).map(k => (k, "delete", None, Some(s"u$k"))).toSet)
+  }
+
+  test("a merge-on-read delete of absent keys commits nothing and " +
+      "leaves no delete-file directory") {
+    val dir = freshDir()
+    VersionedKeyedTable.create(
+      (1L to 50L).map(i => (i, s"v$i")).toDF("k", "v"), dir, "k",
+      numBuckets = 4)
+    def deleteDirs = Option(new java.io.File(s"$dir/data").listFiles())
+      .getOrElse(Array.empty[java.io.File])
+      .count(_.getName.startsWith("dl-"))
+    val v = VersionedKeyedTable.snapshot(spark, dir).version
+    VersionedKeyedTable.deleteMor(spark, dir, Seq(77L, 78L).toDF("k"), "k")
+    VersionedKeyedTable.mutateMor(spark, dir,
+      Seq.empty[(Long, String)].toDF("k", "v"),
+      Some(Seq(79L).toDF("k")), "k")
+    assert(VersionedKeyedTable.snapshot(spark, dir).version === v)
+    assert(deleteDirs === 0)
+    VersionedKeyedTable.deleteMor(spark, dir, Seq(7L, 77L).toDF("k"), "k")
+    assert(VersionedKeyedTable.snapshot(spark, dir).version === v + 1)
+    assert(deleteDirs === 1 && !contents(dir).contains(7L))
+  }
+
+  test("merge-on-read deletes keyed by a narrower integral type than " +
+      "the table's key find their rows in the table's buckets") {
+    val dir = freshDir()
+    VersionedKeyedTable.create(
+      (1L to 100L).map(i => (i, s"v$i")).toDF("k", "v"), dir, "k",
+      numBuckets = 4)
+    // xxhash64 of an Int differs from that of the same Long: keys
+    // whose Int hash lands in another bucket must still be routed
+    // under the TABLE's key type
+    val intBucket = (1 to 100).toDF("k")
+      .select(col("k"), pmod(xxhash64(col("k")), lit(4L)).cast("int"))
+      .as[(Int, Int)].collect().toMap
+    val Seq(a, b) = (1 to 100)
+      .filter(k => intBucket(k) != bucketOf(k.toLong)).take(2)
+    VersionedKeyedTable.deleteMor(spark, dir, Seq(a).toDF("k"), "k")
+    VersionedKeyedTable.mutateMor(spark, dir,
+      Seq((50L, "u50")).toDF("k", "v"), Some(Seq(b).toDF("k")), "k")
+    assert(contents(dir) ===
+      ((1L to 100L).map(i => i -> s"v$i").toMap -- Seq(a.toLong, b.toLong) +
+        (50L -> "u50")))
+  }
+
+  test("driver routing equals SQL bucketOf over a DataFrame for " +
+      "integral and string keys") {
+    import org.apache.spark.sql.types._
+    val integral: Seq[(DataType, Seq[Long])] = Seq(
+      ByteType -> Seq(Byte.MinValue, -1, 0, 1, Byte.MaxValue)
+        .map(_.toLong),
+      ShortType -> Seq(Short.MinValue.toLong, -129L, -1L, 0L, 128L,
+        Short.MaxValue.toLong),
+      IntegerType -> Seq(Int.MinValue.toLong, -40000L, -1L, 0L, 1L,
+        65536L, Int.MaxValue.toLong),
+      LongType -> Seq(Long.MinValue, -5000000000L, -1L, 0L, 1L,
+        5000000000L, Long.MaxValue))
+    val strings = Seq("", "a", "doc-42", "é", "日本語", "\u0000x",
+      "\ud83d\ude00", "a\ud800\udc00b")
+    for (nb <- Seq(1, 4, 7, 16)) {
+      for ((t, ks) <- integral) {
+        // executor-side: the SQL expression over a non-local relation
+        val sql = spark.sparkContext.parallelize(ks, 2).toDF("k")
+          .select(col("k"), col("k").cast(t).as("t"))
+          .select(col("k"), KeyedTable.bucket("t", nb))
+          .as[(Long, Int)].collect().toMap
+        ks.foreach { k =>
+          assert(VersionedKeyedTable.keyBuckets(spark, "k", Left(Seq(k)),
+            t, nb) === Set(sql(k)), s"$t key $k, $nb buckets")
+        }
+        assert(VersionedKeyedTable.keyBuckets(spark, "k", Left(ks), t,
+          nb) === sql.values.toSet)
+      }
+      val sql = spark.sparkContext.parallelize(strings, 2).toDF("k")
+        .select(col("k"), KeyedTable.bucket("k", nb))
+        .as[(String, Int)].collect().toMap
+      strings.foreach { k =>
+        assert(VersionedKeyedTable.keyBuckets(spark, "k", Right(Seq(k)),
+          StringType, nb) === Set(sql(k)), s"string key '$k', $nb buckets")
+      }
+    }
+  }
+
+  test("a Long key overflowing an Int key column fails under ANSI, as " +
+      "a scan's cast would, and wraps without it") {
+    val dir = freshDir()
+    VersionedKeyedTable.create(
+      (1 to 40).map(i => (i, s"v$i")).toDF("k", "v"), dir, "k",
+      numBuckets = 4)
+    val big = 1L << 40
+    def chain(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(x => String.valueOf(x.getMessage)).toSeq
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "true")
+      val e = intercept[Exception](
+        VersionedKeyedTable.keyFiles(spark, dir, "k", Seq(big)))
+      assert(chain(e).exists(_.contains("CAST_OVERFLOW")), chain(e))
+      spark.conf.set(key, "false")
+      val (kept, candidates) =
+        VersionedKeyedTable.keyFiles(spark, dir, "k", Seq(big))
+      assert(candidates > 0 && kept.size <= candidates)
+      assert(VersionedKeyedTable.readKeys(spark, dir, "k", Seq(big))
+        .count() === 0L)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import java.io.FileOutputStream
 import graft.TestSpark
+import org.apache.spark.sql.functions.lit
 
 class InputsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -50,6 +51,32 @@ class InputsSpec extends AnyFunSuite {
     val n = Inputs.tableScan(spark, path,
       Seq(("o_orderkey", "<", 100L), ("o_orderstatus", "=", "F"))).count()
     assert(n > 0)
+  }
+
+  test("parquet reads under the schema inference returns, from one " +
+      "footer and with no Spark job") {
+    // every testdata table (timestamp encodings included) ...
+    val tables = graft.core.Tables.names
+      .map(n => s"${TestSpark.sfDir}/$n.parquet")
+    // ... and a Spark-written, partitioned directory
+    val dir = Files.createTempDirectory("graft-parquet-schema")
+      .toString + "/out"
+    Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "s", "x")
+      .withColumn("batch_id", lit(7L))
+      .write.partitionBy("batch_id").parquet(dir)
+    Seq((3L, "c", 3.5)).toDF("id", "s", "x")
+      .withColumn("batch_id", lit(8L))
+      .write.mode("append").partitionBy("batch_id").parquet(dir)
+    for (path <- tables :+ dir) {
+      val inferred = scala.util.Try(spark.read.parquet(path).schema)
+      val (read, jobs) = graft.SparkJobs.count(spark)(
+        scala.util.Try(Inputs.parquet(spark, path).schema))
+      assert(jobs === 0, s"$path: reading its schema ran $jobs jobs")
+      assert(read.toOption === inferred.toOption, path)
+    }
+    assert(Inputs.parquet(spark, dir).as[(Long, String, Double, Int)]
+      .collect().toSet === Set((1L, "a", 1.5, 7), (2L, "b", 2.5, 7),
+        (3L, "c", 3.5, 8)))
   }
 
   test("keyScan prunes to a single column") {
