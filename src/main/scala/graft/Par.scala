@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Driver-thread overlap for INDEPENDENT chains of eager Spark work
   * (guide §2.6: actions are only sequential because driver code calls
@@ -24,19 +25,20 @@ object Par {
 
   /** Run the tasks concurrently and return their results in order.
     * Surfaces the FIRST task's failure after all complete (the job
-    * chains are independent, so letting the rest finish is safe). The
-    * caller's session is pinned as the child threads' active session
-    * (thread locals do not inherit). */
+    * chains are independent, so letting the rest finish is safe).
+    * Each task runs under the caller's thread-local state, captured at
+    * submit and restored after: the active session, Spark's local
+    * properties (job group, description, scheduler pool, SQL
+    * execution ids) and the session's artifact state. Local properties
+    * are inherited only when a thread is CREATED, so a pooled thread
+    * would otherwise keep those of whichever caller first spawned it. */
   def run[T](spark: SparkSession, tasks: Seq[() => T]): Seq[T] =
     if (tasks.sizeIs <= 1) tasks.map(_())
     else {
-      val fs = tasks.map(t => pool.submit(
-        new java.util.concurrent.Callable[T] {
-          override def call(): T = {
-            SparkSession.setActiveSession(spark)
-            t()
-          }
-        }))
+      val session =
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val fs = tasks.map(t =>
+        SQLExecution.withThreadLocalCaptured(session, pool)(t()))
       fs.map(f =>
         try f.get()
         catch {

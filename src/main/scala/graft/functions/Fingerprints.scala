@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
   * the LSH candidates-then-verify architecture applied to fixed-width
   * hashes (image aHash, acoustic energy-rise bits, per-frame video
   * hashes). Shared by `image_neardup` / `audio_neardup` /
-  * `video_neardup`, measured by `media_band_funnel`, and probed by
-  * ScaleCheck.
+  * `video_neardup`, and measured by `media_band_funnel`.
   *
   * Scale contract (100 TB): candidates come from ONE equi join keyed by
   * (group, band, 16-bit band value) — cost tracks actual collisions,

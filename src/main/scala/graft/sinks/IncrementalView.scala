@@ -252,6 +252,17 @@ object IncrementalView {
     * column); above it a semi join — same result, no driver list. */
   private[sinks] var rederiveIsinCap = 10000
 
+  /** The affected groups as `redo0 = true` flags for the merge source's
+    * left join. A bounded list is broadcast: the checkpoint's size
+    * estimate is the product of the delete-side and view relations it
+    * joined, so it grows with the view's group count and would flip
+    * the join to a shuffle — two more jobs per refresh — as the base
+    * grows, though the rows it holds do not. */
+  private def redoFlags(aff: DataFrame, bounded: Boolean): DataFrame = {
+    val flags = aff.withColumn("redo0", lit(true))
+    if (bounded) broadcast(flags) else flags
+  }
+
   /** [[refresh]] for the full view. Count and sum advance by the
     * signed delta rule exactly as before. Min/max advance in two
     * tiers:
@@ -365,8 +376,9 @@ object IncrementalView {
             lit(null).cast(deltaMM.schema("mx").dataType).as("abs_mx"))
       else {
         val aff = affected.get
+        val boundedAff = affKeyRows.length <= rederiveIsinCap
         val baseAt =
-          if (affKeyRows.length <= rederiveIsinCap)
+          if (boundedAff)
             // bounded list: the Catalyst table path prunes base files
             // by the group column's zone maps (clusterBy layout)
             // before any split is planned
@@ -381,7 +393,7 @@ object IncrementalView {
             max(col(valueCol)).as("abs_mx"))
           .withColumn("redo", lit(true))
         deltaMM
-          .join(aff.withColumn("redo0", lit(true)), Seq(groupCol), "left")
+          .join(redoFlags(aff, boundedAff), Seq(groupCol), "left")
           .join(red, Seq(groupCol), "left")
           .select(col(groupCol),
             coalesce(col("cnt"), lit(0L)).as("cnt"),
@@ -566,8 +578,9 @@ object IncrementalView {
         deltaMM.select(cols: _*)
       } else {
         val aff = affected.get
+        val boundedAff = affKeyRows.length <= rederiveIsinCap
         val baseAt =
-          if (affKeyRows.length <= rederiveIsinCap)
+          if (boundedAff)
             VersionedKeyedTable.table(spark, baseDir, baseKey,
               Some(toVersion))
               .where(col(groupCol).isin(affKeyRows.map(_.get(0)).toSeq: _*))
@@ -588,7 +601,7 @@ object IncrementalView {
             valueCols.flatMap(c =>
               Seq(col(s"abs_mn_$c"), col(s"abs_mx_$c")))
         deltaMM
-          .join(aff.withColumn("redo0", lit(true)), Seq(groupCol), "left")
+          .join(redoFlags(aff, boundedAff), Seq(groupCol), "left")
           .join(red, Seq(groupCol), "left")
           .select(sourceCols: _*)
       }

@@ -1469,8 +1469,11 @@ object VersionedKeyedTable {
     // a MOR delete under a different (or unrecorded) key would write
     // files no reader could ever apply
     requireKey(spark, dir, keyCol, "deleteMor", recorded = true)
+    // keys typed as the TABLE's key before `__bucket`: xxhash64 of a
+    // date is not that of the same instant as a timestamp, so every
+    // route — bounded or not — hashes one typed column
     val batch = jobPhase(spark, "checkpoint-batch") {
-      keys.select(col(keyCol))
+      keys.select(col(keyCol).cast(metaSchema(keyCol).dataType).as(keyCol))
         .where(col(keyCol).isNotNull).distinct()
         .withColumn("__bucket", bucketOf(keyCol, nb))
         .localCheckpoint(true)
@@ -1665,9 +1668,12 @@ object VersionedKeyedTable {
     }
     // delete-only keys: doomed keys NOT re-put by this same commit (a
     // key in both is an update — its delete entry comes from the
-    // existence semi-join below, like any replaced key)
+    // existence semi-join below, like any replaced key). They are typed
+    // as the table's key before `__bucket`, as in deleteMor; puts keep
+    // their own type, which the commit's schema check refuses if it
+    // differs from the table's
     val doomed = deleteKeys.map(dk => jobPhase(spark, "checkpoint-batch") {
-        dk.select(col(keyCol))
+        dk.select(col(keyCol).cast(metaSchema(keyCol).dataType).as(keyCol))
           .where(col(keyCol).isNotNull).distinct()
           .join(batch.select(col(keyCol)), Seq(keyCol), "left_anti")
           .withColumn("__bucket", bucketOf(keyCol, nb))

@@ -1695,6 +1695,29 @@ class VersionedKeyedTableSpec extends AnyFunSuite {
         (50L -> "u50")))
   }
 
+  test("merge-on-read deletes keyed by DATE values on a TIMESTAMP table " +
+      "route by the table's key type on the unbounded path") {
+    val dir = freshDir()
+    val day0 = java.time.LocalDate.of(2024, 1, 1)
+    def at(i: Int) = day0.plusDays(i).atStartOfDay(java.time.ZoneOffset.UTC)
+      .toInstant
+    VersionedKeyedTable.create(
+      (0 until 40).map(i => (at(i), s"v$i")).toDF("k", "v"), dir, "k",
+      numBuckets = 8)
+    // time keys never take the bounded driver route: `touchedBuckets`
+    // reads the batch's own `__bucket`, which must hash the timestamp
+    // the date casts to (midnight in the session's UTC zone)
+    def days(r: Range) = r.map(day0.plusDays(_)).toDF("k")
+    VersionedKeyedTable.deleteMor(spark, dir, days(0 until 10), "k")
+    def live = VersionedKeyedTable.read(spark, dir)
+      .as[(java.time.Instant, String)].collect().toMap
+    assert(live === (10 until 40).map(i => at(i) -> s"v$i").toMap)
+    VersionedKeyedTable.mutateMor(spark, dir,
+      Seq((at(30), "u30")).toDF("k", "v"), Some(days(10 until 20)), "k")
+    assert(live === ((20 until 40).map(i => at(i) -> s"v$i").toMap +
+      (at(30) -> "u30")))
+  }
+
   test("driver routing equals SQL bucketOf over a DataFrame for " +
       "integral and string keys") {
     import org.apache.spark.sql.types._
