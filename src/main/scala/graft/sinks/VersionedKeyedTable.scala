@@ -1268,37 +1268,73 @@ object VersionedKeyedTable {
     (kept, candidate.size)
   }
 
-  /** Row-level diff old → new, classified: the key, `change_type` ∈
-    * insert | update | delete, every data column's new value, and its
-    * old value as `<col>_prev`. Shared by commit-time change capture
-    * (old = the touched buckets before the mutation, new = after) and
-    * the snapshot-diff CDF fallback. */
+  // ---- change capture ----------------------------------------------
+
+  /** The change annotation a commit's merge pass carries beside each
+    * row it produces, so the change files are a projection of rows the
+    * commit already materialized:
+    *  - [[ChangeCol]]: the row's change type (insert | update | delete),
+    *    null for an untouched or unchanged row;
+    *  - [[LiveCol]]: the row belongs to the post-image (the data write
+    *    keeps it); a false row is a pre-image only — a deleted row, or
+    *    the row an upsert's put replaced;
+    *  - [[PutCol]]: a put batch's row id — on a put row its own, on a
+    *    replaced row the put's that replaced it (see [[putRemerge]]);
+    *  - [[prevCol]]`(c)`: the row's old value of `c` when it changed. */
+  private val ChangeCol = "__change"
+  private val LiveCol = "__live"
+  private val PutCol = "__put"
+  private def prevCol(c: String): String = s"__prev_$c"
+
+  /** The change type of a key whose old image is present iff `hadOld`
+    * and new image iff `hasNew`: insert, delete, update, or null when
+    * every data column is null-safe equal (an unchanged put). */
+  private def changeOf(hadOld: org.apache.spark.sql.Column,
+      hasNew: org.apache.spark.sql.Column, dataCols: Seq[String],
+      old: String => org.apache.spark.sql.Column,
+      cur: String => org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Column = {
+    val sameRow = dataCols.map(c => old(c) <=> cur(c))
+      .foldLeft(lit(true))(_ && _)
+    when(!hadOld, lit("insert"))
+      .when(!hasNew, lit("delete"))
+      .when(!sameRow, lit("update"))
+  }
+
+  /** The change-file rows of an annotated frame: the key, `change_type`,
+    * every data column's new value (typed nulls for a delete) and its
+    * old value as `<col>_prev`, in `schema`'s column order. */
+  private def changeRows(annotated: DataFrame, keyCol: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val dataCols = schema.fieldNames.filterNot(_ == keyCol).toSeq
+    val ct = col(ChangeCol)
+    annotated.where(ct.isNotNull)
+      .select((col(keyCol) +: ct.as("change_type") +:
+        (dataCols.map(c => when(ct =!= "delete", col(c)).as(c)) ++
+          dataCols.map(c => col(prevCol(c)).as(s"${c}_prev")))): _*)
+  }
+
+  /** Row-level diff old → new, classified into [[changeRows]]. Only
+    * paths that hold no pairing of their own use it: the snapshot-diff
+    * CDF fallback, whole-table and file-set replacement
+    * ([[replaceAll]], [[replaceFiles]]) and unbounded merge-on-read
+    * batches. The keyed commit paths take their change rows from their
+    * own merge pass instead. */
   private def classifyDiff(oldDF: DataFrame, newDF: DataFrame,
       keyCol: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    // shape note (measured, this round): a union + groupBy-key with
-    // first(struct) computes this in ONE exchange but plans as
-    // SortAggregate (struct buffers are not hash-aggregatable), which
-    // re-sorts both sides interpreted — slower than the codegen'd
-    // full-outer SMJ below on every non-trivial diff. The join stays;
-    // the mutation paths bound BOTH inputs to the batch's keys first,
-    // which is where the real bytes win is (see mutateWith).
     val o = oldDF.alias("o")
     val n = newDF.alias("n")
     val oKey = col(s"o.$keyCol")
     val nKey = col(s"n.$keyCol")
     val dataCols = schema.fieldNames.filterNot(_ == keyCol).toSeq
-    val sameRow = dataCols
-      .map(c => col(s"o.$c") <=> col(s"n.$c"))
-      .foldLeft(lit(true))(_ && _)
-    val ct = when(oKey.isNull, lit("insert"))
-      .when(nKey.isNull, lit("delete"))
-      .when(!sameRow, lit("update")) // else null: unchanged row
-    o.join(n, oKey === nKey, "full_outer")
-      .where(ct.isNotNull)
-      .select((coalesce(nKey, oKey).as(keyCol) +: ct.as("change_type") +:
+    changeRows(o.join(n, oKey === nKey, "full_outer")
+      .select((coalesce(nKey, oKey).as(keyCol) +:
+        changeOf(oKey.isNotNull, nKey.isNotNull, dataCols,
+          c => col(s"o.$c"), c => col(s"n.$c")).as(ChangeCol) +:
         (dataCols.map(c => col(s"n.$c").as(c)) ++
-          dataCols.map(c => col(s"o.$c").as(s"${c}_prev")))): _*)
+          dataCols.map(c => col(s"o.$c").as(prevCol(c))))): _*),
+      keyCol, schema)
   }
 
   /** Persist a commit's captured change rows as immutable files under
@@ -1454,10 +1490,12 @@ object VersionedKeyedTable {
     * or string key) is fetched once ([[pointLookupKeys]]) and routed
     * to its buckets on the driver, so routing, the existence filter
     * and the emptiness check (the delete-file write's own result)
-    * launch no job of their own — the checkpointed batch, the key
-    * take, the existence read, the delete-file write and the CDF
-    * write are the commit's jobs. Larger batches find their buckets
-    * with one map-only pass and semi-join shuffled.
+    * launch no job of their own. The existence read COLLECTS the
+    * doomed rows (bounded like the keys), and the delete-file and CDF
+    * writes project that local relation — the checkpointed batch, the
+    * key take, the existence read and the two writes are the commit's
+    * jobs. Larger batches find their buckets with one map-only pass,
+    * semi-join shuffled and checkpoint the doomed rows.
     * Concurrency is [[commitLoop]]'s: disjoint racers rebase (my
     * delete files stay valid — their buckets' data and delete entries
     * are untouched), overlap re-runs the existence check. */
@@ -1484,23 +1522,22 @@ object VersionedKeyedTable {
     commitLoop(spark, dir, "deleteMor", 20, Some(myTouched)) { snap =>
       val schema = snap.schema.getOrElse(metaSchema)
       val doomedRows = visibleRows(spark, dir, snap, schema, nb, batch,
-        keyCol, keyList, myTouched)
+        keyCol, keyList, myTouched).fold(localFrame(spark, _, schema),
+        identity)
       val (delFiles, delCounts) = writeDeleteFiles(spark, dir,
         doomedRows.select(col(keyCol))
           .withColumn("__bucket", bucketOf(keyCol, nb)))
       if (delFiles.isEmpty) None // nothing exists to delete
       else {
-        // every doomed row is a delete: the key, no new values, the
-        // old values as `_prev` — classifyDiff's columns and order
+        // every doomed row is a delete
         val dataCols = schema.fieldNames.filterNot(_ == keyCol).toSeq
         val changeFiles =
           if (!captureChanges) None
-          else Some(writeChangeFiles(spark, dir,
+          else Some(writeChangeFiles(spark, dir, changeRows(
             doomedRows.select((col(keyCol) +:
-              lit("delete").as("change_type") +:
-              (dataCols.map(c =>
-                lit(null).cast(schema(c).dataType).as(c)) ++
-                dataCols.map(c => col(c).as(s"${c}_prev")))): _*)))
+              lit("delete").as(ChangeCol) +: (dataCols.map(col) ++
+                dataCols.map(c => col(c).as(prevCol(c))))): _*),
+            keyCol, schema)))
         // disjoint racers keep my delete files valid; the files are
         // SEQUENCE-STAMPED with the committing version: they kill below
         // it, so rows a LATER upsertMor appends (higher sequence) live
@@ -1565,28 +1602,89 @@ object VersionedKeyedTable {
     * (at most [[MaxPointLookupKeys]] keys, already on the driver)
     * prunes the files through [[keyFilesOf]] and filters the rows
     * with an IN list, as [[readKeys]] does — no key relation to
-    * build, so no broadcast job; unbounded batches semi-join
-    * shuffled. */
+    * build, so no broadcast job — and the rows, bounded like the keys,
+    * are COLLECTED (Left): the commit's later writes then run against
+    * a local relation. Unbounded batches semi-join shuffled and
+    * checkpoint (Right). Either way one job pins them. */
   private def visibleRows(spark: SparkSession, dir: String,
       snap: Snapshot, schema: org.apache.spark.sql.types.StructType,
       nb: Int, keys: DataFrame, keyCol: String,
       keyList: Option[Either[Seq[Long], Seq[String]]],
-      touched: Set[Int]): DataFrame = {
+      touched: Set[Int])
+      : Either[Seq[org.apache.spark.sql.Row], DataFrame] = {
     def scan(rels: Seq[String]) =
       morScan(spark, dir, snap, schema, keyCol, rels, Some(touched))
-    val rows = keyList match {
-      case Some(Left(ks)) =>
+    val bounded = keyList.map {
+      case Left(ks) =>
         scan(keyFilesOf(spark, dir, keyCol, ks, snap, nb, schema)._1)
           .where(col(keyCol).isin(ks: _*))
-      case Some(Right(ss)) =>
+      case Right(ss) =>
         scan(keyFilesStrOf(spark, dir, keyCol, ss, snap, nb, schema)._1)
           .where(col(keyCol).isin(ss: _*))
-      case None =>
-        scan(touched.toSeq.sorted
+    }
+    jobPhase(spark, "checkpoint-merged") {
+      bounded match {
+        case Some(rows) => Left(rows.collect().toSeq)
+        case None => Right(scan(touched.toSeq.sorted
             .flatMap(b => snap.files.getOrElse(b, Seq.empty)))
           .join(keys.select(col(keyCol)), Seq(keyCol), "left_semi")
+          .localCheckpoint(true))
+      }
     }
-    jobPhase(spark, "checkpoint-merged")(rows.localCheckpoint(true))
+  }
+
+  /** Driver-held rows as a DataFrame over a local relation: writes and
+    * projections of it run with no job beyond their own. */
+  private def localFrame(spark: SparkSession,
+      rows: Seq[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** A bounded merge-on-read commit's change rows: each put of `puts`
+    * paired with its pre-image among the collected `pre` rows, plus a
+    * delete for each `doomed` (delete-only) key that had one. One
+    * map-only pass over the two checkpointed frames: `pre` travels as
+    * a broadcast variable, which launches no job, so the change write
+    * is the only job. The pairing looks keys up by value, which the
+    * bounded route guarantees are integral or strings of the table's
+    * key type. */
+  private def pairedChanges(spark: SparkSession, puts: DataFrame,
+      doomed: DataFrame, pre: Seq[org.apache.spark.sql.Row],
+      keyCol: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
+    val dataCols = schema.fieldNames.filterNot(_ == keyCol).toSeq
+    val dataIdx = dataCols.map(schema.fieldIndex).toArray
+    val keyIdx = schema.fieldIndex(keyCol)
+    val (hadOld, hasNew) = ("__had_old", "__has_new")
+    val out = StructType(schema.fields.map(_.copy(nullable = true)) ++
+      dataCols.map(c =>
+        schema(c).copy(name = prevCol(c), nullable = true)) ++
+      Seq(StructField(hadOld, BooleanType),
+        StructField(hasNew, BooleanType)))
+    val before = spark.sparkContext.broadcast(
+      pre.map(r => r.get(keyIdx) -> r).toMap)
+    def pair(side: DataFrame, isPut: Boolean): DataFrame = {
+      // -1: the side lacks the column (it reads as null)
+      val idx = schema.fieldNames.map(side.columns.indexOf(_))
+      val sideKey = side.columns.indexOf(keyCol)
+      side.mapPartitions { it =>
+        val m = before.value
+        it.flatMap { r =>
+          val old = m.get(r.get(sideKey))
+          if (!isPut && old.isEmpty) None
+          else Some(org.apache.spark.sql.Row.fromSeq(
+            idx.toSeq.map(i => if (i < 0) null else r.get(i)) ++
+              dataIdx.toSeq.map(j => old.map(_.get(j)).orNull) ++
+              Seq(old.isDefined, isPut)))
+        }
+      }(org.apache.spark.sql.Encoders.row(out))
+    }
+    changeRows(pair(puts, isPut = true)
+        .unionByName(pair(doomed, isPut = false))
+        .withColumn(ChangeCol, changeOf(col(hadOld), col(hasNew),
+          dataCols, c => col(prevCol(c)), col)),
+      keyCol, schema)
   }
 
   /** `cur` with `add`'s files appended to each of `buckets`' lists. */
@@ -1633,8 +1731,8 @@ object VersionedKeyedTable {
   def upsertMor(spark: SparkSession, dir: String, rows: DataFrame,
       keyCol: String, captureChanges: Boolean = true,
       commitMeta: Map[String, String] = Map.empty): Unit =
-    mutateMor(spark, dir, rows, None, keyCol, captureChanges,
-      commitMeta)
+    mutateMorAs("upsertMor", spark, dir, rows, None, keyCol,
+      captureChanges, commitMeta, None)
 
   /** The GENERAL merge-on-read mutation — puts AND deletes in ONE
     * commit: the puts land as appended, sequence-stamped data files
@@ -1645,6 +1743,16 @@ object VersionedKeyedTable {
     * metadata counts (every delete entry kills exactly one older
     * visible row) and ordinary CDF capture (updates with `_prev`,
     * deletes, inserts — indistinguishable from copy-on-write).
+    *
+    * Jobs: a bounded batch (at most [[MaxPointLookupKeys]] integral
+    * or string keys, puts and deletes together) collects the rows it
+    * replaces or deletes in the existence read ([[visibleRows]]); the
+    * delete-file write runs over that local relation, and the change
+    * rows pair each put with its collected pre-image in a map-only
+    * pass over the checkpointed batch ([[pairedChanges]]) — no
+    * broadcast job, no shuffle: the CDF write is one job. An unbounded
+    * batch checkpoints the replaced rows and diffs them against the
+    * puts ([[classifyDiff]]).
     *
     * `expectedVersion` (the SQL row-level operations' serializable
     * gate): when set, ANY intervening commit fails the call with the
@@ -1657,9 +1765,18 @@ object VersionedKeyedTable {
       deleteKeys: Option[DataFrame], keyCol: String,
       captureChanges: Boolean = true,
       commitMeta: Map[String, String] = Map.empty,
-      expectedVersion: Option[Long] = None): Unit = {
+      expectedVersion: Option[Long] = None): Unit =
+    mutateMorAs("mutateMor", spark, dir, rows, deleteKeys, keyCol,
+      captureChanges, commitMeta, expectedVersion)
+
+  /** [[mutateMor]]'s body; `op` names the caller's entry point in its
+    * errors. */
+  private def mutateMorAs(op: String, spark: SparkSession, dir: String,
+      rows: DataFrame, deleteKeys: Option[DataFrame], keyCol: String,
+      captureChanges: Boolean, commitMeta: Map[String, String],
+      expectedVersion: Option[Long]): Unit = {
     val (nb, metaSchema) = readMeta(spark, dir)
-    requireKey(spark, dir, keyCol, "upsertMor", recorded = true)
+    requireKey(spark, dir, keyCol, op, recorded = true)
     val batch = jobPhase(spark, "checkpoint-batch") {
       rows.where(col(keyCol).isNotNull)
         .dropDuplicates(keyCol)
@@ -1699,10 +1816,10 @@ object VersionedKeyedTable {
     // (even a bucket-disjoint one: the statement's WHERE may have read
     // it) fails the statement instead of re-applying, so such calls
     // commit strictly (no rebase) and the gate rejects every retry
-    commitLoop(spark, dir, "upsertMor", 20,
+    commitLoop(spark, dir, op, 20,
         if (expectedVersion.isEmpty) Some(myTouched) else None) { snap =>
       expectedVersion.foreach(ev => require(snap.version == ev,
-        s"mutateMor at $dir: the table advanced past the snapshot the " +
+        s"$op at $dir: the table advanced past the snapshot the " +
           s"mutation was derived from (v${snap.version} != v$ev) — " +
           "serializable conflict; re-run the statement"))
       val evolved = evolveSchema(spark, dir,
@@ -1713,7 +1830,7 @@ object VersionedKeyedTable {
       myTouched.foreach { b =>
         snap.deletes.getOrElse(b, Seq.empty).foreach { d =>
           require(snap.seqs.contains(d),
-            s"upsertMor at $dir: bucket $b carries an unstamped " +
+            s"$op at $dir: bucket $b carries an unstamped " +
               s"pending delete file ($d) that would kill appended " +
               "rows — run compact() first")
         }
@@ -1721,6 +1838,7 @@ object VersionedKeyedTable {
       // the rows this commit REPLACES OR DELETES — visible state only
       val prevRows = visibleRows(spark, dir, snap, evolved, nb, allKeys,
         keyCol, keyList, myTouched)
+      val pre = prevRows.fold(localFrame(spark, _, evolved), identity)
       val (newFiles, newStats, newCounts, newExtra) =
         if (putsEmpty)
           (Map.empty[Int, Seq[String]],
@@ -1731,16 +1849,16 @@ object VersionedKeyedTable {
           statsCols = inheritedStatsCols(snap))
       // the delete-file write reports whether any replaced row exists
       val (delFiles, delCounts) = writeDeleteFiles(spark, dir,
-        prevRows.select(col(keyCol))
+        pre.select(col(keyCol))
           .withColumn("__bucket", bucketOf(keyCol, nb)))
       // a pure delete of ABSENT keys is a no-op, like deleteMor's
       if (putsEmpty && delFiles.isEmpty) None
       else {
         val changeFiles =
           if (!captureChanges) None
-          else Some(writeChangeFiles(spark, dir,
-            classifyDiff(prevRows, batch.drop("__bucket"), keyCol,
-              evolved)))
+          else Some(writeChangeFiles(spark, dir, prevRows.fold(
+            pairedChanges(spark, batch, doomed, _, keyCol, evolved),
+            classifyDiff(_, batch.drop("__bucket"), keyCol, evolved))))
         // new data AND delete files stamp the committing version: the
         // deletes kill strictly below it, the appended rows sit AT it
         // and survive
@@ -2017,44 +2135,30 @@ object VersionedKeyedTable {
     commitLoop(spark, dir, "transact", 10, rebaseFor = None) { snap =>
       val snapDF = read(spark, dir, Some(snap.version))
       val batch = derive(snapDF)
+        .withColumn(PutCol, monotonically_increasing_id())
         .withColumn("__bucket", bucketOf(keyCol, nb))
         .localCheckpoint(true) // pin the derivation before any racer commits
       val (myTouched, batchRows) = touchedBucketsAndCount(batch)
       if (myTouched.isEmpty) None
       else {
-        val schema = snap.schema.getOrElse(metaSchema)
         // added columns commit nullable: the merge below unions them
         // onto existing rows that lack them
-        val evolvedTx = evolveSchema(spark, dir, schema,
-          org.apache.spark.sql.types.StructType(
-            batch.schema.fields.map(_.copy(nullable = true))))
-        val existing = morScan(spark, dir, snap, schema, keyCol,
+        val evolvedTx = evolveSchema(spark, dir,
+          snap.schema.getOrElse(metaSchema),
+          org.apache.spark.sql.types.StructType(batch.schema.fields
+            .filterNot(_.name == PutCol).map(_.copy(nullable = true))))
+        val existing = morScan(spark, dir, snap, evolvedTx, keyCol,
           myTouched.toSeq.sorted
             .flatMap(b => snap.files.getOrElse(b, Seq.empty)),
           Some(myTouched))
-        val merged = existing.join(
-            keysMaybeBroadcast(batch, keyCol, batchRows),
-            Seq(keyCol), "left_anti")
-          .unionByName(batch.drop("__bucket"), allowMissingColumns = true)
-          .withColumn("__bucket", bucketOf(keyCol, nb))
-          .localCheckpoint(true)
-        val (newFiles, newStats, newCounts, newExtra) =
-          writeDataFiles(spark, dir, merged, keyCol,
-            statsCols = inheritedStatsCols(snap))
-        // key-bounded diff, as in mutateWith: the transact merge keeps
-        // every non-batch key verbatim, so only batch keys can change
-        val changeFiles = {
-          val bk = keysMaybeBroadcast(batch, keyCol, batchRows)
-          writeChangeFiles(spark, dir,
-            classifyDiff(
-              existing.join(bk, Seq(keyCol), "left_semi"),
-              merged.drop("__bucket").join(bk, Seq(keyCol), "left_semi"),
-              keyCol, evolvedTx))
-        }
+        val ((newFiles, newStats, newCounts, newExtra), changeFiles) =
+          writeMerge(spark, dir, snap,
+            putRemerge(keyCol)(existing, batch, batchRows), keyCol, nb,
+            evolvedTx, captureChanges = true)
         val manifest = snap.files ++
           myTouched.toSeq.map(b => b -> newFiles.getOrElse(b, Seq.empty))
         Some((_, _) => renderManifest(myTouched, manifest, evolvedTx,
-          snap.stats ++ newStats, Some(changeFiles),
+          snap.stats ++ newStats, changeFiles,
           Map(BaseKey -> snap.version.toString), snap.counts ++ newCounts,
           snap.extraStats ++ newExtra, snap.deletes -- myTouched,
           snap.seqs))
@@ -2070,36 +2174,106 @@ object VersionedKeyedTable {
       onBeforeCommit: () => Unit,
       captureChanges: Boolean = true,
       commitMeta: Map[String, String] = Map.empty): Unit =
-    mutateWith(spark, dir, rows, keyCol, onBeforeCommit, captureChanges,
-      commitMeta) {
-      (existing, batch, batchKeys) =>
-        val survivors = existing.join(batchKeys, Seq(keyCol), "left_anti")
-        if (isDelete) survivors
-        else survivors.unionByName(batch.drop("__bucket"),
-          allowMissingColumns = true)
-    }
+    if (isDelete)
+      mutateWith(spark, dir, rows, keyCol, onBeforeCommit, captureChanges,
+        commitMeta) { (existing, batch, batchRows) =>
+        // distinct keys: a repeated key would pair its row twice. Under
+        // the broadcast gate they dedupe inside the broadcast's own
+        // single task — no exchange, no extra job
+        val keys = batch.select(col(keyCol).as(PairKey))
+        val doomed =
+          if (batchRows <= maxBroadcastKeys(spark))
+            broadcast(keys.coalesce(1).distinct())
+          else keys.distinct()
+        val hit = col(PairKey).isNotNull
+        existing.join(doomed, col(keyCol) === col(PairKey), "left_outer")
+          .select(existing.columns.map(col) ++
+            existing.columns.filterNot(_ == keyCol).map(c =>
+              when(hit, col(c)).as(prevCol(c))) ++
+            Seq(when(hit, lit("delete")).as(ChangeCol), (!hit).as(LiveCol),
+              lit(null).cast("long").as(PutCol)): _*)
+      }
+    else
+      // each put row carries an id fixed by the batch checkpoint, so a
+      // replaced row can name the put that replaced it
+      mutateWith(spark, dir,
+        rows.withColumn(PutCol, monotonically_increasing_id()), keyCol,
+        onBeforeCommit, captureChanges, commitMeta,
+        carryCols = Set(PutCol))(putRemerge(keyCol))
+
+  /** The put remerge of [[upsert]] and [[transact]] (`batch` carries
+    * each put row's [[PutCol]] id): the puts join each touched row
+    * through the batch broadcast. A matched row is the pre-image of its
+    * put and leaves the post-image (the put row replaces it); every put
+    * row lands as a tentative insert, which [[writeMerge]] turns back
+    * into no change row when the pairing observed its id. */
+  private def putRemerge(keyCol: String)(existing: DataFrame,
+      batch: DataFrame, batchRows: Long): DataFrame = {
+    val dataCols = existing.columns.filterNot(_ == keyCol).toSeq
+    val batchCols = batch.columns.toSet
+    def nullOf(c: String) = lit(null).cast(existing.schema(c).dataType)
+    def newCol(c: String) = s"__new_$c"
+    def newOf(c: String) = if (batchCols(c)) col(newCol(c)) else nullOf(c)
+    val puts = batch.select((col(keyCol).as(PairKey) +: col(PutCol) +:
+      dataCols.filter(batchCols).map(c => col(c).as(newCol(c)))): _*)
+    val hit = col(PairKey).isNotNull
+    val touched = existing
+      .join(rowsMaybeBroadcast(puts, batchRows),
+        col(keyCol) === col(PairKey), "left_outer")
+      .select((col(keyCol) +:
+        dataCols.map(c => when(hit, newOf(c)).otherwise(col(c)).as(c))) ++
+        dataCols.map(c => when(hit, col(c)).as(prevCol(c))) ++
+        Seq(when(hit, changeOf(lit(true), lit(true), dataCols, col,
+            newOf)).as(ChangeCol),
+          (!hit).as(LiveCol), col(PutCol)): _*)
+    val putRows = batch.select((col(keyCol) +: dataCols.map(c =>
+        (if (batchCols(c)) col(c) else nullOf(c)).as(c))) ++
+      dataCols.map(c => nullOf(c).as(prevCol(c))) ++
+      Seq(lit("insert").as(ChangeCol), lit(true).as(LiveCol),
+        col(PutCol)): _*)
+    touched.unionByName(putRows)
+  }
+
+  /** The batch-key column of a pairing join's batch side. */
+  private val PairKey = "__pair_key"
+
+  /** Byte cap (estimated from the schema's default sizes) on a put
+    * batch broadcast whole for [[mutate]]'s pairing join: it carries
+    * the rows, where a key relation carries only keys. */
+  private val MaxBroadcastRowBytes = 256L << 20
+
+  /** `rows` broadcast-hinted when both the [[maxBroadcastKeys]] row
+    * gate and [[MaxBroadcastRowBytes]] pass; otherwise the planner
+    * picks a shuffled join. */
+  private def rowsMaybeBroadcast(rows: DataFrame, batchRows: Long)
+      : DataFrame =
+    if (batchRows <= maxBroadcastKeys(rows.sparkSession) &&
+        batchRows * rows.schema.defaultSize <= MaxBroadcastRowBytes)
+      broadcast(rows)
+    else rows
 
   /** The copy-on-write core every keyed mutation rides: `remerge`
     * computes the touched buckets' NEW contents from their current
     * rows (`existing`, read under the additively-evolved schema) and
     * the checkpointed mutation batch (`batch`, data columns +
-    * `__bucket`). It must be a pure function of its inputs — an
-    * overlap conflict re-runs it against the winner's snapshot.
-    * Upsert, delete, and [[merge]] are thin remerge lambdas over this
-    * one write path; rebase, recompute and torn-claim handling are
-    * [[commitLoop]]'s. */
+    * `__bucket`), each row carrying the change annotation
+    * ([[ChangeCol]], [[LiveCol]], [[PutCol]], [[prevCol]]) of the pass
+    * that pairs every batch key's pre-image with its post-image. It
+    * must be a pure function of its inputs — an overlap conflict
+    * re-runs it against the winner's snapshot. Upsert, delete, and
+    * [[merge]] are thin remerge lambdas over this one write path;
+    * rebase, recompute and torn-claim handling are [[commitLoop]]'s. */
   private[sinks] def mutateWith(spark: SparkSession, dir: String,
       rows: DataFrame, keyCol: String,
       onBeforeCommit: () => Unit,
       captureChanges: Boolean = true,
       commitMeta: Map[String, String] = Map.empty,
       carryCols: Set[String] = Set.empty)(
-      /** (existing, batch, batchKeys): `batchKeys` is the batch's key
-        * relation, broadcast-hinted only when the batch's exact row
-        * count (free from [[touchedBucketsAndCount]]) passes the
-        * [[maxBroadcastKeys]] gate — remerge lambdas must use it
-        * instead of hinting `batch.select(keyCol)` themselves. */
-      remerge: (DataFrame, DataFrame, DataFrame) => DataFrame): Unit = {
+      /** (existing, batch, batchRows): `batchRows` is the batch's exact
+        * row count (free from [[touchedBucketsAndCount]]) — a remerge
+        * that joins the batch broadcasts it only under the
+        * [[maxBroadcastKeys]] gate. */
+      remerge: (DataFrame, DataFrame, Long) => DataFrame): Unit = {
     val (nb, metaSchema) = readMeta(spark, dir)
     requireKey(spark, dir, keyCol, "mutation")
     val batch = jobPhase(spark, "checkpoint-batch") {
@@ -2110,7 +2284,6 @@ object VersionedKeyedTable {
       touchedBucketsAndCount(batch) // bounded; map-only stage
     }
     if (myTouched.isEmpty) return
-    val batchKeys = keysMaybeBroadcast(batch, keyCol, batchRows)
     commitLoop(spark, dir, "commit", 20, Some(myTouched)) { snap =>
       // merge against THIS snapshot's touched-bucket files, under the
       // snapshot's schema evolved by the batch's new columns.
@@ -2130,34 +2303,9 @@ object VersionedKeyedTable {
         myTouched.toSeq.sorted
           .flatMap(b => snap.files.getOrElse(b, Seq.empty)),
         Some(myTouched))
-      val merged = jobPhase(spark, "checkpoint-merged") {
-        remerge(existing, batch, batchKeys)
-          .withColumn("__bucket", bucketOf(keyCol, nb))
-          .localCheckpoint(true) // never read a file a racer vacuums
-      }
-      val (newFiles, newStats, newCounts, newExtra) =
-        writeDataFiles(spark, dir, merged, keyCol,
-          statsCols = inheritedStatsCols(snap))
-      // commit-time CHANGE CAPTURE: the mutation already holds the
-      // touched buckets' before (existing) and after (merged) states,
-      // so the CDF rows cost one more pass over the touched region —
-      // and every later changesBetween over this commit reads
-      // O(changed rows) instead of re-diffing bucket snapshots.
-      // captureChanges=false skips the pass for write-only tables;
-      // spans crossing such a commit take the snapshot-diff fallback.
-      // The diff is KEY-BOUNDED: every remerge (upsert/delete/merge/
-      // apply-changes) rewrites only batch-keyed rows — non-batch
-      // keys pass through verbatim and can never produce a change row
-      // — so both diff sides semi-join to the batch's keys first
-      // (broadcast, no shuffle) and the full-outer classify shuffles
-      // O(batch) rows instead of O(touched buckets) (guide §2.3).
-      val changeFiles =
-        if (!captureChanges) None
-        else Some(writeChangeFiles(spark, dir,
-          classifyDiff(
-            existing.join(batchKeys, Seq(keyCol), "left_semi"),
-            merged.drop("__bucket").join(batchKeys, Seq(keyCol), "left_semi"),
-            keyCol, evolved)))
+      val ((newFiles, newStats, newCounts, newExtra), changeFiles) =
+        writeMerge(spark, dir, snap, remerge(existing, batch, batchRows),
+          keyCol, nb, evolved, captureChanges)
       onBeforeCommit()
       Some((base, _) => renderManifest(myTouched,
         base.files ++
@@ -2172,6 +2320,66 @@ object VersionedKeyedTable {
         base.deletes -- myTouched,
         base.seqs))
     }
+  }
+
+  /** Pin a remerge's annotated rows ([[mutateWith]]) and write them:
+    * the live rows as the touched buckets' new data files and, with
+    * `captureChanges`, the change rows. Returns the data write's
+    * (files, stats, counts, extra stats) and the change files. */
+  private def writeMerge(spark: SparkSession, dir: String, snap: Snapshot,
+      annotated: DataFrame, keyCol: String, nb: Int,
+      evolved: org.apache.spark.sql.types.StructType,
+      captureChanges: Boolean)
+      : ((Map[Int, Seq[String]], Map[String, (String, String)],
+          Map[String, Long], Map[String, Map[String, (String, String)]]),
+         Option[Seq[String]]) = {
+    // the pairing's put ids, observed by the checkpoint job itself (a
+    // named observation read off the plan: an Observation object would
+    // register state that stops the session from serializing)
+    val observed = annotated.withColumn("__bucket", bucketOf(keyCol, nb))
+      .observe("paired", collect_set(when(!col(LiveCol), col(PutCol)))
+        .as("ids"))
+    val merged = jobPhase(spark, "checkpoint-merged") {
+      observed.localCheckpoint(true) // never read a file a racer vacuums
+    }
+    val written =
+      writeDataFiles(spark, dir,
+        merged.where(col(LiveCol))
+          .select((evolved.fieldNames :+ "__bucket").map(col): _*),
+        keyCol, statsCols = inheritedStatsCols(snap))
+    // commit-time CHANGE CAPTURE: the checkpoint already pairs every
+    // batch key's pre-image with its post-image, so the change rows
+    // are a map-only projection of it — one job, the write — and
+    // every later changesBetween over this commit reads O(changed
+    // rows) instead of re-diffing bucket snapshots. Only batch keys
+    // carry an annotation; untouched rows pass through with none.
+    // An upsert's put row is an insert unless the pairing saw a
+    // replaced row name it (the broadcast join cannot tell a
+    // touched-bucket task that some OTHER task matched the put): the
+    // observed ids travel as a broadcast variable, which launches no
+    // job. captureChanges=false skips the write for write-only
+    // tables; spans crossing such a commit take the snapshot-diff
+    // fallback.
+    val changeFiles =
+      if (!captureChanges) None
+      else {
+        // absent only when the plan ran empty, so nothing was paired
+        val ids = observed.queryExecution.observedMetrics.get("paired")
+          .fold(Set.empty[Long])(_.getSeq[Long](0).toSet)
+        // a null key addresses no row, so it has no change row
+        val keyed = merged.where(col(keyCol).isNotNull)
+        val changed =
+          if (ids.isEmpty) keyed
+          else {
+            val seen = spark.sparkContext.broadcast(ids)
+            val replacedPut = udf((id: Long) => seen.value(id))
+            keyed.where(!(col(LiveCol) && col(PutCol).isNotNull &&
+              replacedPut(col(PutCol))))
+          }
+        Some(writeChangeFiles(spark, dir,
+          changeRows(changed, keyCol, evolved)))
+      }
+    (written, changeFiles)
   }
 
   /** MERGE INTO — the general three-clause keyed merge (the SQL
@@ -2233,30 +2441,36 @@ object VersionedKeyedTable {
       val tKey = col(s"t.$keyCol")
       val sKey = col(s"s.$keyCol")
       val matched = tKey.isNotNull && sKey.isNotNull
-      val outCols = existing.schema.fields.map { f =>
+      val newValue = existing.schema.fields.map { f =>
         val tc = col(s"t.${f.name}")
         val sc =
           if (srcCols(f.name)) col(s"s.${f.name}")
           else lit(null).cast(f.dataType)
-        when(tKey.isNull, sc) // not matched by target: insert values
+        f.name -> when(tKey.isNull, sc) // not matched by target: insert values
           .when(matched,
             whenMatchedUpdate.getOrElse(f.name, tc)) // update assignment
           .otherwise(tc) // not matched by source: untouched
-          .as(f.name)
-      }
+      }.toMap
       // WHEN NOT MATCHED [AND <cond>] THEN INSERT: a conditional
       // clause (SQL MERGE's guarded insert) overrides the boolean
       val insertGate = insertNotMatchedWhen
         .map(c => coalesce(c, lit(false)))
         .getOrElse(lit(insertNotMatched))
-      val keep =
-        when(tKey.isNull, insertGate)
-          .when(matched,
-            !coalesce(whenMatchedDelete.getOrElse(lit(false)), lit(false)))
-          .otherwise(lit(true))
+      val deleted = matched &&
+        coalesce(whenMatchedDelete.getOrElse(lit(false)), lit(false))
+      val keep = when(tKey.isNull, insertGate).otherwise(!deleted)
+      // the full-outer join already pairs each key's old and new rows:
+      // a deleted row stays as a delete-annotated pre-image
+      val dataCols = existing.columns.filterNot(_ == keyCol).toSeq
       t.join(sAl, tKey === sKey, "full_outer")
-        .where(keep)
-        .select(outCols.toSeq: _*)
+        .where(keep || deleted)
+        .select(existing.columns.map(c => newValue(c).as(c)) ++
+          dataCols.map(c => when(matched, col(s"t.$c")).as(prevCol(c))) ++
+          Seq(when(deleted, lit("delete"))
+              .when(tKey.isNull, lit("insert"))
+              .when(matched, changeOf(lit(true), lit(true), dataCols,
+                c => col(s"t.$c"), newValue)).as(ChangeCol),
+            keep.as(LiveCol), lit(null).cast("long").as(PutCol)): _*)
     }
   }
 

@@ -429,6 +429,20 @@ class MorDeleteSpec extends AnyFunSuite {
     assert(VersionedKeyedTable.snapshot(spark, dir).deletes.isEmpty)
   }
 
+  test("a wrong-key merge-on-read mutation names the entry point the " +
+      "caller used") {
+    val dir = freshDir()
+    make(dir, 10L)
+    val rows = Seq(("x", 1L)).toDF("v", "k")
+    def refusal(call: => Unit): String =
+      intercept[IllegalArgumentException](call).getMessage
+    assert(refusal(VersionedKeyedTable.upsertMor(spark, dir, rows, "v"))
+      .startsWith("requirement failed: upsertMor key 'v'"))
+    assert(refusal(VersionedKeyedTable.mutateMor(spark, dir, rows,
+      Some(Seq("x").toDF("v")), "v"))
+      .startsWith("requirement failed: mutateMor key 'v'"))
+  }
+
   test("REGRESSION: a zone-map-pruned SQL UPDATE rewrites ONLY the " +
       "covering files and loses no rows (group-based replace, not " +
       "whole-table replace)") {
