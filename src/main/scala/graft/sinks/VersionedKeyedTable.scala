@@ -1278,8 +1278,9 @@ object VersionedKeyedTable {
     *  - [[LiveCol]]: the row belongs to the post-image (the data write
     *    keeps it); a false row is a pre-image only — a deleted row, or
     *    the row an upsert's put replaced;
-    *  - [[PutCol]]: a put batch's row id — on a put row its own, on a
-    *    replaced row the put's that replaced it (see [[putRemerge]]);
+    *  - [[PutCol]]: only in a put remerge's output ([[putRemerge]]):
+    *    the row is a put (live) or the pre-image a put replaced (not
+    *    live), to be paired by key in the change write ([[pairPuts]]);
     *  - [[prevCol]]`(c)`: the row's old value of `c` when it changed. */
   private val ChangeCol = "__change"
   private val LiveCol = "__live"
@@ -1317,9 +1318,10 @@ object VersionedKeyedTable {
   /** Row-level diff old → new, classified into [[changeRows]]. Only
     * paths that hold no pairing of their own use it: the snapshot-diff
     * CDF fallback, whole-table and file-set replacement
-    * ([[replaceAll]], [[replaceFiles]]) and unbounded merge-on-read
-    * batches. The keyed commit paths take their change rows from their
-    * own merge pass instead. */
+    * ([[replaceAll]], [[replaceFiles]]) and merge-on-read batches
+    * that are unbounded or whose pre-images overflow the collect
+    * ([[visibleRows]]). The other keyed commit paths take their change
+    * rows from their own merge pass. */
   private def classifyDiff(oldDF: DataFrame, newDF: DataFrame,
       keyCol: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
@@ -1335,6 +1337,31 @@ object VersionedKeyedTable {
         (dataCols.map(c => col(s"n.$c").as(c)) ++
           dataCols.map(c => col(s"o.$c").as(prevCol(c))))): _*),
       keyCol, schema)
+  }
+
+  /** Whether `n` rows of a frame of `rows` rows measuring `bytes` fit
+    * a broadcast: `n` under the [[maxBroadcastKeys]] gate, and `n`
+    * rows at the frame's measured bytes per row within
+    * `spark.sql.autoBroadcastJoinThreshold` (negative: never). */
+  private[sinks] def fitsBroadcast(spark: SparkSession, n: Long,
+      bytes: Long, rows: Long): Boolean = {
+    val threshold = org.apache.spark.sql.internal.SQLConf.get
+      .autoBroadcastJoinThreshold
+    n <= maxBroadcastKeys(spark) &&
+      BigInt(bytes) * n <= BigInt(math.max(rows, 1L)) * threshold
+  }
+
+  /** The measured bytes of a localCheckpoint-ed frame: its cached
+    * blocks' sizes as the block manager reports them (no job). None
+    * when its blocks are not found. */
+  private[sinks] def pinnedBytes(pinned: DataFrame): Option[Long] = {
+    val ids = pinned.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+    val infos = pinned.sparkSession.sparkContext.getRDDStorageInfo
+      .filter(i => ids(i.id))
+    if (ids.isEmpty || infos.isEmpty) None
+    else Some(infos.map(i => i.memSize + i.diskSize).sum)
   }
 
   /** Persist a commit's captured change rows as immutable files under
@@ -1491,11 +1518,13 @@ object VersionedKeyedTable {
     * to its buckets on the driver, so routing, the existence filter
     * and the emptiness check (the delete-file write's own result)
     * launch no job of their own. The existence read COLLECTS the
-    * doomed rows (bounded like the keys), and the delete-file and CDF
-    * writes project that local relation — the checkpointed batch, the
-    * key take, the existence read and the two writes are the commit's
-    * jobs. Larger batches find their buckets with one map-only pass,
-    * semi-join shuffled and checkpoint the doomed rows.
+    * doomed rows when they measure within the broadcast threshold
+    * ([[visibleRows]]), and the delete-file and CDF writes project
+    * that local relation — the checkpointed batch, the key take, the
+    * existence read and the two writes are the commit's jobs. Larger
+    * batches find their buckets with one map-only pass, semi-join
+    * shuffled and checkpoint the doomed rows, as do bounded batches
+    * whose rows overflow the collect.
     * Concurrency is [[commitLoop]]'s: disjoint racers rebase (my
     * delete files stay valid — their buckets' data and delete entries
     * are untouched), overlap re-runs the existence check. */
@@ -1602,10 +1631,12 @@ object VersionedKeyedTable {
     * (at most [[MaxPointLookupKeys]] keys, already on the driver)
     * prunes the files through [[keyFilesOf]] and filters the rows
     * with an IN list, as [[readKeys]] does — no key relation to
-    * build, so no broadcast job — and the rows, bounded like the keys,
-    * are COLLECTED (Left): the commit's later writes then run against
-    * a local relation. Unbounded batches semi-join shuffled and
-    * checkpoint (Right). Either way one job pins them. */
+    * build, so no broadcast job — and the rows are COLLECTED (Left)
+    * when they measure within the broadcast threshold
+    * ([[collectSmall]]): the commit's later writes then run against a
+    * local relation. Otherwise they are checkpointed (Right); an
+    * unbounded batch semi-joins shuffled first. One job pins them, two
+    * when a bounded batch's rows overflow the collect. */
   private def visibleRows(spark: SparkSession, dir: String,
       snap: Snapshot, schema: org.apache.spark.sql.types.StructType,
       nb: Int, keys: DataFrame, keyCol: String,
@@ -1623,13 +1654,45 @@ object VersionedKeyedTable {
           .where(col(keyCol).isin(ss: _*))
     }
     jobPhase(spark, "checkpoint-merged") {
-      bounded match {
-        case Some(rows) => Left(rows.collect().toSeq)
-        case None => Right(scan(touched.toSeq.sorted
+      bounded.flatMap(collectSmall) match {
+        case Some(rows) => Left(rows)
+        case None => Right(bounded.getOrElse(scan(touched.toSeq.sorted
             .flatMap(b => snap.files.getOrElse(b, Seq.empty)))
-          .join(keys.select(col(keyCol)), Seq(keyCol), "left_semi")
+          .join(keys.select(col(keyCol)), Seq(keyCol), "left_semi"))
           .localCheckpoint(true))
       }
+    }
+  }
+
+  /** `rows` on the driver when their measured size, as UnsafeRows,
+    * fits `spark.sql.autoBroadcastJoinThreshold`: one job, each
+    * partition held to an even share of the threshold. A partition past
+    * its share stops reading and returns nothing, and the result is
+    * None. */
+  private[sinks] def collectSmall(rows: DataFrame)
+      : Option[Seq[org.apache.spark.sql.Row]] = {
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection,
+      UnsafeRow}
+    val schema = rows.schema
+    val plan = rows.queryExecution.toRdd
+    val share = org.apache.spark.sql.internal.SQLConf.get
+      .autoBroadcastJoinThreshold / math.max(plan.getNumPartitions, 1)
+    val parts = plan.mapPartitions { it =>
+      val toUnsafe = UnsafeProjection.create(schema)
+      val kept = Array.newBuilder[UnsafeRow]
+      var bytes = 0L
+      while (bytes <= share && it.hasNext) {
+        val r = toUnsafe(it.next()).copy()
+        bytes += r.getSizeInBytes
+        kept += r
+      }
+      Iterator.single(if (bytes <= share) Some(kept.result()) else None)
+    }.collect()
+    if (parts.exists(_.isEmpty)) None
+    else {
+      val toRow = org.apache.spark.sql.catalyst.encoders
+        .ExpressionEncoder(schema).resolveAndBind().createDeserializer()
+      Some(parts.iterator.flatMap(_.get).map(toRow).toSeq)
     }
   }
 
@@ -1643,8 +1706,9 @@ object VersionedKeyedTable {
   /** A bounded merge-on-read commit's change rows: each put of `puts`
     * paired with its pre-image among the collected `pre` rows, plus a
     * delete for each `doomed` (delete-only) key that had one. One
-    * map-only pass over the two checkpointed frames: `pre` travels as
-    * a broadcast variable, which launches no job, so the change write
+    * map-only pass over the two checkpointed frames: `pre`, measured
+    * within the broadcast threshold ([[collectSmall]]), travels as a
+    * broadcast variable, which launches no job, so the change write
     * is the only job. The pairing looks keys up by value, which the
     * bounded route guarantees are integral or strings of the table's
     * key type. */
@@ -1746,13 +1810,14 @@ object VersionedKeyedTable {
     *
     * Jobs: a bounded batch (at most [[MaxPointLookupKeys]] integral
     * or string keys, puts and deletes together) collects the rows it
-    * replaces or deletes in the existence read ([[visibleRows]]); the
-    * delete-file write runs over that local relation, and the change
-    * rows pair each put with its collected pre-image in a map-only
-    * pass over the checkpointed batch ([[pairedChanges]]) — no
-    * broadcast job, no shuffle: the CDF write is one job. An unbounded
-    * batch checkpoints the replaced rows and diffs them against the
-    * puts ([[classifyDiff]]).
+    * replaces or deletes in the existence read ([[visibleRows]]) when
+    * they measure within the broadcast threshold; the delete-file
+    * write runs over that local relation, and the change rows pair
+    * each put with its collected pre-image in a map-only pass over
+    * the checkpointed batch ([[pairedChanges]]) — no broadcast job, no
+    * shuffle: the CDF write is one job. An unbounded batch, or one
+    * whose rows overflow the collect, checkpoints the replaced rows
+    * and diffs them against the puts ([[classifyDiff]]).
     *
     * `expectedVersion` (the SQL row-level operations' serializable
     * gate): when set, ANY intervening commit fails the call with the
@@ -2135,7 +2200,6 @@ object VersionedKeyedTable {
     commitLoop(spark, dir, "transact", 10, rebaseFor = None) { snap =>
       val snapDF = read(spark, dir, Some(snap.version))
       val batch = derive(snapDF)
-        .withColumn(PutCol, monotonically_increasing_id())
         .withColumn("__bucket", bucketOf(keyCol, nb))
         .localCheckpoint(true) // pin the derivation before any racer commits
       val (myTouched, batchRows) = touchedBucketsAndCount(batch)
@@ -2145,8 +2209,8 @@ object VersionedKeyedTable {
         // onto existing rows that lack them
         val evolvedTx = evolveSchema(spark, dir,
           snap.schema.getOrElse(metaSchema),
-          org.apache.spark.sql.types.StructType(batch.schema.fields
-            .filterNot(_.name == PutCol).map(_.copy(nullable = true))))
+          org.apache.spark.sql.types.StructType(
+            batch.schema.fields.map(_.copy(nullable = true))))
         val existing = morScan(spark, dir, snap, evolvedTx, keyCol,
           myTouched.toSeq.sorted
             .flatMap(b => snap.files.getOrElse(b, Seq.empty)),
@@ -2154,7 +2218,7 @@ object VersionedKeyedTable {
         val ((newFiles, newStats, newCounts, newExtra), changeFiles) =
           writeMerge(spark, dir, snap,
             putRemerge(keyCol)(existing, batch, batchRows), keyCol, nb,
-            evolvedTx, captureChanges = true)
+            evolvedTx, captureChanges = true, batchRows)
         val manifest = snap.files ++
           myTouched.toSeq.map(b => b -> newFiles.getOrElse(b, Seq.empty))
         Some((_, _) => renderManifest(myTouched, manifest, evolvedTx,
@@ -2174,83 +2238,55 @@ object VersionedKeyedTable {
       onBeforeCommit: () => Unit,
       captureChanges: Boolean = true,
       commitMeta: Map[String, String] = Map.empty): Unit =
-    if (isDelete)
-      mutateWith(spark, dir, rows, keyCol, onBeforeCommit, captureChanges,
-        commitMeta) { (existing, batch, batchRows) =>
-        // distinct keys: a repeated key would pair its row twice. Under
-        // the broadcast gate they dedupe inside the broadcast's own
-        // single task — no exchange, no extra job
-        val keys = batch.select(col(keyCol).as(PairKey))
-        val doomed =
-          if (batchRows <= maxBroadcastKeys(spark))
-            broadcast(keys.coalesce(1).distinct())
-          else keys.distinct()
+    mutateWith(spark, dir, rows, keyCol, onBeforeCommit, captureChanges,
+      commitMeta) { (existing, batch, batchRows) =>
+      if (!isDelete) putRemerge(keyCol)(existing, batch, batchRows)
+      else {
         val hit = col(PairKey).isNotNull
-        existing.join(doomed, col(keyCol) === col(PairKey), "left_outer")
+        existing.join(pairKeys(batch, keyCol, batchRows),
+            col(keyCol) === col(PairKey), "left_outer")
           .select(existing.columns.map(col) ++
             existing.columns.filterNot(_ == keyCol).map(c =>
               when(hit, col(c)).as(prevCol(c))) ++
-            Seq(when(hit, lit("delete")).as(ChangeCol), (!hit).as(LiveCol),
-              lit(null).cast("long").as(PutCol)): _*)
+            Seq(when(hit, lit("delete")).as(ChangeCol),
+              (!hit).as(LiveCol)): _*)
       }
-    else
-      // each put row carries an id fixed by the batch checkpoint, so a
-      // replaced row can name the put that replaced it
-      mutateWith(spark, dir,
-        rows.withColumn(PutCol, monotonically_increasing_id()), keyCol,
-        onBeforeCommit, captureChanges, commitMeta,
-        carryCols = Set(PutCol))(putRemerge(keyCol))
+    }
 
-  /** The put remerge of [[upsert]] and [[transact]] (`batch` carries
-    * each put row's [[PutCol]] id): the puts join each touched row
-    * through the batch broadcast. A matched row is the pre-image of its
-    * put and leaves the post-image (the put row replaces it); every put
-    * row lands as a tentative insert, which [[writeMerge]] turns back
-    * into no change row when the pairing observed its id. */
+  /** The put remerge of [[upsert]] and [[transact]]: each touched row
+    * joins the batch's distinct keys ([[pairKeys]]). A matched row is
+    * the pre-image a put replaces: it leaves the post-image, and the
+    * put row takes its place. Both carry [[PutCol]]; the change write
+    * pairs them by key ([[pairPuts]]). */
   private def putRemerge(keyCol: String)(existing: DataFrame,
       batch: DataFrame, batchRows: Long): DataFrame = {
-    val dataCols = existing.columns.filterNot(_ == keyCol).toSeq
     val batchCols = batch.columns.toSet
-    def nullOf(c: String) = lit(null).cast(existing.schema(c).dataType)
-    def newCol(c: String) = s"__new_$c"
-    def newOf(c: String) = if (batchCols(c)) col(newCol(c)) else nullOf(c)
-    val puts = batch.select((col(keyCol).as(PairKey) +: col(PutCol) +:
-      dataCols.filter(batchCols).map(c => col(c).as(newCol(c)))): _*)
     val hit = col(PairKey).isNotNull
-    val touched = existing
-      .join(rowsMaybeBroadcast(puts, batchRows),
+    existing.join(pairKeys(batch, keyCol, batchRows),
         col(keyCol) === col(PairKey), "left_outer")
-      .select((col(keyCol) +:
-        dataCols.map(c => when(hit, newOf(c)).otherwise(col(c)).as(c))) ++
-        dataCols.map(c => when(hit, col(c)).as(prevCol(c))) ++
-        Seq(when(hit, changeOf(lit(true), lit(true), dataCols, col,
-            newOf)).as(ChangeCol),
-          (!hit).as(LiveCol), col(PutCol)): _*)
-    val putRows = batch.select((col(keyCol) +: dataCols.map(c =>
-        (if (batchCols(c)) col(c) else nullOf(c)).as(c))) ++
-      dataCols.map(c => nullOf(c).as(prevCol(c))) ++
-      Seq(lit("insert").as(ChangeCol), lit(true).as(LiveCol),
-        col(PutCol)): _*)
-    touched.unionByName(putRows)
+      .select(existing.columns.map(col) ++
+        Seq((!hit).as(LiveCol), hit.as(PutCol)): _*)
+      .unionByName(batch.select(existing.schema.fields.map(f =>
+          (if (batchCols(f.name)) col(f.name)
+           else lit(null).cast(f.dataType)).as(f.name)) ++
+        Seq(lit(true).as(LiveCol), lit(true).as(PutCol)): _*))
   }
 
   /** The batch-key column of a pairing join's batch side. */
   private val PairKey = "__pair_key"
 
-  /** Byte cap (estimated from the schema's default sizes) on a put
-    * batch broadcast whole for [[mutate]]'s pairing join: it carries
-    * the rows, where a key relation carries only keys. */
-  private val MaxBroadcastRowBytes = 256L << 20
-
-  /** `rows` broadcast-hinted when both the [[maxBroadcastKeys]] row
-    * gate and [[MaxBroadcastRowBytes]] pass; otherwise the planner
-    * picks a shuffled join. */
-  private def rowsMaybeBroadcast(rows: DataFrame, batchRows: Long)
-      : DataFrame =
-    if (batchRows <= maxBroadcastKeys(rows.sparkSession) &&
-        batchRows * rows.schema.defaultSize <= MaxBroadcastRowBytes)
-      broadcast(rows)
-    else rows
+  /** The batch's DISTINCT keys as [[PairKey]], for the left-outer join
+    * that marks each touched row a batch key addresses (a repeated key
+    * would pair its row twice). Under the [[maxBroadcastKeys]] gate the
+    * keys are broadcast and dedupe inside the broadcast's own single
+    * task — no exchange, no extra job; above it the planner shuffles. */
+  private def pairKeys(batch: DataFrame, keyCol: String,
+      batchRows: Long): DataFrame = {
+    val keys = batch.select(col(keyCol).as(PairKey))
+    if (batchRows <= maxBroadcastKeys(batch.sparkSession))
+      broadcast(keys.coalesce(1).distinct())
+    else keys.distinct()
+  }
 
   /** The copy-on-write core every keyed mutation rides: `remerge`
     * computes the touched buckets' NEW contents from their current
@@ -2305,7 +2341,7 @@ object VersionedKeyedTable {
         Some(myTouched))
       val ((newFiles, newStats, newCounts, newExtra), changeFiles) =
         writeMerge(spark, dir, snap, remerge(existing, batch, batchRows),
-          keyCol, nb, evolved, captureChanges)
+          keyCol, nb, evolved, captureChanges, batchRows)
       onBeforeCommit()
       Some((base, _) => renderManifest(myTouched,
         base.files ++
@@ -2324,62 +2360,71 @@ object VersionedKeyedTable {
 
   /** Pin a remerge's annotated rows ([[mutateWith]]) and write them:
     * the live rows as the touched buckets' new data files and, with
-    * `captureChanges`, the change rows. Returns the data write's
-    * (files, stats, counts, extra stats) and the change files. */
+    * `captureChanges`, the change rows; without it only the live rows'
+    * data columns are pinned. `batchRows` bounds a put remerge's
+    * pre-images. Returns the data write's (files, stats, counts, extra
+    * stats) and the change files. */
   private def writeMerge(spark: SparkSession, dir: String, snap: Snapshot,
       annotated: DataFrame, keyCol: String, nb: Int,
       evolved: org.apache.spark.sql.types.StructType,
-      captureChanges: Boolean)
+      captureChanges: Boolean, batchRows: Long)
       : ((Map[Int, Seq[String]], Map[String, (String, String)],
           Map[String, Long], Map[String, Map[String, (String, String)]]),
          Option[Seq[String]]) = {
-    // the pairing's put ids, observed by the checkpoint job itself (a
-    // named observation read off the plan: an Observation object would
-    // register state that stops the session from serializing)
-    val observed = annotated.withColumn("__bucket", bucketOf(keyCol, nb))
-      .observe("paired", collect_set(when(!col(LiveCol), col(PutCol)))
-        .as("ids"))
+    def live(df: DataFrame): DataFrame = df.where(col(LiveCol))
+      .select((evolved.fieldNames :+ "__bucket").map(col): _*)
+    val rows = annotated.withColumn("__bucket", bucketOf(keyCol, nb))
     val merged = jobPhase(spark, "checkpoint-merged") {
-      observed.localCheckpoint(true) // never read a file a racer vacuums
+      // never read a file a racer vacuums
+      (if (captureChanges) rows else live(rows)).localCheckpoint(true)
     }
-    val written =
-      writeDataFiles(spark, dir,
-        merged.where(col(LiveCol))
-          .select((evolved.fieldNames :+ "__bucket").map(col): _*),
-        keyCol, statsCols = inheritedStatsCols(snap))
-    // commit-time CHANGE CAPTURE: the checkpoint already pairs every
-    // batch key's pre-image with its post-image, so the change rows
-    // are a map-only projection of it — one job, the write — and
-    // every later changesBetween over this commit reads O(changed
-    // rows) instead of re-diffing bucket snapshots. Only batch keys
-    // carry an annotation; untouched rows pass through with none.
-    // An upsert's put row is an insert unless the pairing saw a
-    // replaced row name it (the broadcast join cannot tell a
-    // touched-bucket task that some OTHER task matched the put): the
-    // observed ids travel as a broadcast variable, which launches no
-    // job. captureChanges=false skips the write for write-only
-    // tables; spans crossing such a commit take the snapshot-diff
-    // fallback.
+    val written = writeDataFiles(spark, dir,
+      if (captureChanges) live(merged) else merged, keyCol,
+      statsCols = inheritedStatsCols(snap))
+    // commit-time CHANGE CAPTURE: the checkpoint already holds every
+    // batch key's pre-image beside its post-image, so every later
+    // changesBetween over this commit reads O(changed rows) instead of
+    // re-diffing bucket snapshots. A merge or delete annotated each
+    // row in its own join, so its change rows are a map-only
+    // projection — one job, the write. An upsert's puts pair with the
+    // pre-images they replaced in one join of O(batch) rows: the
+    // pre-images are broadcast when their size, at the checkpoint's
+    // measured bytes per row, fits the broadcast threshold (one more
+    // job), else both sides shuffle. captureChanges=false skips the
+    // write for write-only tables; spans crossing such a commit take
+    // the snapshot-diff fallback.
     val changeFiles =
       if (!captureChanges) None
       else {
-        // absent only when the plan ran empty, so nothing was paired
-        val ids = observed.queryExecution.observedMetrics.get("paired")
-          .fold(Set.empty[Long])(_.getSeq[Long](0).toSet)
         // a null key addresses no row, so it has no change row
         val keyed = merged.where(col(keyCol).isNotNull)
-        val changed =
-          if (ids.isEmpty) keyed
-          else {
-            val seen = spark.sparkContext.broadcast(ids)
-            val replacedPut = udf((id: Long) => seen.value(id))
-            keyed.where(!(col(LiveCol) && col(PutCol).isNotNull &&
-              replacedPut(col(PutCol))))
-          }
-        Some(writeChangeFiles(spark, dir,
-          changeRows(changed, keyCol, evolved)))
+        Some(writeChangeFiles(spark, dir, changeRows(
+          if (!annotated.columns.contains(PutCol)) keyed
+          else pairPuts(keyed, keyCol, evolved,
+            pinnedBytes(merged).exists(fitsBroadcast(spark, batchRows, _,
+              written._3.values.sum))),
+          keyCol, evolved)))
       }
     (written, changeFiles)
+  }
+
+  /** A put remerge's change annotation ([[putRemerge]]): each put row
+    * paired by key with the pre-image it replaced — an update when a
+    * data column differs, none when none does, an insert when it
+    * replaced nothing. The pre-images, at most the batch's rows, are
+    * broadcast when `broadcastPre`; otherwise both sides shuffle. */
+  private def pairPuts(pinned: DataFrame, keyCol: String,
+      schema: org.apache.spark.sql.types.StructType,
+      broadcastPre: Boolean): DataFrame = {
+    val dataCols = schema.fieldNames.filterNot(_ == keyCol).toSeq
+    val pre = pinned.where(col(PutCol) && !col(LiveCol))
+      .select((col(keyCol).as(PairKey) +:
+        dataCols.map(c => col(c).as(prevCol(c)))): _*)
+    pinned.where(col(PutCol) && col(LiveCol))
+      .join(if (broadcastPre) broadcast(pre) else pre,
+        col(keyCol) === col(PairKey), "left_outer")
+      .withColumn(ChangeCol, changeOf(col(PairKey).isNotNull, lit(true),
+        dataCols, c => col(prevCol(c)), col))
   }
 
   /** MERGE INTO — the general three-clause keyed merge (the SQL
@@ -2470,7 +2515,7 @@ object VersionedKeyedTable {
               .when(tKey.isNull, lit("insert"))
               .when(matched, changeOf(lit(true), lit(true), dataCols,
                 c => col(s"t.$c"), newValue)).as(ChangeCol),
-            keep.as(LiveCol), lit(null).cast("long").as(PutCol)): _*)
+            keep.as(LiveCol)): _*)
     }
   }
 

@@ -140,6 +140,64 @@ class ChangeCaptureFidelitySpec extends AnyFunSuite {
     }
   }
 
+  /** `body` under the session settings `kv`, restored after. */
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("wide rows past the broadcast threshold and batches past the " +
+      "broadcast-key gate capture the snapshot diff too") {
+    val (cap, raw) = (freshDir(), freshDir())
+    // ~8 KB of text per row: a batch's 10 pre-images measure ~80 KB
+    def text(tag: String) = tag + "x" * 8000
+    def rows(ks: Seq[Long], tag: String) =
+      ks.map(k => (k, k % 3, text(s"$tag$k"))).toDF("k", "g", "text")
+    Seq(cap, raw).foreach(d => vkt.create(
+      rows(1L to 80L, "v").repartition(2), d, "k", numBuckets = 4))
+    def same(what: String, expect: (String, Int)*)(
+        step: (String, Boolean) => Unit) =
+      sameChanges(cap, raw, "k", what, expect.toMap)(step)
+
+    // 32 KB: the pre-images of every batch below overflow it, so the
+    // upsert's pairing shuffles and the merge-on-read commits
+    // checkpoint their pre-images instead of collecting them
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "32768") {
+      same("wide upsert", "update" -> 10, "insert" -> 2) { (d, c) =>
+        vkt.upsert(spark, d, rows((1L to 10L) ++ Seq(81L, 82L), "u"),
+          "k", captureChanges = c)
+      }
+      same("wide upsertMor", "update" -> 10, "insert" -> 2) { (d, c) =>
+        vkt.upsertMor(spark, d, rows((11L to 20L) ++ Seq(83L, 84L), "m"),
+          "k", captureChanges = c)
+      }
+      same("wide mutateMor", "update" -> 5, "delete" -> 5) { (d, c) =>
+        vkt.mutateMor(spark, d, rows(21L to 25L, "p"),
+          Some((26L to 30L).toDF("k")), "k", captureChanges = c)
+      }
+      same("wide deleteMor", "delete" -> 10) { (d, c) =>
+        vkt.deleteMor(spark, d, (31L to 40L).toDF("k"), "k",
+          captureChanges = c)
+      }
+    }
+    // no batch passes the key gate: every pairing join shuffles
+    withConf("spark.graft.maxBroadcastKeys" -> "0") {
+      same("upsert past the key gate", "update" -> 5, "insert" -> 1) {
+        (d, c) =>
+          vkt.upsert(spark, d, rows((41L to 45L) ++ Seq(85L), "g"), "k",
+            captureChanges = c)
+      }
+      same("delete past the key gate", "delete" -> 3) { (d, c) =>
+        vkt.delete(spark, d, Seq(46L, 47L, 48L, 999L).toDF("k"), "k",
+          captureChanges = c)
+      }
+    }
+  }
+
   test("a full view refresh's carry-column merge captures the view's " +
       "snapshot diff, with no carry column in its change rows") {
     val base = freshDir()

@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 import graft.{SparkJobs, TestSpark}
 
 /** The keyed commit paths' Spark job budgets, counted on a 4-bucket
-  * table. A commit's change rows come from the pass that already pairs
-  * each batch key's old and new rows, so capturing them costs one
-  * map-only write: a change that re-derives them (a diff join, a key
-  * broadcast) shows up here as extra jobs. Each operation's result is
+  * table. A commit's change rows come from rows its merge pass already
+  * pinned: a merge's and a merge-on-read commit's cost one map-only
+  * write, an upsert's one broadcast of its pre-images and the write. A
+  * change that re-derives them (a diff join of the touched buckets)
+  * shows up here as extra jobs. Each operation's result is
   * checked against a driver-side model, so a budget can never be met
   * by skipping work. */
 class CommitJobBudgetSpec extends AnyFunSuite {
@@ -80,11 +81,6 @@ class CommitJobBudgetSpec extends AnyFunSuite {
       .select("g", "cnt", "total").as[(Long, Long, Long)].collect()
       .map { case (g, n, t) => g -> (n, t) }.toMap === groups,
       "view after refresh")
-
-    // the captures leave the session serializable: closures that hold
-    // it (as graft.mr.Counters does) still ship to tasks
-    new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream())
-      .writeObject(spark)
 
     info(s"jobs: upsert $upJobs, merge $mergeJobs, upsertMor $morJobs, " +
       s"refresh $refreshJobs")

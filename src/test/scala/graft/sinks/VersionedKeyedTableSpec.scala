@@ -1590,6 +1590,37 @@ class VersionedKeyedTableSpec extends AnyFunSuite {
     }
   }
 
+  test("commit-time broadcasts and collects gate on MEASURED row " +
+      "bytes: wide text rows the schema's static estimate calls small " +
+      "stay off the broadcast and the driver") {
+    val autoKey = "spark.sql.autoBroadcastJoinThreshold"
+    val prevAuto = spark.conf.get(autoKey)
+    // 200 rows of ~8 KB text: ~1.6 MB, where the schema's default
+    // sizes (8 B + 20 B a row) estimate under 6 KB
+    val wide = (1L to 200L).map(k => (k, "x" * 8000)).toDF("k", "text")
+      .repartition(4)
+    assert(wide.schema.defaultSize * 200L < 6000L)
+    val pinned = wide.localCheckpoint(true)
+    val measured = VersionedKeyedTable.pinnedBytes(pinned)
+    assert(measured.exists(_ >= 200L * 8000L),
+      s"checkpoint measured at $measured")
+    spark.conf.set(autoKey, "1048576")
+    try {
+      val bytes = measured.get
+      assert(!VersionedKeyedTable.fitsBroadcast(spark, 200L, bytes, 200L),
+        "1.6 MB of rows must not pass a 1 MB threshold")
+      assert(VersionedKeyedTable.fitsBroadcast(spark, 20L, bytes, 200L),
+        "a tenth of the rows fits")
+      assert(VersionedKeyedTable.collectSmall(wide).isEmpty,
+        "rows past the threshold must not be collected")
+      assert(VersionedKeyedTable.collectSmall(wide.where(col("k") <= 20L))
+        .map(_.map(_.getLong(0)).sorted) === Some(1L to 20L))
+      spark.conf.set(autoKey, "-1")
+      assert(!VersionedKeyedTable.fitsBroadcast(spark, 1L, 1L, 200L))
+      assert(VersionedKeyedTable.collectSmall(wide.limit(1)).isEmpty)
+    } finally spark.conf.set(autoKey, prevAuto)
+  }
+
   test("bounded key lists route on the driver: keyFiles, keyFilesStr, " +
       "readKeys and readKeysStr launch no Spark job") {
     val dir = freshDir()
