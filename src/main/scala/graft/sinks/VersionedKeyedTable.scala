@@ -1345,8 +1345,7 @@ object VersionedKeyedTable {
     * `spark.sql.autoBroadcastJoinThreshold` (negative: never). */
   private[sinks] def fitsBroadcast(spark: SparkSession, n: Long,
       bytes: Long, rows: Long): Boolean = {
-    val threshold = org.apache.spark.sql.internal.SQLConf.get
-      .autoBroadcastJoinThreshold
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
     n <= maxBroadcastKeys(spark) &&
       BigInt(bytes) * n <= BigInt(math.max(rows, 1L)) * threshold
   }
@@ -1675,7 +1674,7 @@ object VersionedKeyedTable {
       UnsafeRow}
     val schema = rows.schema
     val plan = rows.queryExecution.toRdd
-    val share = org.apache.spark.sql.internal.SQLConf.get
+    val share = rows.sparkSession.sessionState.conf
       .autoBroadcastJoinThreshold / math.max(plan.getNumPartitions, 1)
     val parts = plan.mapPartitions { it =>
       val toUnsafe = UnsafeProjection.create(schema)
