@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -31,16 +31,28 @@ import org.apache.spark.sql.expressions.Window
   *                          contamination -> scrub, keep rest (redact)
   *   8. clean             — keep verbatim (keep)
   *
-  * Scale contract: each tier contributes exactly its own keyed
-  * exchange — content-hash groupBy (exact), band-signature join + by-id
-  * verify (LSH, candidate-bounded), ONE gram-keyed exchange
-  * (winnowing), a broadcast semi-type join on the bounded benchmark
-  * gram set (decontamination), a stateless projection (quality rules),
-  * and per-round broadcast weight joins over doc-keyed aggregates
-  * (classifier). The tiers then meet in per-doc-keyed left joins — no
-  * cross product, no corpus-sized broadcast, nothing quadratic. Every
-  * signal is integer (margins, basis points, counts), so a SQL oracle
-  * replays the whole manifest including the decision column.
+  * Scale contract, batch manifest: each tier contributes exactly its
+  * own keyed exchange — content-hash groupBy (exact), band-signature
+  * join + by-id verify (LSH, candidate-bounded), ONE gram-keyed
+  * exchange (winnowing), a broadcast semi-type join on the bounded
+  * benchmark gram set (decontamination), a stateless projection
+  * (quality rules), and per-round broadcast weight joins over
+  * doc-keyed aggregates (classifier). The tiers then meet in
+  * per-doc-keyed left joins — no cross product, no corpus-sized
+  * broadcast, nothing quadratic.
+  *
+  * Scale contract, serving ([[servingDecisions]]): a micro-batch whose
+  * probe keys fit the point-lookup bound never joins the index. Its
+  * keys reach the driver in one take, the index and prior rows they
+  * match in a second collect, near-dup candidates' shingles in a
+  * third, each capped at that bound, and every tier runs over the
+  * batch on one partition — no exchange, and a job count that does
+  * not grow with the index (the probes still scan the index whole). A
+  * larger batch joins each tier against the index relations. Both
+  * meet in one union + groupBy(doc_id).
+  *
+  * Every signal is integer (margins, basis points, counts), so a SQL
+  * oracle replays the whole manifest including the decision column.
   */
 object TextCuration {
 
@@ -157,10 +169,7 @@ object TextCuration {
         .as("overlap_bp"))
 
     // tier 5: quality rule chain (stateless projection over tokens)
-    val q = TextDedup.withTokens(docs).select(col("doc_id"),
-      size(col("w")).cast("long").as("n_tokens"),
-      QualityFilters.meanTokenLenCentichars(col("w")).as("mwl_cc"),
-      TextStats.hasAnyStopword("w", cfg.stopwords).as("has_stop"))
+    val q = qualitySignals(docs, cfg)
 
     // tier 6 margins under the pocket weights trained above
     val margins = LinearClassifier.score(spark, feats, weights)
@@ -179,10 +188,7 @@ object TextCuration {
         coalesce(col("near_dup"), lit(0)).cast("int").as("near_dup"),
         coalesce(col("dup_chars"), lit(0L)).cast("long").as("dup_chars"),
         coalesce(col("overlap_bp"), lit(0L)).cast("long").as("overlap_bp"),
-        col("n_tokens"),
-        when(col("n_tokens") >= cfg.minTokens &&
-          col("mwl_cc").between(cfg.mwlLoCc, cfg.mwlHiCc) &&
-          col("has_stop"), 1).otherwise(0).as("quality_pass"),
+        col("n_tokens"), col("quality_pass"),
         coalesce(col("margin"), lit(0L)).cast("long").as("margin"))
     val reason =
       when(col("doc_id") % cfg.benchmarkMod === 0, "benchmark_member")
@@ -382,7 +388,41 @@ object TextCuration {
     *     SubstringDedup.incrementalDedup's priorIngestGrams
     *     (n_corpus_dup + n_batch_dup is split-invariant).
     * Contamination, quality, and the frozen classifier are stateless
-    * per batch. Per-ingest cost tracks the BATCH everywhere.
+    * per batch.
+    *
+    * Two routes give the same rows (TextCurationSpec holds them equal
+    * row for row); the gate picks one per call:
+    *   - BOUNDED, the micro-batch shape. The batch's probe keys (anchor
+    *     grams, md5 content hashes, distinct 5-grams and LSH band keys)
+    *     come to the driver in ONE take over the anchors, the batch and
+    *     its shingles, each coalesced to one partition. That take is
+    *     the gate: at most
+    *     [[graft.sinks.VersionedKeyedTable.MaxPointLookupKeys]] key
+    *     rows, and a batch over it stops the scan there. A second
+    *     collect fetches the index and prior rows matching those keys
+    *     (set-membership filters, so it works on any relation: a
+    *     loaded KeyedTable index or an in-memory one), and a third the
+    *     shingles of the near-dup candidate pairs, verified on the
+    *     driver by TextDedup's rule. The matched rows, the candidate
+    *     pairs and their shingle rows are each held to the same bound:
+    *     the pairs are counted before they are formed, and each
+    *     partition of the two collects hands over at most the bound
+    *     + 1 rows. Every tier then runs
+    *     over the one-partition batch with the matched sets as
+    *     membership filters, so no stage exchanges data; the sets
+    *     reach generated code as reference objects, never as
+    *     literals, so its classes repeat batch to batch. Jobs: those
+    *     collects, the weights broadcast and the caller's write,
+    *     whatever the index's size (ScaleInvarianceSpec). Each probe
+    *     still scans the index and prior relations in full, so rows
+    *     read and CPU grow with the index; only the job count and the
+    *     driver-held rows do not.
+    *   - UNBOUNDED, when the keys, the matched rows, the candidate
+    *     pairs or their shingle rows exceed that bound: each tier
+    *     joins the batch against the whole index and prior relations.
+    *     The gate's take is all it costs beyond the join route.
+    * Both routes meet in one union + groupBy(doc_id) and one reason
+    * CASE ([[assembleServing]]).
     *
     * `batchShinglesOpt` / `batchAnchorsOpt`: the (checkpointed) batch
     * relations when the caller already computed them — the streaming
@@ -391,8 +431,53 @@ object TextCuration {
   def servingDecisions(spark: SparkSession, batchDocs: DataFrame,
       idx: ServingIndex, prior: IngestPrior, cfg: Config,
       batchShinglesOpt: Option[DataFrame] = None,
-      batchAnchorsOpt: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      batchAnchorsOpt: Option[DataFrame] = None): DataFrame =
+    servingDecisionsWithin(spark, batchDocs, idx, prior, cfg,
+      batchShinglesOpt, batchAnchorsOpt,
+      graft.sinks.VersionedKeyedTable.MaxPointLookupKeys)
+
+  /** [[servingDecisions]] with the bounded route's key bound as a
+    * parameter: a bound of 0 forces the unbounded route. */
+  private[functions] def servingDecisionsWithin(spark: SparkSession,
+      batchDocs: DataFrame, idx: ServingIndex, prior: IngestPrior,
+      cfg: Config, batchShinglesOpt: Option[DataFrame],
+      batchAnchorsOpt: Option[DataFrame], maxProbeKeys: Int): DataFrame = {
+    val batchSh = batchShinglesOpt.getOrElse(
+      TextDedup.shingles(batchDocs).localCheckpoint(true))
+    val batchAnchors = batchAnchorsOpt.getOrElse(
+      SubstringDedup.anchors(batchDocs).localCheckpoint(true))
+    // the MATERIALIZED band index (and the FOLDED prior bands) mean no
+    // band derivation beyond this batch's own happens per ingest — a
+    // caller without folded bands (one-shot use) pays a derive over
+    // the prior shingles as fallback
+    val priorBands = prior.bands.orElse(prior.shingles.map(lshBandsOf))
+    probedTiers(spark, batchDocs, batchSh, batchAnchors, idx, prior,
+        priorBands, cfg, maxProbeKeys) match {
+      case Some(tiers) => assembleServing(tiers, cfg, onePartition = true)
+      case None => assembleServing(joinedTiers(spark, batchDocs, batchSh,
+        batchAnchors, idx, prior, priorBands, cfg), cfg,
+        onePartition = false)
+    }
+  }
+
+  /** The serving LSH operator's parameters: 12 minhashes in 4 bands,
+    * verified at Jaccard >= 4/5 — one definition for both routes. */
+  private val LshHashes = 12
+  private val LshBands = 4
+  private val NearNum = 4
+  private val NearDen = 5
+
+  private def lshBandsOf(sh: DataFrame): DataFrame =
+    TextDedup.lshBands(TextDedup.minhashSignatures(sh, LshHashes),
+      bands = LshBands, rowsPerBand = LshHashes / LshBands)
+
+  /** The unbounded route, and the reference the bounded one is tested
+    * against: each tier joins the batch against the whole index and
+    * prior relations. */
+  private def joinedTiers(spark: SparkSession, batchDocs: DataFrame,
+      batchSh: DataFrame, batchAnchors: DataFrame, idx: ServingIndex,
+      prior: IngestPrior, priorBands: Option[DataFrame],
+      cfg: Config): Seq[DataFrame] = {
     // exact tier: corpus set membership + keep-first (prior-batch aware)
     val priorH = prior.hashes
       .map(_.select(col("h")).distinct().withColumn("in_prior", lit(1)))
@@ -410,29 +495,19 @@ object TextCuration {
         when(col("in_corpus").isNull &&
           (col("in_prior") === 1 || col("rn") > 1), 1).otherwise(0)
           .as("batch_exact"))
-    // LSH tier: prior batches' shingles join the corpus side; the
-    // MATERIALIZED band index (and the FOLDED prior bands) mean no
-    // band derivation beyond this batch's own happens per ingest — a
-    // caller without folded bands (one-shot use) pays a derive over
-    // the prior shingles as fallback
+    // LSH tier: prior batches' shingles and bands join the corpus side
     val corpusSide = prior.shingles
       .map(idx.corpusShingles.unionByName(_)).getOrElse(idx.corpusShingles)
-    val priorBands = prior.bands.orElse(prior.shingles.map(ps =>
-      TextDedup.lshBands(TextDedup.minhashSignatures(ps, numHashes = 12),
-        bands = 4, rowsPerBand = 3)))
     val corpusBands = priorBands
       .map(idx.corpusBands.unionByName(_)).getOrElse(idx.corpusBands)
-    val batchSh = batchShinglesOpt.getOrElse(
-      TextDedup.shingles(batchDocs).localCheckpoint(true))
     val nd = TextDedup.incrementalDedup(
         corpusSh = corpusSide, batchSh = batchSh,
         batchIds = batchDocs.select(col("doc_id")),
-        corpusBandsOpt = Some(corpusBands))
+        numHashes = LshHashes, bands = LshBands, num = NearNum,
+        den = NearDen, corpusBandsOpt = Some(corpusBands))
       .select(col("doc_id"),
         when(col("status") =!= "new", 1).otherwise(0).as("near_dup"))
     // substring tier
-    val batchAnchors = batchAnchorsOpt.getOrElse(
-      SubstringDedup.anchors(batchDocs).localCheckpoint(true))
     val srep = SubstringDedup.incrementalDedup(
         indexGrams = idx.indexGrams, batchAnchors = batchAnchors,
         priorIngestGrams = prior.grams)
@@ -447,31 +522,209 @@ object TextCuration {
       .groupBy(col("doc_id"))
       .agg(expr("CAST(count(bs) * 10000 DIV count(1) AS BIGINT)")
         .as("overlap_bp"))
-    // quality rules + frozen classifier
-    val q = TextDedup.withTokens(batchDocs).select(col("doc_id"),
+    Seq(exact, nd, srep, cont) ++
+      docTiers(spark, batchDocs, idx.weights, cfg, onePartition = false)
+  }
+
+  // row kinds of the bounded route's collects: batch keys, index and
+  // prior hits, candidate shingles
+  private final val HashKey = 0
+  private final val GramKey = 1
+  private final val FiveGramKey = 2
+  private final val BandKey = 3
+  private final val CorpusHash = 4
+  private final val PriorHash = 5
+  private final val IndexGram = 6
+  private final val PriorGram = 7
+  private final val BenchGram = 8
+  private final val CorpusBand = 9
+  private final val CorpusSide = 10
+  private final val BatchSide = 11
+
+  /** `c IN keys` over a driver-held set, as a UDF holding the set: the
+    * set reaches generated code as the UDF's reference object, never as
+    * literals, so code compiled for one batch's keys serves the next
+    * batch's. (`isin` turns sets of up to 10 values into inlined
+    * literals, and Spark keeps its `InSet` constructor internal.) Null
+    * is never a member. */
+  private def member(c: Column, keys: Set[String]): Column =
+    coalesce(udf((k: String) => keys.contains(k)).apply(c), lit(false))
+
+  private def memberId(c: Column, ids: Set[Long]): Column =
+    coalesce(udf((k: Long) => ids.contains(k)).apply(c.cast("long")),
+      lit(false))
+
+  /** (kind, k, doc_id, band): the one row shape of every collect. */
+  private def keyRow(kind: Int, k: Column, doc: Column = lit(null),
+      band: Column = lit(null)): Seq[Column] =
+    Seq(lit(kind).as("kind"), k.cast("string").as("k"),
+      doc.cast("long").as("doc_id"), band.cast("int").as("band"))
+
+  /** The rows of the union of `parts` when there are at most `n`, else
+    * None. One job: each partition hands the driver at most n + 1 rows,
+    * the bound Spark's own `take` keeps per partition, without the
+    * rounds of jobs `take` runs over a growing range of partitions. */
+  private def collectAtMost(parts: Seq[Option[DataFrame]],
+      n: Int): Option[Array[Row]] =
+    parts.flatten.reduceOption(_ union _) match {
+      case None => Some(Array.empty[Row])
+      case Some(df) =>
+        val rows = df.mapPartitions((it: Iterator[Row]) => it.take(n + 1))(
+          org.apache.spark.sql.Encoders.row(df.schema)).collect()
+        if (rows.length > n) None else Some(rows)
+    }
+
+  /** The bounded route's tiers, or None when the batch's probe keys,
+    * the index and prior rows they match, the near-dup candidate pairs
+    * or those pairs' shingle rows number more than `maxProbeKeys` (see
+    * [[servingDecisions]]). The pairs are counted before they are
+    * formed; the collects stop each partition at the bound + 1 rows. */
+  private[functions] def probedTiers(spark: SparkSession,
+      batchDocs: DataFrame, batchSh: DataFrame, batchAnchors: DataFrame,
+      idx: ServingIndex, prior: IngestPrior,
+      priorBands: Option[DataFrame], cfg: Config,
+      maxProbeKeys: Int): Option[Seq[DataFrame]] = {
+    val docs = batchDocs.coalesce(1)
+    val anchors = batchAnchors.coalesce(1)
+    val fiveGrams = TextDedup.shingles(docs, n = 5)
+    // collect 1: the batch's probe keys — also the gate. The cheapest
+    // kinds come first and nothing dedupes on the executor, so the one
+    // partition's scan stops after maxProbeKeys + 1 rows (repeats
+    // count against the bound, then drop here) and a batch over the
+    // bound never reaches the minhash aggregate
+    val keys = Seq(
+        anchors.select(keyRow(GramKey, col("g")): _*),
+        docs.select(keyRow(HashKey, md5(col("text"))): _*),
+        fiveGrams.select(keyRow(FiveGramKey, col("s")): _*),
+        lshBandsOf(batchSh.coalesce(1)).select(
+          keyRow(BandKey, col("sig"), col("doc_id"), col("band")): _*))
+      .reduce(_ union _).where(col("k").isNotNull)
+      .coalesce(1).take(maxProbeKeys + 1)
+    if (keys.length > maxProbeKeys) return None
+    def keysOf(rows: Array[Row], kinds: Int*): Set[String] =
+      rows.iterator.filter(r => kinds.contains(r.getInt(0)))
+        .map(_.getString(1)).toSet
+    def bandsOf(rows: Array[Row], kind: Int): Seq[(Long, (Int, String))] =
+      rows.iterator.filter(_.getInt(0) == kind)
+        .map(r => r.getLong(2) -> (r.getInt(3), r.getString(1))).toSeq
+        .distinct
+    val batchBands = bandsOf(keys, BandKey)
+    // collect 2: the index and prior rows the keys match
+    def probe(df: DataFrame, kind: Int, keyCol: String, ks: Set[String],
+        banded: Boolean = false): Option[DataFrame] =
+      if (ks.isEmpty) None
+      else Some(df.where(member(col(keyCol), ks)).select(
+        (if (banded) keyRow(kind, col(keyCol), col("doc_id"), col("band"))
+         else keyRow(kind, col(keyCol))): _*))
+    val (hashes, grams, fives) =
+      (keysOf(keys, HashKey), keysOf(keys, GramKey), keysOf(keys, FiveGramKey))
+    val sigs = batchBands.map(_._2._2).toSet
+    val hits = collectAtMost(Seq(
+        probe(idx.corpusHashes, CorpusHash, "h", hashes),
+        prior.hashes.flatMap(probe(_, PriorHash, "h", hashes)),
+        probe(idx.indexGrams, IndexGram, "g", grams),
+        prior.grams.flatMap(probe(_, PriorGram, "g", grams)),
+        probe(idx.benchGrams, BenchGram, "bs", fives),
+        probe(idx.corpusBands, CorpusBand, "sig", sigs, banded = true),
+        priorBands.flatMap(probe(_, CorpusBand, "sig", sigs, banded = true))),
+      maxProbeKeys) match { case Some(h) => h; case None => return None }
+    // near-dup candidates: band-bucket collisions with the corpus side
+    // (index + prior docs), and between the batch's own docs
+    val (crossPairs, innerPairs) = TextDedup.candidatePairsOnDriver(
+        batchBands, bandsOf(hits, CorpusBand), maxProbeKeys) match {
+      case Some(pairs) => pairs
+      case None => return None
+    }
+    // collect 3: those docs' shingles, verified here pair by pair
+    val corpusSide = prior.shingles
+      .map(idx.corpusShingles.unionByName(_)).getOrElse(idx.corpusShingles)
+    def fetch(df: DataFrame, side: Int, ids: Set[Long]): Option[DataFrame] =
+      if (ids.isEmpty) None
+      else Some(df.where(memberId(col("doc_id"), ids))
+        .select(keyRow(side, col("s"), col("doc_id")): _*))
+    val shingles = collectAtMost(Seq(
+        fetch(corpusSide, CorpusSide, crossPairs.map(_._2)),
+        fetch(batchSh, BatchSide, crossPairs.map(_._1) ++
+          innerPairs.flatMap(p => Seq(p._1, p._2)))),
+      maxProbeKeys) match { case Some(s) => s; case None => return None }
+    def shingleSets(side: Int): Map[Long, Set[String]] =
+      shingles.iterator.filter(_.getInt(0) == side).toSeq
+        .groupMap(_.getLong(2))(_.getString(1)).view.mapValues(_.toSet).toMap
+    val nearDup = TextDedup.nearDupsOnDriver(crossPairs, innerPairs,
+      shingleSets(BatchSide), shingleSets(CorpusSide), NearNum, NearDen)
+    // the tiers, over the one-partition batch
+    val inCorpus = member(col("h"), keysOf(hits, CorpusHash))
+    val exact = docs.select(col("doc_id"), md5(col("text")).as("h"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("h")).orderBy(col("doc_id"))))
+      .select(col("doc_id"),
+        when(inCorpus, 1).otherwise(0).as("corpus_exact"),
+        when(!inCorpus && (member(col("h"), keysOf(hits, PriorHash)) ||
+          col("rn") > 1), 1).otherwise(0).as("batch_exact"),
+        when(memberId(col("doc_id"), nearDup), 1).otherwise(0)
+          .as("near_dup"))
+    val dupGrams = keysOf(hits, IndexGram, PriorGram)
+    val srep = anchors
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("g")).orderBy(col("doc_id"), col("pos"))))
+      .groupBy(col("doc_id"))
+      .agg(sum(when(member(col("g"), dupGrams) || col("rn") > 1, 1L)
+        .otherwise(0L)).as("dup_anchors"))
+    val cont = fiveGrams.groupBy(col("doc_id"))
+      .agg(count(when(member(col("s"), keysOf(hits, BenchGram)), 1))
+        .as("hit"), count(lit(1)).as("n"))
+      .select(col("doc_id"),
+        expr("CAST(hit * 10000 DIV n AS BIGINT)").as("overlap_bp"))
+    Some(Seq(exact, srep, cont) ++
+      docTiers(spark, docs, idx.weights, cfg, onePartition = true))
+  }
+
+  /** The quality-rule and classifier-margin tiers: per-doc passes over
+    * the batch alone, the same on both routes. `onePartition` keeps
+    * the feature union on the batch's single partition. */
+  private def docTiers(spark: SparkSession, docs: DataFrame,
+      weights: Map[String, Long], cfg: Config,
+      onePartition: Boolean): Seq[DataFrame] = {
+    val feats = classifierFeatures(docs)
+    Seq(qualitySignals(docs, cfg),
+      LinearClassifier.score(spark,
+          if (onePartition) feats.coalesce(1) else feats, weights)
+        .select(col("doc_id"), col("margin")))
+  }
+
+  /** The rule chain's signals: (doc_id, n_tokens, quality_pass). */
+  private def qualitySignals(docs: DataFrame, cfg: Config): DataFrame =
+    TextDedup.withTokens(docs).select(col("doc_id"),
       size(col("w")).cast("long").as("n_tokens"),
-      QualityFilters.meanTokenLenCentichars(col("w")).as("mwl_cc"),
-      TextStats.hasAnyStopword("w", cfg.stopwords).as("has_stop"))
-    val margins = LinearClassifier.score(spark,
-        classifierFeatures(batchDocs), idx.weights)
-      .select(col("doc_id"), col("margin"))
-    val m = batchDocs.select(col("doc_id"))
-      .join(exact, Seq("doc_id"))
-      .join(nd, Seq("doc_id"), "left")
-      .join(srep, Seq("doc_id"), "left")
-      .join(cont, Seq("doc_id"), "left")
-      .join(q, Seq("doc_id"))
-      .join(margins, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("corpus_exact"), col("batch_exact"),
-        coalesce(col("near_dup"), lit(0)).cast("int").as("near_dup"),
-        coalesce(col("dup_anchors"), lit(0L)).cast("long")
-          .as("dup_anchors"),
-        coalesce(col("overlap_bp"), lit(0L)).cast("long").as("overlap_bp"),
-        col("n_tokens"),
-        when(col("n_tokens") >= cfg.minTokens &&
-          col("mwl_cc").between(cfg.mwlLoCc, cfg.mwlHiCc) &&
-          col("has_stop"), 1).otherwise(0).as("quality_pass"),
-        coalesce(col("margin"), lit(0L)).cast("long").as("margin"))
+      when(size(col("w")) >= cfg.minTokens &&
+        QualityFilters.meanTokenLenCentichars(col("w"))
+          .between(cfg.mwlLoCc, cfg.mwlHiCc) &&
+        TextStats.hasAnyStopword("w", cfg.stopwords), 1).otherwise(0)
+        .as("quality_pass"))
+
+  /** The serving decision's signal columns and their types. */
+  private val ServingSignals = Seq("corpus_exact" -> "int",
+    "batch_exact" -> "int", "near_dup" -> "int", "dup_anchors" -> "long",
+    "overlap_bp" -> "long", "n_tokens" -> "long", "quality_pass" -> "int",
+    "margin" -> "long")
+
+  /** Both routes' assembly: every tier's (doc_id, signals) rows in one
+    * union, one groupBy(doc_id) (a signal a tier does not cover for a
+    * doc reads 0), and the policy's reason CASE. `onePartition` keeps
+    * the bounded route's union on one partition, so the groupBy adds
+    * no exchange. */
+  private def assembleServing(tiers: Seq[DataFrame], cfg: Config,
+      onePartition: Boolean): DataFrame = {
+    val rows = tiers.map(t => t.select(col("doc_id") +: ServingSignals.map {
+        case (c, ty) =>
+          (if (t.columns.contains(c)) col(c) else lit(null)).cast(ty).as(c)
+      }: _*))
+      .reduce(_ union _)
+    val signals = ServingSignals.map { case (c, ty) =>
+      // n_tokens keeps the null of a null text
+      if (c == "n_tokens") max(col(c)).as(c)
+      else coalesce(max(col(c)), lit(0).cast(ty)).as(c)
+    }
     val reason =
       when(col("doc_id") % cfg.benchmarkMod === 0, "benchmark_member")
         .when(col("corpus_exact") === 1, "corpus_exact_dup")
@@ -482,7 +735,9 @@ object TextCuration {
         .when(col("margin") <= 0, "classifier_reject")
         .when(col("dup_anchors") > 0 || col("overlap_bp") > 0, "dup_spans")
         .otherwise("clean")
-    m.withColumn("reason", reason)
+    (if (onePartition) rows.coalesce(1) else rows)
+      .groupBy(col("doc_id")).agg(signals.head, signals.tail: _*)
+      .withColumn("reason", reason)
       .withColumn("decision",
         when(col("reason") === "clean", "keep")
           .when(col("reason") === "dup_spans", "redact")

@@ -171,6 +171,18 @@ object TextDedup {
       .select(col("doc_id"), col("s"))
   }
 
+  /** The near-dup rule: Jaccard >= num/den in integer arithmetic
+    * (den·common >= num·union), so there is no float boundary. Every
+    * verify step here and [[nearDupsOnDriver]] apply this one rule. */
+  def jaccardAtLeast(common: Column, n1: Column, n2: Column, num: Int,
+      den: Int): Column =
+    lit(den) * common >= lit(num) * (n1 + n2 - common)
+
+  /** [[jaccardAtLeast]] over counts already on the driver. */
+  def jaccardAtLeast(common: Long, n1: Long, n2: Long, num: Int,
+      den: Int): Boolean =
+    den * common >= num * (n1 + n2 - common)
+
   /** Exhaustive near-dup pairs with Jaccard >= num/den, in integer
     * arithmetic (den·common >= num·union) so there is no float
     * boundary: (d1, d2, common, n1, n2) with d1 < d2. */
@@ -179,8 +191,7 @@ object TextDedup {
     commonShingleCounts(sh)
       .join(sz.toDF("d1k", "n1"), col("d1") === col("d1k"))
       .join(sz.toDF("d2k", "n2"), col("d2") === col("d2k"))
-      .filter(lit(den) * col("common") >=
-        lit(num) * (col("n1") + col("n2") - col("common")))
+      .filter(jaccardAtLeast(col("common"), col("n1"), col("n2"), num, den))
       .select(col("d1"), col("d2"), col("common"), col("n1"), col("n2"))
   }
 
@@ -298,8 +309,7 @@ object TextDedup {
     common
       .join(sz.toDF("n1k", "n1"), col("d1") === col("n1k"))
       .join(sz.toDF("n2k", "n2"), col("d2") === col("n2k"))
-      .filter(lit(den) * col("common") >=
-        lit(num) * (col("n1") + col("n2") - col("common")))
+      .filter(jaccardAtLeast(col("common"), col("n1"), col("n2"), num, den))
       .select(col("d1"), col("d2"))
   }
 
@@ -411,8 +421,7 @@ object TextDedup {
     val crossDup = common
       .join(sizes(bShC).toDF("bk", "bn"), col("bdoc") === col("bk"))
       .join(sizes(cSh).toDF("ck2", "cn"), col("cdoc") === col("ck2"))
-      .filter(lit(den) * col("common") >=
-        lit(num) * (col("bn") + col("cn") - col("common")))
+      .filter(jaccardAtLeast(col("common"), col("bn"), col("cn"), num, den))
       .groupBy(col("bdoc")).agg(min(col("cdoc")).as("corpus_dup_of"))
     // keep-first within the batch itself (earlier doc id survives)
     val internal = lshVerifiedPairs(batchSh, numHashes, bands, num, den)
@@ -426,5 +435,50 @@ object TextDedup {
           .otherwise(lit("new")).as("status"),
         coalesce(col("corpus_dup_of"), col("batch_dup_of"), lit(-1L))
           .as("dup_of"))
+  }
+
+  /** [[incrementalDedup]]'s candidate step on the driver, for a batch
+    * whose band rows (doc_id, (band, sig)) and the corpus-side rows
+    * sharing their buckets are already there: the (batch, corpus)
+    * pairs and the (earlier, later) in-batch pairs sharing a bucket,
+    * or None when they number more than `maxPairs` — counted bucket by
+    * bucket before any pair is formed, so a bucket holding many copies
+    * of one doc never expands on the driver. */
+  private[functions] def candidatePairsOnDriver(
+      batchBands: Seq[(Long, (Int, String))],
+      corpusBands: Seq[(Long, (Int, String))],
+      maxPairs: Long): Option[(Set[(Long, Long)], Set[(Long, Long)])] = {
+    val corpusBuckets = corpusBands.groupMap(_._2)(_._1)
+    val batchBuckets = batchBands.groupMap(_._2)(_._1).toSeq
+    val pairs = batchBuckets.iterator.map { case (bucket, ds) =>
+      val n = ds.size.toLong
+      n * corpusBuckets.get(bucket).fold(0L)(_.size.toLong) + n * (n - 1) / 2
+    }.sum
+    if (pairs > maxPairs) None
+    else Some((
+      batchBuckets.iterator.flatMap { case (bucket, ds) =>
+        corpusBuckets.getOrElse(bucket, Nil).flatMap(c => ds.map(_ -> c))
+      }.toSet,
+      batchBuckets.iterator.flatMap { case (_, ds) =>
+        for (a <- ds; b <- ds if a < b) yield (a, b)
+      }.toSet))
+  }
+
+  /** [[incrementalDedup]]'s verdict on the driver, over candidate
+    * pairs from [[candidatePairsOnDriver]] and the shingle sets of
+    * their docs: the batch docs that are not `new` — each with a
+    * verified corpus pair, and the later doc of each verified in-batch
+    * pair (keep-first). */
+  private[functions] def nearDupsOnDriver(crossPairs: Set[(Long, Long)],
+      innerPairs: Set[(Long, Long)], batchSh: Map[Long, Set[String]],
+      corpusSh: Map[Long, Set[String]], num: Int, den: Int): Set[Long] = {
+    def near(x: Set[String], y: Set[String]): Boolean =
+      jaccardAtLeast(x.count(y).toLong, x.size, y.size, num, den)
+    def of(sh: Map[Long, Set[String]], d: Long) =
+      sh.getOrElse(d, Set.empty[String])
+    crossPairs.collect {
+      case (b, c) if near(of(batchSh, b), of(corpusSh, c)) => b } ++
+      innerPairs.collect {
+        case (a, b) if near(of(batchSh, a), of(batchSh, b)) => b }
   }
 }

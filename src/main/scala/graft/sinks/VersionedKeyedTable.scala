@@ -1182,8 +1182,9 @@ object VersionedKeyedTable {
   }
 
   /** Shared driver-side bound for point-lookup key lists
-    * ([[readKeys]], [[keyFiles]] and their string-key variants). */
-  private[sinks] val MaxPointLookupKeys = 100000
+    * ([[readKeys]], [[keyFiles]] and their string-key variants, and
+    * the probe keys of a bounded serving-curation batch). */
+  private[graft] val MaxPointLookupKeys = 100000
 
   /** The file pruning a [[readKeys]] point lookup performs, exposed
     * for inspection: (files kept, candidate files in the keys'
@@ -2312,7 +2313,9 @@ object VersionedKeyedTable {
     val (nb, metaSchema) = readMeta(spark, dir)
     requireKey(spark, dir, keyCol, "mutation")
     val batch = jobPhase(spark, "checkpoint-batch") {
-      rows.withColumn("__bucket", bucketOf(keyCol, nb))
+      // a null key addresses no row: dropped here as create does
+      rows.where(col(keyCol).isNotNull)
+        .withColumn("__bucket", bucketOf(keyCol, nb))
         .localCheckpoint(true)
     }
     val (myTouched, batchRows) = jobPhase(spark, "touched-buckets") {

@@ -31,10 +31,14 @@ import graft.sinks.KeyedTable
   *    erases batch 3's fact that it saw the same hash.
   *
   * Scale: each fold touches only the buckets its batch keys hash into
-  * (O(batch) writes); each `priorFor` reads the state tables pruned by
-  * nothing — prior state is ingest-cumulative by definition — but the
-  * tables hold the INGEST's rows, never the corpus (the corpus lives
-  * in the frozen index). A deployment sizes numBuckets to the ingest.
+  * (O(batch) writes). `priorFor` returns the state tables unread; a
+  * bounded micro-batch ([[TextCuration.servingDecisions]]) then
+  * brings to the driver only their rows matching its own probe keys,
+  * in the one collect that also probes the index, and an unbounded
+  * one joins them whole. Either way the scan is not pruned by bucket,
+  * but the tables hold the INGEST's rows, never the corpus (the corpus
+  * lives in the frozen index). A deployment sizes numBuckets to the
+  * ingest.
   */
 object ServingState {
 

@@ -173,4 +173,24 @@ class ScaleInvarianceSpec extends AnyFunSuite {
     }
     assert(four === one, "ivfSearch jobs")
   }
+
+  test("serving curation: a fixed batch's decisions against a corpus " +
+      "index at 4x run the same jobs") {
+    import graft.functions.TextCuration
+    val docs = graft.core.Tables.documents(spark, TestSpark.sfDir)
+    val cfg = TextCuration.Config(stopwords = TextCuration.DemoStopwords,
+      classifierRounds = 2)
+    val batch = docs.where(col("doc_id") % 4 === 0)
+    val (one, four) = atScales() { s =>
+      // copies with shifted ids; the shift keeps doc_id % 4
+      val corpus = (0 until s).map(i => docs.where(col("doc_id") % 4 =!= 0)
+          .withColumn("doc_id", col("doc_id") + i * 1000000000L))
+        .reduce(_ unionByName _)
+      val idx = TextCuration.buildServingIndex(spark, corpus, cfg)
+      val out = freshDir()
+      SparkJobs.count(spark)(TextCuration.servingDecisions(spark, batch,
+        idx, TextCuration.IngestPrior(), cfg).write.parquet(out))._2
+    }
+    assert(four === one, "servingDecisions jobs")
+  }
 }

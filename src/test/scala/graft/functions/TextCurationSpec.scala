@@ -108,6 +108,190 @@ class TextCurationSpec extends AnyFunSuite {
     }
   }
 
+  /** The serving fixture: the corpus side (doc_id % 4 != 0) is
+    * indexed, and the ingest (doc_id % 4 == 0) splits at its median id
+    * into a prior batch and the batch under test. Some batch docs are
+    * rewritten so that every dedup source occurs beside the reasons
+    * the data gives by itself: copies of a corpus doc, a prior doc and
+    * an earlier batch doc (exact), the same with the first word
+    * replaced (near), and a doc's text with a corpus doc's or a prior
+    * doc's text appended (substring), and one with a benchmark doc's
+    * text appended (contamination). Returns the batch, the prior
+    * docs, the corpus docs and the rewritten doc ids by role. */
+  private lazy val servingFixture = {
+    import spark.implicits._
+    val docs = graft.core.Tables.documents(spark, TestSpark.sfDir)
+    val all = docs.select("doc_id", "text", "lang", "source")
+      .as[(Long, String, String, String)].collect().sortBy(_._1)
+    val text = all.map(r => r._1 -> r._2).toMap
+    // benchmark members (id % 7 == 0) would hide every other reason
+    val ingest = all.map(_._1).filter(_ % 4 == 0)
+    val (priorIds, batchIds) = ingest.splitAt(ingest.length / 2)
+    val corpusIds = all.map(_._1).filter(id => id % 4 != 0 && id % 7 != 0)
+    val b = batchIds.filter(_ % 7 != 0)
+    val p = priorIds.filter(_ % 7 != 0)
+    def near(t: String) = t.replaceFirst("^\\S+", "dup")
+    val roles = Map(
+      "corpus_exact" -> b(0), "prior_exact" -> b(1), "batch_exact" -> b(3),
+      "corpus_near" -> b(4), "prior_near" -> b(5), "batch_near" -> b(7),
+      "corpus_substring" -> b(8), "prior_substring" -> b(9),
+      "contaminated" -> b(10))
+    val benchmarkDoc = all.map(_._1).find(id => id % 4 != 0 && id % 7 == 0).get
+    val rewritten = Map(
+      b(0) -> text(corpusIds(0)),
+      b(1) -> text(p(0)),
+      b(3) -> text(b(2)),
+      b(4) -> near(text(corpusIds(1))),
+      b(5) -> near(text(p(1))),
+      b(7) -> near(text(b(6))),
+      b(8) -> (text(b(8)) + " " + text(corpusIds(2))),
+      b(9) -> (text(b(9)) + " " + text(p(2))),
+      b(10) -> (text(b(10)) + " " + text(benchmarkDoc)))
+    val batch = all.filter(r => batchIds.contains(r._1)).map {
+      case (id, t, lang, source) =>
+        val t2 = rewritten.getOrElse(id, t)
+        (id, t2, lang, source, t2.length.toLong)
+    }.toSeq.toDF("doc_id", "text", "lang", "source", "n_chars")
+    (batch, docs.where(col("doc_id").isin(priorIds.toSeq: _*)),
+      docs.where(col("doc_id") % 4 =!= 0), roles)
+  }
+
+  private lazy val servingCfg = TextCuration.Config(
+    stopwords = TextCuration.DemoStopwords, classifierRounds = 2)
+
+  /** The fixture's index and prior twice: built in memory, and
+    * persisted through ServingState (the loaded KeyedTable index and
+    * the durably folded prior the streaming path reads). */
+  private lazy val servingStates = {
+    val (_, priorDocs, corpus, _) = servingFixture
+    val idx = TextCuration.buildServingIndex(spark, corpus, servingCfg)
+    val priorSh = TextDedup.shingles(priorDocs).localCheckpoint(true)
+    val priorBands = TextDedup.lshBands(
+      TextDedup.minhashSignatures(priorSh, numHashes = 12),
+      bands = 4, rowsPerBand = 3)
+    val priorHashes = priorDocs.select(md5(col("text")).as("h"))
+    val priorGrams = SubstringDedup.anchors(priorDocs).select(col("g"))
+    val inMemory = TextCuration.IngestPrior(
+      hashes = Some(priorHashes.distinct()), shingles = Some(priorSh),
+      grams = Some(priorGrams.distinct()), bands = Some(priorBands))
+    val dir = java.nio.file.Files.createTempDirectory("graft-serving")
+      .toString + "/s"
+    graft.streaming.ServingState.saveServingIndex(spark, idx, dir)
+    graft.streaming.ServingState.fold(spark, dir, 0L, hashes = priorHashes,
+      shingles = priorSh, grams = priorGrams, bands = priorBands)
+    Seq("in-memory" -> (idx, inMemory),
+      "loaded" -> (graft.streaming.ServingState.loadServingIndex(spark, dir),
+        graft.streaming.ServingState.priorFor(spark, dir, 1L)))
+  }
+
+  test("servingDecisions: the bounded probe route equals the unbounded " +
+      "join route row for row, on an in-memory and a loaded index with " +
+      "a non-empty prior, over a batch carrying every reason") {
+    val (batch, _, _, roles) = servingFixture
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    servingStates.foreach { case (name, (idx, prior)) =>
+      val bounded = rows(TextCuration.servingDecisions(spark, batch, idx,
+        prior, servingCfg))
+      val joined = rows(TextCuration.servingDecisionsWithin(spark, batch,
+        idx, prior, servingCfg, None, None, maxProbeKeys = 0))
+      assert(bounded.length === batch.count(), name)
+      assert(bounded === joined, name)
+      val reasons = bounded.map(_(9)).toSet
+      assert(reasons === Set("benchmark_member", "corpus_exact_dup",
+        "batch_exact_dup", "near_dup", "contaminated", "low_quality",
+        "classifier_reject", "dup_spans", "clean"), name)
+      val byId = bounded.map(r => r.head.asInstanceOf[Long] -> r).toMap
+      def signal(role: String, i: Int) = byId(roles(role))(i)
+      assert(signal("corpus_exact", 1) === 1, name)
+      Seq("prior_exact", "batch_exact").foreach(r =>
+        assert(signal(r, 2) === 1, s"$name $r"))
+      Seq("corpus_near", "prior_near", "batch_near").foreach(r =>
+        assert(signal(r, 3) === 1, s"$name $r"))
+      Seq("corpus_substring", "prior_substring").foreach(r =>
+        assert(signal(r, 4).asInstanceOf[Long] > 0L, s"$name $r"))
+      assert(signal("contaminated", 9) === "contaminated", name)
+    }
+  }
+
+  test("servingDecisions: a bounded batch's decision write runs at most " +
+      "10 Spark jobs against the loaded index and durable prior") {
+    val (batch, _, _, _) = servingFixture
+    val (_, (idx, prior)) = servingStates.last
+    val batchSh = TextDedup.shingles(batch).localCheckpoint(true)
+    val batchAnchors = SubstringDedup.anchors(batch).localCheckpoint(true)
+    val out = java.nio.file.Files.createTempDirectory("graft-serving-out")
+      .toString + "/o"
+    val (_, jobs) = graft.SparkJobs.count(spark) {
+      TextCuration.servingDecisions(spark, batch, idx, prior, servingCfg,
+        batchShinglesOpt = Some(batchSh),
+        batchAnchorsOpt = Some(batchAnchors)).write.parquet(out)
+    }
+    info(s"jobs: $jobs")
+    assert(jobs <= 10, s"$jobs jobs")
+  }
+
+  test("servingDecisions: many copies of one doc in the corpus or in the " +
+      "batch exceed a bound the batch's keys fit, and take the join " +
+      "route with the same rows") {
+    import spark.implicits._
+    val (_, _, corpus, _) = servingFixture
+    val texts = corpus.select("text").as[String].collect()
+      .filter(t => t != null && t.split("\\s+").length >= 8)
+    def docsOf(ids: Seq[Long], text: String) = ids.map(id =>
+        (id, text, "en", "copy", text.length.toLong))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    // the gate's key rows: anchors, content hashes, 5-grams, bands
+    def keyRows(batch: org.apache.spark.sql.DataFrame): Long =
+      SubstringDedup.anchors(batch).count() + batch.count() +
+        TextDedup.shingles(batch, n = 5).count() +
+        4 * TextDedup.shingles(batch).select("doc_id").distinct().count()
+    def check(name: String, batch: org.apache.spark.sql.DataFrame,
+        idx: TextCuration.ServingIndex, over: Long) = {
+      val bound = keyRows(batch).toInt
+      assert(over > bound, s"$name: $over candidates, bound $bound")
+      def tiers(b: Int) = TextCuration.probedTiers(spark, batch,
+        TextDedup.shingles(batch), SubstringDedup.anchors(batch), idx,
+        TextCuration.IngestPrior(), None, servingCfg, b)
+      assert(tiers(bound + 1000000).isDefined, name)
+      assert(tiers(bound).isEmpty, name)
+      def rows(b: Int) = TextCuration.servingDecisionsWithin(spark, batch,
+          idx, TextCuration.IngestPrior(), servingCfg, None, None, b)
+        .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+      assert(rows(bound) === rows(0), name)
+    }
+    val x = texts.minBy(_.length)
+    // one batch doc against 300 corpus copies of it: 4 band rows each
+    val copies = 300
+    check("corpus copies", docsOf(Seq(4000000000L), x),
+      TextCuration.buildServingIndex(spark, corpus.select(
+          "doc_id", "text", "lang", "source", "n_chars")
+        .unionByName(docsOf((1 to copies).map(i => 7L * (1000000000L + i) + 1), x)),
+        servingCfg),
+      over = 4L * copies)
+    // 100 copies of one doc in the batch: 4 bands × C(100, 2) pairs
+    val n = 100
+    check("batch copies",
+      docsOf((1 to n).map(i => 4000000000L + 4L * i), x),
+      TextCuration.buildServingIndex(spark, corpus, servingCfg),
+      over = 4L * n * (n - 1) / 2)
+  }
+
+  test("servingDecisions' driver-side candidate pairs are counted " +
+      "bucket by bucket before any is formed") {
+    val bucket = (0, "sig")
+    val manyBatch = (1L to 200000L).map(_ -> bucket)
+    assert(TextDedup.candidatePairsOnDriver(manyBatch, Nil, 100000L)
+      .isEmpty)
+    assert(TextDedup.candidatePairsOnDriver(Seq(7L -> bucket),
+      (1L to 200000L).map(_ -> bucket), 100000L).isEmpty)
+    val (cross, inner) = TextDedup.candidatePairsOnDriver(
+      Seq(10L -> bucket, 11L -> bucket, 12L -> (1, "other")),
+      Seq(3L -> bucket, 4L -> (1, "none")), 3L).get
+    assert(cross === Set(10L -> 3L, 11L -> 3L))
+    assert(inner === Set(10L -> 11L))
+  }
+
   test("byte-tier scrub: hex-space stitching equals an independent " +
       "byte-splicing reference, and spans really split codepoints") {
     import org.apache.spark.sql.functions._

@@ -133,6 +133,27 @@ class DeltaDmlSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap === Map(3L -> 30L))
   }
 
+  test("copy-on-write upsert and merge drop null-keyed rows too, so a " +
+      "capture-less commit's snapshot diff reports only its real change") {
+    val dir = Files.createTempDirectory("graft-nullkey-cow").toString + "/t"
+    VersionedKeyedTable.create(
+      Seq((Some(1L), "a"), (Some(2L), "b")).toDF("k", "v"), dir, "k", 2)
+    val nullRow = Seq((Option.empty[Long], "n")).toDF("k", "v")
+    VersionedKeyedTable.upsert(spark, dir, nullRow, "k")
+    VersionedKeyedTable.merge(spark, dir, nullRow, "k")
+    def rows = VersionedKeyedTable.read(spark, dir)
+      .as[(Option[Long], String)].collect().toSet
+    assert(rows === Set((Some(1L), "a"), (Some(2L), "b")))
+    val before = VersionedKeyedTable.snapshot(spark, dir).version
+    VersionedKeyedTable.upsert(spark, dir,
+      Seq((Some(1L), "u")).toDF("k", "v"), "k", captureChanges = false)
+    val changes = VersionedKeyedTable.changesBetween(spark, dir, "k",
+        before, before + 1)
+      .collect().map(r => (Option(r.get(0)), r.getString(1)))
+    assert(changes.toSeq === Seq((Some(1L), "update")),
+      changes.mkString(", "))
+  }
+
   test("the serializable gate: a mutateMor pinned to a stale snapshot " +
       "fails loudly instead of re-applying derived rows") {
     val dir = Files.createTempDirectory("graft-deltagate").toString + "/t"
