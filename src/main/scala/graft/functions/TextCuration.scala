@@ -351,10 +351,7 @@ object TextCuration {
         // corpus-proportional work beyond the by-id candidate fetch
         () => {
           val sh = TextDedup.shingles(corpusDocs).localCheckpoint(true)
-          (sh, TextDedup.lshBands(
-              TextDedup.minhashSignatures(sh, numHashes = 12),
-              bands = 4, rowsPerBand = 3)
-            .localCheckpoint(true))
+          (sh, servingBands(sh).localCheckpoint(true))
         },
         () => SubstringDedup.anchors(corpusDocs)
           .select(col("g")).distinct().localCheckpoint(true),
@@ -450,7 +447,7 @@ object TextCuration {
     // band derivation beyond this batch's own happens per ingest — a
     // caller without folded bands (one-shot use) pays a derive over
     // the prior shingles as fallback
-    val priorBands = prior.bands.orElse(prior.shingles.map(lshBandsOf))
+    val priorBands = prior.bands.orElse(prior.shingles.map(servingBands))
     probedTiers(spark, batchDocs, batchSh, batchAnchors, idx, prior,
         priorBands, cfg, maxProbeKeys) match {
       case Some(tiers) => assembleServing(tiers, cfg, onePartition = true)
@@ -461,13 +458,20 @@ object TextCuration {
   }
 
   /** The serving LSH operator's parameters: 12 minhashes in 4 bands,
-    * verified at Jaccard >= 4/5 — one definition for both routes. */
+    * verified at Jaccard >= 4/5 — one definition for both routes, the
+    * index build and the streaming folds ([[servingBands]]). */
   private val LshHashes = 12
   private val LshBands = 4
   private val NearNum = 4
   private val NearDen = 5
 
-  private def lshBandsOf(sh: DataFrame): DataFrame =
+  /** The serving LSH bands (doc_id, band, sig) of a shingle relation:
+    * the one derivation behind the index's corpus bands, both routes'
+    * batch and prior bands, and the bands a streaming ingest folds for
+    * later batches, so folded bands always meet the decisions' band
+    * keys. Over a one-partition input the minhash aggregate plans no
+    * exchange. */
+  def servingBands(sh: DataFrame): DataFrame =
     TextDedup.lshBands(TextDedup.minhashSignatures(sh, LshHashes),
       bands = LshBands, rowsPerBand = LshHashes / LshBands)
 
@@ -596,7 +600,7 @@ object TextCuration {
         anchors.select(keyRow(GramKey, col("g")): _*),
         docs.select(keyRow(HashKey, md5(col("text"))): _*),
         fiveGrams.select(keyRow(FiveGramKey, col("s")): _*),
-        lshBandsOf(batchSh.coalesce(1)).select(
+        servingBands(batchSh.coalesce(1)).select(
           keyRow(BandKey, col("sig"), col("doc_id"), col("band")): _*))
       .reduce(_ union _).where(col("k").isNotNull)
       .coalesce(1).take(maxProbeKeys + 1)

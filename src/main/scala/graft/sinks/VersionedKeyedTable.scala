@@ -163,7 +163,7 @@ object VersionedKeyedTable {
   /** [[scanPaths]] over FileStatuses the caller already holds (a
     * write path's own listing): zero metadata calls of any kind at
     * scan build — no listing, no schema inference. */
-  private[sinks] def scanStatuses(spark: SparkSession, root: String,
+  private[graft] def scanStatuses(spark: SparkSession, root: String,
       schema: org.apache.spark.sql.types.StructType,
       statuses: Seq[org.apache.hadoop.fs.FileStatus]): DataFrame = {
     // force every level nullable, as DataFrameReader.schema() does

@@ -1,49 +1,80 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  StructField, StructType}
 import graft.functions.TextCuration
-import graft.sinks.KeyedTable
+import graft.sinks.{KeyedTable, VersionedKeyedTable}
 
 /** DURABLE serving-mode curation state — the round-10 closure of the
   * one gap between the streaming capstone and a production
   * continuous-ingest deployment: `streamingCuration`'s ServingIndex
   * and per-run IngestPrior fold lived as localCheckpoints, so a
-  * restart lost the fold and rebuilt the index. Here both persist as
-  * [[KeyedTable]]s (the store the library already ships), and an
-  * ingest resumes across process restarts with batch-split-invariant
+  * restart lost the fold and rebuilt the index. Here both persist, and
+  * an ingest resumes across process restarts with batch-split-invariant
   * labels. (Reference analogue: every reference job checkpoints ALL
   * state between slices — handlers.py:696-786,
   * impl/shardedjob/IncrementalTaskState.java — state survives the
-  * process, always.)
+  * process, always; its output writers append each slice and finalize
+  * it, never rewriting what an earlier slice wrote.)
   *
-  * Idempotency discipline: every folded row carries its micro-batch id
-  * and a CONTENT-derived key (md5 of the row's columns + batch id), so
-  *  - a RETRIED batch upserts exactly the rows it wrote before — a
-  *    no-op by the KeyedTable contract;
-  *  - "prior state for batch B" = rows with `batch_id < B`, which is
-  *    correct at EVERY crash point: a crash after the fold but before
-  *    the streaming checkpoint commit re-runs B, and the filter
-  *    excludes B's own half-folded rows without any in-memory guard
-  *    (this replaces `IngestFoldGuard` for the durable path);
-  *  - the same content in two different batches keeps BOTH rows (the
-  *    batch id is part of the key), so a retry of batch 5 never
-  *    erases batch 3's fact that it saw the same hash.
+  * Layout under `dir`:
+  *  - `index/`: the frozen corpus-side ServingIndex, one [[KeyedTable]]
+  *    per relation, written once per corpus ([[saveServingIndex]]).
+  *  - `ingest/log/batch=B/kind=K/`: the ingest fold, an APPEND-ONLY log
+  *    partitioned by micro-batch. Each kind (hashes, shingles, grams,
+  *    bands) holds one row shape — the string key (hash, shingle, gram
+  *    or band signature), `doc_id` and `band`, null where the kind has
+  *    none — distinct within its batch. A row is keyed by its content
+  *    and its batch and is never updated, so the log needs no keyed
+  *    store: there is nothing to merge.
   *
-  * Scale: each fold touches only the buckets its batch keys hash into
-  * (O(batch) writes). `priorFor` returns the state tables unread; a
-  * bounded micro-batch ([[TextCuration.servingDecisions]]) then
-  * brings to the driver only their rows matching its own probe keys,
-  * in the one collect that also probes the index, and an unbounded
-  * one joins them whole. Either way the scan is not pruned by bucket,
-  * but the tables hold the INGEST's rows, never the corpus (the corpus
-  * lives in the frozen index). A deployment sizes numBuckets to the
-  * ingest.
+  * Retry and crash discipline:
+  *  - [[fold]] writes batch B's four kinds in ONE write that overwrites
+  *    `batch=B` — a RETRIED batch rewrites exactly its own rows and
+  *    touches no other batch's;
+  *  - "prior state for batch B" = the log's files of batches < B, which
+  *    is correct at EVERY crash point: a crash mid-fold or after the
+  *    fold but before the streaming checkpoint commit re-runs B, whose
+  *    own half-written rows the prior never reads (and a crashed
+  *    attempt's `_temporary` parts are skipped), with no in-memory
+  *    guard (this replaces `IngestFoldGuard` for the durable path);
+  *  - the same content in two different batches keeps BOTH rows, so a
+  *    retry of batch 5 never erases batch 3's fact that it saw the
+  *    same hash.
+  *
+  * Scale: a fold writes only its own batch's rows (O(batch) bytes and
+  * one job, whatever the state's size; ScaleInvarianceSpec), and
+  * [[priorFor]] lists the log once on the driver and scans the files
+  * of earlier batches through a pre-listed index: no listing job and no
+  * schema inference. A bounded micro-batch
+  * ([[TextCuration.servingDecisions]]) then brings to the driver only
+  * the rows matching its own probe keys, in the one collect that also
+  * probes the index, and an unbounded one joins them whole; either way
+  * the scan reads the whole log, which holds the INGEST's rows, never
+  * the corpus (the corpus lives in the frozen index). The log's file
+  * count grows by up to four per batch; compacting old batches into
+  * fewer files is not done here.
+  *
+  * State written by the earlier KeyedTable fold (`ingest/hashes` and
+  * its siblings) is refused with an error, never read as an empty
+  * prior.
   */
 object ServingState {
 
   private def indexDir(dir: String) = s"$dir/index"
-  private def stateTable(dir: String, name: String) = s"$dir/ingest/$name"
+  private def logDir(dir: String) = s"$dir/ingest/log"
+
+  /** The log's kinds, one per IngestPrior component; the earlier
+    * format kept one KeyedTable per kind at `ingest/<kind>`. */
+  private val Kinds = Seq("hashes", "shingles", "grams", "bands")
+
+  /** The one row shape of every kind. */
+  private val LogSchema = StructType(Seq(StructField("k", StringType),
+    StructField("doc_id", LongType), StructField("band", IntegerType)))
 
   /** Version marker for the PERSISTED index format and the logic that
     * builds it (shingling, banding, anchor selection, classifier
@@ -52,11 +83,11 @@ object ServingState {
     * index from older code can never serve a newer run. */
   val IndexCodeVersion = "r11.1"
 
-  /** Bucket count for the check-scale state tables: every fold/upsert
-    * pays one Spark job per touched bucket's rewrite, so the bounded
-    * replay keeps tables coarse; a production deployment sizes this to
-    * the ingest (the KeyedTable sizing rule — a bucket ≈ a few hundred
-    * MB), passed through here. */
+  /** Bucket count for the check-scale index tables: the index is
+    * written once per corpus and probed whole, so the bounded replay
+    * keeps it coarse; a production deployment sizes this to the corpus
+    * (the KeyedTable sizing rule — a bucket ≈ a few hundred MB),
+    * passed through here. */
   private val CheckNumBuckets = 4
 
   /** True when a persisted ServingIndex exists at `dir` (the marker is
@@ -138,59 +169,69 @@ object ServingState {
   }
 
   /** Fold one committed micro-batch's relations into the durable
-    * ingest state. Content-keyed + batch-id-stamped rows (see object
-    * doc); bands are the DERIVED per-batch bands — folding shingles
-    * alone would force later batches to re-derive bands over the
-    * cumulative ingest, quadratic across a run. */
+    * ingest log: one write of the four kinds' per-batch-distinct rows
+    * over one partition, overwriting `batch=batchId` (see object doc).
+    * Bands are the DERIVED per-batch bands — folding shingles alone
+    * would force later batches to re-derive bands over the cumulative
+    * ingest, quadratic across a run; derived over a one-partition
+    * input ([[TextCuration.servingBands]]), they join this write's
+    * task with no exchange. */
   def fold(spark: SparkSession, dir: String, batchId: Long,
       hashes: DataFrame, shingles: DataFrame, grams: DataFrame,
       bands: DataFrame): Unit = {
-    def up(name: String, df: DataFrame, keyExpr: org.apache.spark.sql.Column): Unit = {
-      val table = stateTable(dir, name)
-      val rows = df.distinct()
-        .withColumn("batch_id", lit(batchId))
-        .withColumn("k", md5(keyExpr))
-      if (KeyedTable.exists(spark, table))
-        KeyedTable.upsert(spark, table, rows, keyCol = "k",
-        numBuckets = CheckNumBuckets)
-      else KeyedTable.create(rows, table, keyCol = "k",
-        numBuckets = CheckNumBuckets)
-    }
-    val sep = lit(":")
-    // the four tables are disjoint directories (guide §2.6): overlap
-    // their upsert chains so the per-batch fold wall is ~the slowest
-    // table's chain, not the sum of four; a half-folded batch is
-    // retry-correct by the batch_id discipline either way
-    graft.Par.run(spark, Seq(
-      () => up("hashes", hashes.select(col("h")),
-        concat(col("h"), sep, lit(batchId))),
-      () => up("shingles", shingles.select(col("doc_id"), col("s")),
-        concat(col("doc_id"), sep, col("s"), sep, lit(batchId))),
-      () => up("grams", grams.select(col("g")),
-        concat(col("g"), sep, lit(batchId))),
-      () => up("bands", bands.select(col("doc_id"), col("band"), col("sig")),
-        concat(col("doc_id"), sep, col("band"), sep, col("sig"), sep,
-          lit(batchId)))))
-    ()
+    def rows(df: DataFrame, kind: String, k: String,
+        doc: Column = lit(null), band: Column = lit(null)): DataFrame =
+      df.select(lit(kind).as("kind"), col(k).cast("string").as("k"),
+        doc.cast("long").as("doc_id"), band.cast("int").as("band"))
+    Seq(rows(hashes, "hashes", "h"),
+        rows(shingles, "shingles", "s", col("doc_id")),
+        rows(grams, "grams", "g"),
+        rows(bands, "bands", "sig", col("doc_id"), col("band")))
+      .reduce(_ union _).coalesce(1).distinct()
+      .write.mode("overwrite").partitionBy("kind")
+      .parquet(s"${logDir(dir)}/batch=$batchId")
   }
 
-  /** The IngestPrior for micro-batch `batchId`: all durably folded
-    * rows of EARLIER batches (`batch_id < batchId` — correct across
-    * retries at every crash point; see object doc). Components are
-    * None until their table exists, so batch 0 sees the empty prior. */
+  /** The IngestPrior for micro-batch `batchId`: every logged row of
+    * EARLIER batches (correct across retries at every crash point; see
+    * object doc). One recursive listing on the driver picks the files;
+    * paths with a `_`- or `.`-prefixed part (a crashed attempt's
+    * `_temporary`, `_SUCCESS`, checksums) are skipped. A component is
+    * None while no earlier batch logged a row of its kind, so batch 0
+    * sees the empty prior. */
   def priorFor(spark: SparkSession, dir: String, batchId: Long)
       : TextCuration.IngestPrior = {
-    def tbl(name: String, cols: Seq[String]): Option[DataFrame] = {
-      val table = stateTable(dir, name)
-      if (!KeyedTable.exists(spark, table)) None
-      else Some(KeyedTable.read(spark, table)
-        .filter(col("batch_id") < batchId)
-        .select(cols.map(col): _*))
+    Kinds.map(k => s"$dir/ingest/$k").find(KeyedTable.exists(spark, _))
+      .foreach(t => throw new IllegalStateException(
+        s"ServingState at $dir: $t is ingest state in the earlier " +
+          "KeyedTable format, which this code does not read (it would " +
+          "serve an empty prior); resume the ingest into a fresh state " +
+          "directory"))
+    val root = new Path(logDir(dir))
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rootPath = fs.makeQualified(root).toUri.getPath
+    val logged = mutable.Map.empty[String, mutable.ArrayBuffer[FileStatus]]
+    val it = try fs.listFiles(root, true)
+      catch { case _: java.io.FileNotFoundException => null }
+    while (it != null && it.hasNext) {
+      val st = it.next()
+      st.getPath.toUri.getPath.stripPrefix(rootPath + "/").split('/') match {
+        case Array(b, k, f) if b.startsWith("batch=") &&
+            k.startsWith("kind=") && !f.startsWith("_") &&
+            !f.startsWith(".") &&
+            b.stripPrefix("batch=").toLongOption.exists(_ < batchId) =>
+          logged.getOrElseUpdate(k.stripPrefix("kind="),
+            mutable.ArrayBuffer.empty) += st
+        case _ => ()
+      }
     }
+    def scan(kind: String, cols: Column*): Option[DataFrame] =
+      logged.get(kind).map(sts => VersionedKeyedTable.scanStatuses(spark,
+        root.toString, LogSchema, sts.toSeq).select(cols: _*))
     TextCuration.IngestPrior(
-      hashes = tbl("hashes", Seq("h")),
-      shingles = tbl("shingles", Seq("doc_id", "s")),
-      grams = tbl("grams", Seq("g")),
-      bands = tbl("bands", Seq("doc_id", "band", "sig")))
+      hashes = scan("hashes", col("k").as("h")),
+      shingles = scan("shingles", col("doc_id"), col("k").as("s")),
+      grams = scan("grams", col("k").as("g")),
+      bands = scan("bands", col("doc_id"), col("band"), col("k").as("sig")))
   }
 }

@@ -708,9 +708,9 @@ object StreamingJobs {
     * of pre-fold history, so a re-invoked micro-batch (the retry the
     * writer absorbs) labels against the state before its own fold.
     * Like `streamingSubstrDedup`, the fold is per-RUN state — a
-    * durable-restart deployment persists the ingest relations as
-    * KeyedTables between restarts. Oracle: `incremental_curation`'s
-    * SQL verbatim. */
+    * durable-restart deployment persists the ingest relations in
+    * ServingState's batch log (`streamingCurationDurable`). Oracle:
+    * `incremental_curation`'s SQL verbatim. */
   def streamingCuration(spark: SparkSession, sfDir: String,
       outDir: String,
       cfg: graft.functions.TextCuration.Config): DataFrame = {
@@ -754,9 +754,7 @@ object StreamingJobs {
               batch.select(md5(col("text")).as("h"))),
             () => fold(prior.shingles, batchSh),
             () => fold(prior.grams, batchAnchors.select(col("g"))),
-            () => fold(prior.bands, TextDedup.lshBands(
-              TextDedup.minhashSignatures(batchSh, numHashes = 12),
-              bands = 4, rowsPerBand = 3))))
+            () => fold(prior.bands, TextCuration.servingBands(batchSh))))
           TextCuration.IngestPrior(
             hashes = h, shingles = sh, grams = g, bands = b)
         }
@@ -818,17 +816,18 @@ object StreamingJobs {
   }
 
   /** DURABLE streaming serving-mode curation — `streamingCuration`
-    * with BOTH state tiers persisted as KeyedTables (ServingState), so
-    * the ingest survives process restarts:
-    *   - the frozen ServingIndex is built ONCE and saved under
-    *     `stateDir/index`; every later invocation LOADS it (no
+    * with BOTH state tiers persisted (ServingState), so the ingest
+    * survives process restarts:
+    *   - the frozen ServingIndex is built ONCE and saved as KeyedTables
+    *     under `stateDir/index`; every later invocation LOADS it (no
     *     re-scan, no re-train — the index-load production shape);
-    *   - each committed micro-batch folds its content hashes,
-    *     shingles, anchor grams, and DERIVED bands into KeyedTables
-    *     under `stateDir/ingest`, content-keyed and
-    *     batch-id-stamped; micro-batch B labels against rows with
-    *     batch_id < B, which is retry-correct at every crash point
-    *     (see ServingState's scaladoc — no in-memory fold guard);
+    *   - each committed micro-batch appends its content hashes,
+    *     shingles, anchor grams, and DERIVED bands to the ingest log
+    *     under `stateDir/ingest/log`, in one write to its own
+    *     `batch=B` directory; micro-batch B labels against the logged
+    *     rows of batches < B, which is retry-correct at every crash
+    *     point (see ServingState's scaladoc — no in-memory fold
+    *     guard);
     *   - Spark's own streaming checkpoint (`stateDir/checkpoint`)
     *     carries source progress, so a restarted query resumes at the
     *     first uncommitted micro-batch with the SAME batch id and the
@@ -890,9 +889,7 @@ object StreamingJobs {
           hashes = batch.select(md5(col("text")).as("h")),
           shingles = batchSh,
           grams = batchAnchors.select(col("g")),
-          bands = TextDedup.lshBands(
-            TextDedup.minhashSignatures(batchSh, numHashes = 12),
-            bands = 4, rowsPerBand = 3))
+          bands = TextCuration.servingBands(batchSh.coalesce(1)))
         if (failAt.contains(id) && !failed) {
           failed = true
           throw new IllegalStateException(

@@ -193,4 +193,37 @@ class ScaleInvarianceSpec extends AnyFunSuite {
     }
     assert(four === one, "servingDecisions jobs")
   }
+
+  test("serving fold: a fixed batch folded on top of 1x and 4x prior " +
+      "ingest state runs the same jobs and adds the same bytes") {
+    import graft.streaming.ServingState
+    def files(f: java.io.File): Map[String, Long] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files).toMap
+      else Map(f.getPath -> f.length)
+    /** `n` rows of each relation, keyed by `tag`. */
+    def fold(dir: String, id: Long, n: Long, tag: String): Unit = {
+      val ids = spark.range(n)
+      def key(p: String) = md5(concat(lit(s"$tag-$p-"), col("id")))
+      ServingState.fold(spark, dir, id,
+        hashes = ids.select(key("h").as("h")),
+        shingles = ids.select(col("id").as("doc_id"), key("s").as("s")),
+        grams = ids.select(key("g").as("g")),
+        bands = ids.select(col("id").as("doc_id"),
+          pmod(col("id"), lit(4L)).cast("int").as("band"),
+          key("b").as("sig")))
+    }
+    val (one, four) = atScales() { s =>
+      val dir = freshDir()
+      fold(dir, 0L, 500L * s, "p0")
+      fold(dir, 1L, 500L * s, "p1")
+      val before = files(new java.io.File(dir))
+      val jobs = SparkJobs.count(spark)(fold(dir, 2L, 100L, "fixed"))._2
+      val added = files(new java.io.File(dir)).collect {
+        case (p, n) if !before.get(p).contains(n) => n
+      }.sum
+      (jobs, added)
+    }
+    assert(four._1 === one._1, "fold jobs")
+    assert(four._2 === one._2, "bytes the fold adds to the state")
+  }
 }

@@ -7,7 +7,8 @@ import graft.functions.TextCuration
 
 /** The durable-state contracts the streaming capstone leans on:
   * weights-last save marker (a crash mid-save reads as absent),
-  * batch-id-stamped fold idempotency, and the empty prior. */
+  * per-batch fold idempotency, the empty prior, a job-free prior over
+  * the batch log, and the refusal of state in the earlier format. */
 class ServingStateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -87,5 +88,61 @@ class ServingStateSpec extends AnyFunSuite {
       "distinct content view: h-zero present (from batches 0 AND 2)")
     assert(hashesFor(1L) === Set("h-zero"),
       "batch 1's prior still excludes batch 2's rows")
+  }
+
+  test("state in the earlier KeyedTable fold format is refused with an " +
+      "error naming the directory, never read as an empty prior") {
+    val dir = freshDir()
+    graft.sinks.KeyedTable.create(
+      Seq(("h-old", 0L, "k-old")).toDF("h", "batch_id", "k"),
+      s"$dir/ingest/hashes", keyCol = "k", numBuckets = 4)
+    val e = intercept[IllegalStateException](
+      ServingState.priorFor(spark, dir, 1L))
+    assert(e.getMessage.contains(dir) &&
+      e.getMessage.contains("ingest/hashes"), e.getMessage)
+  }
+
+  test("priorFor over more than 32 logged batches lists the log on the " +
+      "driver (0 Spark jobs), skips _- and .-prefixed paths, and reads " +
+      "back exactly the earlier batches' rows of each component") {
+    val dir = freshDir()
+    val n = 36
+    (0 until n).foreach { i =>
+      val id = i.toLong
+      ServingState.fold(spark, dir, id,
+        hashes = Seq(s"h-$i").toDF("h"),
+        shingles = Seq((id, s"s-$i"), (id, s"s-$i")).toDF("doc_id", "s"),
+        grams = Seq(s"g-$i").toDF("g"),
+        bands = Seq((id, i % 4, s"b-$i")).toDF("doc_id", "band", "sig"))
+    }
+    // leftovers of a crashed attempt and hidden files: never read
+    val log = s"$dir/ingest/log"
+    Seq("h-junk").toDF("k").write
+      .parquet(s"$log/batch=2/_temporary/0/kind=hashes")
+    val junk = new java.io.File(s"$log/batch=2/_temporary/0/kind=hashes")
+      .listFiles().find(_.getName.endsWith(".parquet")).get.toPath
+    Seq(".junk.parquet", "_junk.parquet").foreach(f =>
+      java.nio.file.Files.copy(junk,
+        java.nio.file.Paths.get(s"$log/batch=3/kind=hashes/$f")))
+    val (prior, jobs) =
+      graft.SparkJobs.count(spark)(ServingState.priorFor(spark, dir, n))
+    assert(jobs === 0, "building the prior must launch no Spark job")
+    assert(prior.hashes.get.inputFiles.length === n)
+    for (b <- Seq(0, 1, 17, n)) {
+      val p = ServingState.priorFor(spark, dir, b.toLong)
+      def rows(df: Option[org.apache.spark.sql.DataFrame]) =
+        df.map(_.collect().map(_.toSeq).toSeq).getOrElse(Nil)
+      val ids = 0 until b
+      assert(rows(p.hashes).sortBy(_.toString) ===
+        ids.map(i => Seq(s"h-$i")).sortBy(_.toString), s"hashes < $b")
+      assert(rows(p.shingles).sortBy(_.toString) ===
+        ids.map(i => Seq(i.toLong, s"s-$i")).sortBy(_.toString),
+        s"shingles < $b (distinct within a batch)")
+      assert(rows(p.grams).sortBy(_.toString) ===
+        ids.map(i => Seq(s"g-$i")).sortBy(_.toString), s"grams < $b")
+      assert(rows(p.bands).sortBy(_.toString) ===
+        ids.map(i => Seq(i.toLong, i % 4, s"b-$i")).sortBy(_.toString),
+        s"bands < $b")
+    }
   }
 }
